@@ -786,6 +786,16 @@ PAGERANK_ITERS = 5
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # d = 0.85 as integer arithmetic
 
 
+def _named_edges(spark, sf_dir):
+    """Distinct (subj, dst) NamedNode edges of the constructed KG — the
+    directed graph pagerank, PPR and k-hop run over. Callers cache or
+    checkpoint it themselves."""
+    return (_triples(spark, sf_dir, cache=True)
+            .filter(F.col("obj_termtype") == "NamedNode")
+            .select("subj", F.col("obj_value").alias("dst"))
+            .distinct())
+
+
 def q_kg_pagerank(spark, sf_dir):
     """Fixed-iteration integer PageRank over the constructed KG's
     NamedNode→NamedNode edge set — the standard post-construction
@@ -800,10 +810,7 @@ def q_kg_pagerank(spark, sf_dir):
     iterations keep lineage shallow locally; at 100 TB checkpoint the
     rank table every few rounds exactly like connected_components
     (operators/dedup.py:_reliable_checkpoint). Top-k is a TakeOrdered."""
-    t = _triples(spark, sf_dir, cache=True)
-    edges = (t.filter(F.col("obj_termtype") == "NamedNode")
-             .select("subj", F.col("obj_value").alias("dst"))
-             .distinct().cache())
+    edges = _named_edges(spark, sf_dir).cache()
     return (pagerank(edges).orderBy(F.desc("rank"), "node").limit(50))
 
 
@@ -814,22 +821,9 @@ def pagerank(edges, iters: int = PAGERANK_ITERS, tol_ppm: int | None = None):
 
         rank' = 150000 + d * (inflow + dangling_sum DIV N) DIV 100
 
-    The dangling term is ONE extra 1-row aggregation per superstep
-    (the iteration-invariant dangling flag rides the rank state, so
-    the sum is a filter-agg over the rank state — no per-round
-    anti-join) COLLECTED to the driver and re-injected as a literal —
-    the k-means-centroid pattern: 1 row of driver-side state, never
-    data. Keeping it lazy instead (crossJoin of the
-    aggregate) nests a rank-dependent broadcast subtree inside every
-    superstep plan; the broadcast stages materialize eagerly outside
-    the cached-plan reuse and re-derive the full nested lineage each
-    round (measured 35.7 s vs 3.4 s at sf0.01). The per-round collect
-    also materializes the previous rank checkpoint, which truncates the
-    effective lineage exactly like the eager-count pattern. Still
-    exact int64, still oracle-expressible as an unrolled CTE. Without
-    the term a sink node's rank leaks out of the system every round
-    and hub ranks diverge from standard PageRank (round-3 verdict
-    item 4).
+    Without the dangling term a sink node's rank leaks out of the
+    system every round and hub ranks diverge from standard PageRank
+    (round-3 verdict item 4).
 
     `tol_ppm` (optional, OFF in the gated query to keep the fixed-
     iteration oracle parity) adds an early stop: after each superstep
@@ -843,6 +837,35 @@ def pagerank(edges, iters: int = PAGERANK_ITERS, tol_ppm: int | None = None):
     MinHash lesson, BENCH/SOAK_DEDUP_r3.md); a dangling-sink graph
     where redistribution and the old leaky variant DIFFER proves the
     new term is live."""
+    return _rank_supersteps(edges, None, iters, tol_ppm)
+
+
+def _rank_supersteps(edges, seeds, iters, tol_ppm=None):
+    """The superstep loop of `pagerank` (seeds=None) and
+    `personalized_pagerank`. Global PageRank is PPR with every node a
+    seed: initial rank 1000000, teleport 150000, dangling divisor N.
+    PPR starts each of its k seeds at TOTAL DIV k, teleports
+    (15% · TOTAL) DIV k and returns dangling mass DIV k to the seeds
+    only. One formula serves both:
+
+        rank' = [seed]·teleport + 85 · (inflow + [seed]·dshare) DIV 100
+
+    In the global case [seed] is the literal 1, so the rank state
+    carries no seed column; for PPR the seed flag rides the rank state.
+
+    The dangling term is ONE extra 1-row aggregation per superstep
+    (the iteration-invariant dangling flag rides the rank state, so
+    the sum is a filter-agg over the rank state — no per-round
+    anti-join) COLLECTED to the driver and re-injected as a literal —
+    the k-means-centroid pattern: 1 row of driver-side state, never
+    data. Keeping it lazy instead (crossJoin of the
+    aggregate) nests a rank-dependent broadcast subtree inside every
+    superstep plan; the broadcast stages materialize eagerly outside
+    the cached-plan reuse and re-derive the full nested lineage each
+    round (measured 35.7 s vs 3.4 s at sf0.01). The per-round collect
+    also materializes the previous rank checkpoint, which truncates the
+    effective lineage exactly like the eager-count pattern. Still
+    exact int64, still oracle-expressible as an unrolled CTE."""
     # localCheckpoint (not cache) on the loop-invariant frames AND the
     # per-superstep rank state: cache substitutes at physical planning
     # but Catalyst still re-ANALYZES the full logical lineage of every
@@ -859,7 +882,22 @@ def pagerank(edges, iters: int = PAGERANK_ITERS, tol_ppm: int | None = None):
     # out-degree rides the edge table: ONE join outside the loop
     # instead of an outd join per superstep (5 joins saved)
     edges_w = edges.join(outd, "subj").localCheckpoint()
-    n_nodes = nodes.count()  # nodes is already materialized
+    if seeds is None:
+        k = nodes.count()  # nodes is already materialized
+        if k == 0:  # empty graph: no supersteps, empty rank table
+            out = nodes.select("node", F.lit(0).cast("long").alias("rank"))
+            out._pr_supersteps = 0
+            return out
+        init, teleport, seed_col = 1000000, 150000, []
+    else:
+        k = len(seeds)
+        init, teleport = PPR_TOTAL // k, (15 * PPR_TOTAL // 100) // k
+        seed_col = [F.col("node").isin(seeds).alias("seed")]
+
+    def seeded(v):  # SQL: v on seed nodes, 0 elsewhere
+        return str(v) if seeds is None else \
+            f"(CASE WHEN seed THEN {v} ELSE 0 END)"
+
     # the DANGLING SET is iteration-invariant: flag it once on the
     # node table and let the flag ride the rank state, so the
     # per-superstep dangling sum is a single filter-agg over the rank
@@ -868,54 +906,48 @@ def pagerank(edges, iters: int = PAGERANK_ITERS, tol_ppm: int | None = None):
                                       F.lit(False).alias("dang")),
                           "node", "left")
                .select("node",
-                       F.coalesce("dang", F.lit(True)).alias("dang"))
+                       F.coalesce("dang", F.lit(True)).alias("dang"),
+                       *seed_col)
                .localCheckpoint())
+    flags = nodes_f.columns[1:]
     ranks = nodes_f.select(
-        "node", F.lit(1000000).cast("long").alias("rank"), "dang")
+        "node", F.expr(seeded(init)).cast("long").alias("rank"), *flags)
     steps = 0
-    if n_nodes == 0:  # empty graph: no supersteps, empty rank table
-        ranks = ranks.select("node", "rank")
-        ranks._pr_supersteps = 0
-        return ranks
     for _ in range(iters):
         contrib = (edges_w.join(ranks, edges_w["subj"] == ranks["node"])
                    .select(F.col("dst").alias("node"),
                            F.expr("rank DIV outd").alias("c")))
         inflow = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
-        # dangling mass: ranks of flagged nodes, shared uniformly
-        # (floor) across all N nodes. Collected as ONE int per
+        # dangling mass: ranks of flagged nodes, shared (floor) across
+        # the k nodes it returns to. Collected as ONE int per
         # superstep (driver-side scalar state, not data) — see
         # docstring for why this must not stay a lazy crossJoin.
         dsum = (ranks.agg(F.coalesce(
                     F.sum(F.when(F.col("dang"), F.col("rank"))),
                     F.lit(0)).alias("dsum"))
                 .collect()[0]["dsum"])
-        dshare = int(dsum) // n_nodes
-        new_ranks = (nodes_f.join(inflow, "node", "left")
-                     .select("node",
-                             (F.lit(150000) +
-                              F.expr(f"{PR_DAMP_NUM} * "
-                                     f"(coalesce(inflow, 0) + {dshare}) "
-                                     f"DIV {PR_DAMP_DEN}")).cast("long")
-                             .alias("rank"),
-                             "dang"))
+        dshare = int(dsum) // k
         # Lazy localCheckpoint each superstep; the NEXT round's
         # dangling collect is the action that materializes it, so
         # every iteration runs exactly once and the PLAN (not just the
         # computed data) stays one-superstep shallow — see the
-        # localCheckpoint note above the loop.
-        new_ranks = new_ranks.localCheckpoint(eager=False)
+        # localCheckpoint note above.
+        old, ranks = ranks, (
+            nodes_f.join(inflow, "node", "left")
+            .select("node",
+                    F.expr(f"{seeded(teleport)} + {PR_DAMP_NUM} * "
+                           f"(coalesce(inflow, 0) + {seeded(dshare)}) "
+                           f"DIV {PR_DAMP_DEN}").cast("long")
+                    .alias("rank"),
+                    *flags)
+            .localCheckpoint(eager=False))
         steps += 1
         if tol_ppm is not None:
-            delta = (new_ranks.alias("n")
-                     .join(ranks.alias("o"), "node")
-                     .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank")))
-                          .alias("d")).collect()[0]["d"])
-            ranks = new_ranks
-            if delta is not None and delta <= tol_ppm:
+            delta = (ranks.alias("n").join(old.alias("o"), "node")
+                     .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))))
+                     .collect()[0][0])
+            if delta <= tol_ppm:
                 break
-        else:
-            ranks = new_ranks
     out = ranks.select("node", "rank")
     out._pr_supersteps = steps
     return out
@@ -1066,6 +1098,18 @@ def _comention_pairs(spark, sf_dir,
             .select(F.col("p.ent_a").alias("ent_a"),
                     F.col("p.ent_b").alias("ent_b")),
             guard_df)
+
+
+def _comention_edges(spark, sf_dir):
+    """Directed-both-ways (a, b) edge frame of the co-mention entity
+    graph (guard ON), deduplicated — the graph every co-mention
+    structure query shares. Callers cache or checkpoint it
+    themselves."""
+    pairs, _guard = _comention_pairs(spark, sf_dir)
+    p = pairs.distinct()
+    return (p.select(F.col("ent_a").alias("a"), F.col("ent_b").alias("b"))
+            .unionAll(p.select(F.col("ent_b").alias("a"),
+                               F.col("ent_a").alias("b"))))
 
 
 def comention_guard_stats(df) -> dict:
@@ -1280,15 +1324,10 @@ def q_kg_label_propagation(spark, sf_dir):
     (the component's elected label) and the community size — the
     topic-cluster signal KG pipelines ship for entity grouping."""
     from pyspark.sql import Window
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    p = pairs.distinct()
     # cache: vocabulary-scale frame off a corpus-scale scan, referenced
     # by every superstep join plus the node seed (Catalyst
     # no-subplan-reuse; measured 13.5 -> ~2 s at sf0.1)
-    edges = (p.select(F.col("ent_a").alias("a"), F.col("ent_b").alias("b"))
-             .unionAll(p.select(F.col("ent_b").alias("a"),
-                                F.col("ent_a").alias("b")))
-             ).localCheckpoint()
+    edges = _comention_edges(spark, sf_dir).localCheckpoint()
     labels = label_propagation(edges)
     w = Window.partitionBy("community")
     return (labels.select(F.col("node").alias("ent"),
@@ -1393,16 +1432,12 @@ def q_kg_khop(spark, sf_dir):
     mentions/hasTurn/usesTool edges, either direction) with exact hop
     levels — the standard seed-expansion subgraph every KG application
     (RAG context building, entity cards) runs."""
-    t = _triples(spark, sf_dir, cache=True)
-    fwd = (t.filter(F.col("obj_termtype") == "NamedNode")
-           .select(F.col("subj").alias("a"),
-                   F.col("obj_value").alias("b")))
+    fwd = _named_edges(spark, sf_dir)
     # cache: the distinct-ed edge set re-shuffles per BFS level when
     # uncached (Catalyst no-subplan-reuse); triple-scale, so at 100 TB
     # swap for a reliable checkpoint
-    edges = fwd.unionAll(fwd.select(F.col("b").alias("a"),
-                                    F.col("a").alias("b"))).distinct() \
-        .localCheckpoint()
+    edges = (fwd.unionAll(fwd.select("dst", "subj")).toDF("a", "b")
+             .distinct().localCheckpoint())
     seeds = spark.createDataFrame([(ENT_NS + "Entity0",)], "node string")
     return khop(edges, seeds).orderBy("hops", "node")
 
@@ -1634,17 +1669,12 @@ def q_kg_random_walks(spark, sf_dir):
     ON — shares `_comention_pairs` with kg_entity_comention): 2 walks
     x 4 steps from every entity, the sequences a graph-embedding
     trainer consumes."""
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    p = pairs.distinct()
     # cache: the edge set is entity-vocabulary-sized but derives from
     # a corpus-scale scan, and the walk loop references it walk_len+1
     # times — Catalyst does not dedupe the subplan (CLAUDE.md), so an
     # uncached edge frame re-runs the mentions scan per step
     # (measured 15.9 s -> 1.9 s at sf0.1).
-    edges = (p.select(F.col("ent_a").alias("a"), F.col("ent_b").alias("b"))
-             .unionAll(p.select(F.col("ent_b").alias("a"),
-                                F.col("ent_a").alias("b")))
-             ).localCheckpoint()
+    edges = _comention_edges(spark, sf_dir).localCheckpoint()
     return random_walks(edges).orderBy("seed", "w", "step")
 
 
@@ -1746,11 +1776,7 @@ def q_kg_skipgram_pairs(spark, sf_dir):
     vocabulary-scale graph, which amortize at real scale. At 100 TB
     use a reliable checkpoint, same policy as connected_components).
     """
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    p = pairs.distinct()
-    edges = (p.select(F.col("ent_a").alias("a"), F.col("ent_b").alias("b"))
-             .unionAll(p.select(F.col("ent_b").alias("a"),
-                                F.col("ent_a").alias("b")))).cache()
+    edges = _comention_edges(spark, sf_dir).cache()
     walks = random_walks(edges).localCheckpoint()
     return skipgram_pairs(walks).orderBy("center", "context")
 
@@ -1866,12 +1892,7 @@ def neighbor_jaccard_guard_stats(df) -> dict:
 def q_kg_neighbor_jaccard(spark, sf_dir):
     """Gated query: top-50 co-mention entity pairs by neighbor-set
     Jaccard (guard ON — shares `_comention_pairs`)."""
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    p = pairs.distinct()
-    edges = (p.select(F.col("ent_a").alias("a"), F.col("ent_b").alias("b"))
-             .unionAll(p.select(F.col("ent_b").alias("a"),
-                                F.col("ent_a").alias("b"))))
-    return neighbor_jaccard(edges)
+    return neighbor_jaccard(_comention_edges(spark, sf_dir))
 
 
 def oracle_kg_neighbor_jaccard(triples_sql: str) -> str:
@@ -2114,7 +2135,9 @@ def tool_transitions(rows):
     gives every tool exactly one successor, so the gate alone cannot
     exercise branching shares)."""
     from pyspark.sql.window import Window
-    w = Window.partitionBy("conv").orderBy("idx")
+    # tool breaks idx ties (several tools on one turn, or a repeated
+    # turnIndex), so lead() is deterministic and matches the oracle
+    w = Window.partitionBy("conv").orderBy("idx", "tool")
     trans = (rows.withColumn("tool_to", F.lead("tool").over(w))
              .filter(F.col("tool_to").isNotNull())
              .groupBy(F.col("tool").alias("tool_from"), "tool_to")
@@ -2147,7 +2170,8 @@ rows_ AS (
 ),
 trans AS (
   SELECT tool AS tool_from,
-         lead(tool) OVER (PARTITION BY conv ORDER BY idx) AS tool_to
+         lead(tool) OVER (PARTITION BY conv ORDER BY idx, tool)
+           AS tool_to
   FROM rows_
 ),
 agg AS (
@@ -2326,12 +2350,8 @@ def q_kg_components(spark, sf_dir):
     adversarial-chain corpus swaps algorithm='star' (O(log n) rounds)
     without touching callers."""
     from .operators.dedup import connected_components
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    edges = (pairs.select(F.col("ent_a").alias("src"),
-                          F.col("ent_b").alias("dst"))
-             .unionAll(pairs.select(F.col("ent_b").alias("src"),
-                                    F.col("ent_a").alias("dst"))))
-    return (connected_components(edges.distinct())
+    edges = _comention_edges(spark, sf_dir).toDF("src", "dst")
+    return (connected_components(edges)
             .select(F.col("doc_id").alias("ent"),
                     F.col("cluster_id").alias("component"))
             .orderBy("ent"))
@@ -2401,9 +2421,11 @@ def q_kg_literal_stats(spark, sf_dir):
         F.max(F.length("obj_value")).cast("long").alias("max_len"),
         F.min("obj_value").alias("min_value"),
         F.max("obj_value").alias("max_value"))
+    # count(obj_value), not count(*): a NULL value is not a distinct
+    # value (DuckDB's count(DISTINCT ...)), but its group still appears
     nd = (rows.distinct()
           .groupBy("pred", "termtype", "datatype")
-          .agg(F.count(F.lit(1)).cast("long").alias("n_distinct")))
+          .agg(F.count("obj_value").cast("long").alias("n_distinct")))
     return (base.join(nd, ["pred", "termtype", "datatype"])
             .select("pred", "termtype", "datatype", "n", "n_distinct",
                     "min_len", "max_len", "min_value", "max_value")
@@ -2538,12 +2560,7 @@ def q_kg_degree_distribution(spark, sf_dir):
     Scale shape: guarded pair frame → degree agg (partial-combined)
     → vocabulary-bounded bucket agg (≤ 63 buckets). Nothing after
     the degree agg touches corpus scale."""
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    und = (pairs.select(F.col("ent_a").alias("a"),
-                        F.col("ent_b").alias("b"))
-           .unionAll(pairs.select(F.col("ent_b").alias("a"),
-                                  F.col("ent_a").alias("b"))))
-    return degree_distribution(und)
+    return degree_distribution(_comention_edges(spark, sf_dir))
 
 
 def degree_distribution(und):
@@ -2741,12 +2758,7 @@ def q_kg_link_prediction(spark, sf_dir):
     """Gated query: top-50 predicted (absent) co-mention entity links
     by Resource Allocation index (hub guard ON — shares
     `_comention_pairs`)."""
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    p = pairs.distinct()
-    edges = (p.select(F.col("ent_a").alias("a"), F.col("ent_b").alias("b"))
-             .unionAll(p.select(F.col("ent_b").alias("a"),
-                                F.col("ent_a").alias("b"))))
-    return link_prediction_ra(edges)
+    return link_prediction_ra(_comention_edges(spark, sf_dir))
 
 
 def oracle_kg_link_prediction(triples_sql: str) -> str:
@@ -2841,12 +2853,7 @@ def q_kg_kcore(spark, sf_dir):
     """Gated query: the {KCORE_K}-core of the co-mention entity graph
     (guard ON — shares `_comention_pairs`), one row per surviving
     entity with its within-core degree."""
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    p = pairs.distinct()
-    edges = (p.select(F.col("ent_a").alias("a"), F.col("ent_b").alias("b"))
-             .unionAll(p.select(F.col("ent_b").alias("a"),
-                                F.col("ent_a").alias("b"))))
-    core = kcore_edges(edges)
+    core = kcore_edges(_comention_edges(spark, sf_dir))
     return (core.groupBy("a").agg(F.count("*").alias("core_degree"))
             .select(F.col("a").alias("ent"), "core_degree")
             .orderBy(F.desc("core_degree"), "ent"))
@@ -2903,17 +2910,6 @@ ANF_H = 3                    # hops measured / supersteps run
 ANF_P = 6                    # 2^6 = 64 registers per node (~13% err)
 _ANF_W_MOD = 1 << (60 - ANF_P)
 _ANF_RHO_MAX = (60 - ANF_P) + 1
-
-
-def _comention_edges(spark, sf_dir):
-    """Directed-both-ways edge frame of the co-mention entity graph
-    (guard ON), deduplicated — the graph all the structure queries
-    (kcore, jaccard, ANF) share."""
-    pairs, _guard = _comention_pairs(spark, sf_dir)
-    p = pairs.distinct()
-    return (p.select(F.col("ent_a").alias("a"), F.col("ent_b").alias("b"))
-            .unionAll(p.select(F.col("ent_b").alias("a"),
-                               F.col("ent_a").alias("b"))))
 
 
 def neighborhood_growth(edges, h_max: int = ANF_H) -> list:
@@ -3095,7 +3091,7 @@ PPR_TOTAL = 10**12  # total walk mass (picoshares): int64-safe, and
 def personalized_pagerank(edges, seeds: list, iters: int = PPR_ITERS):
     """(subj, dst) distinct edge DataFrame + driver-side seed list →
     (node, rank) after `iters` exact-int64 supersteps of PPR with
-    teleport restricted to the seed set:
+    teleport restricted to the seed set S:
 
         rank'(v) = [v∈S]·(15% · TOTAL DIV |S|)
                  + 85 · (inflow(v) + [v∈S]·(dangling_sum DIV |S|))
@@ -3107,58 +3103,12 @@ def personalized_pagerank(edges, seeds: list, iters: int = PPR_ITERS):
     0 — the result is the seed-relevance distribution, not global
     importance.
 
-    Scale shape = `pagerank`: per superstep one edges⋈ranks shuffle on
-    src + one partial-aggregated groupBy(dst); the dangling sum is a
-    1-row filter-agg collect (k-means-centroid pattern) and the seed
-    flag rides the rank state. `seeds` is bounded driver state
-    (PPR_N_SEEDS rows, like the centroid list). localCheckpoint
-    truncates the per-superstep plan; swap for reliable checkpoint at
-    cluster scale."""
+    Scale shape = `pagerank` (the same superstep loop). `seeds` is
+    bounded driver state (PPR_N_SEEDS rows, like the centroid list)."""
     if not seeds:
         return edges.sparkSession.createDataFrame(
             [], "node string, rank long")
-    k = len(seeds)
-    teleport = (15 * PPR_TOTAL // 100) // k
-    nodes = (edges.select(F.col("subj").alias("node"))
-             .union(edges.select(F.col("dst").alias("node")))
-             .distinct().localCheckpoint())
-    outd = edges.groupBy("subj").agg(F.count("*").alias("outd"))
-    edges_w = edges.join(outd, "subj").localCheckpoint()
-    nodes_f = (nodes.join(outd.select(F.col("subj").alias("node"),
-                                      F.lit(False).alias("dang")),
-                          "node", "left")
-               .select("node",
-                       F.coalesce("dang", F.lit(True)).alias("dang"),
-                       F.col("node").isin(list(seeds)).alias("seed"))
-               .localCheckpoint())
-    ranks = nodes_f.select(
-        "node",
-        F.when(F.col("seed"), F.lit(PPR_TOTAL // k))
-        .otherwise(F.lit(0)).cast("long").alias("rank"),
-        "dang", "seed")
-    for _ in range(iters):
-        contrib = (edges_w.join(ranks, edges_w["subj"] == ranks["node"])
-                   .select(F.col("dst").alias("node"),
-                           F.expr("rank DIV outd").alias("c")))
-        inflow = contrib.groupBy("node").agg(F.sum("c").alias("inflow"))
-        dsum = (ranks.agg(F.coalesce(
-                    F.sum(F.when(F.col("dang"), F.col("rank"))),
-                    F.lit(0)).alias("dsum"))
-                .collect()[0]["dsum"])
-        dshare = int(dsum) // k
-        ranks = (nodes_f.join(inflow, "node", "left")
-                 .select(
-                     "node",
-                     (F.when(F.col("seed"), F.lit(teleport))
-                      .otherwise(F.lit(0)) +
-                      F.expr(
-                          f"{PR_DAMP_NUM} * (coalesce(inflow, 0) + "
-                          f"(CASE WHEN seed THEN {dshare} "
-                          f"ELSE 0 END)) DIV {PR_DAMP_DEN}"))
-                     .cast("long").alias("rank"),
-                     "dang", "seed")
-                 .localCheckpoint(eager=False))
-    return ranks.select("node", "rank")
+    return _rank_supersteps(edges, list(seeds), iters)
 
 
 def q_kg_ppr(spark, sf_dir):
@@ -3167,10 +3117,7 @@ def q_kg_ppr(spark, sf_dir):
     DESC, node ASC) — top 50 touched nodes by (rank DESC, node).
     Unreachable nodes (rank 0) are excluded: PPR's output IS the
     relevance set."""
-    t = _triples(spark, sf_dir, cache=True)
-    edges = (t.filter(F.col("obj_termtype") == "NamedNode")
-             .select("subj", F.col("obj_value").alias("dst"))
-             .distinct().cache())
+    edges = _named_edges(spark, sf_dir).cache()
     seeds = [r["subj"] for r in
              (edges.groupBy("subj").agg(F.count("*").alias("d"))
               .orderBy(F.desc("d"), "subj").limit(PPR_N_SEEDS)

@@ -64,43 +64,23 @@ def run_checkpointed_triples(
         spark: SparkSession, transcripts: DataFrame, warehouse: str,
         n_buckets: int = 16, stage: str = "triples",
         use_kernel_path: bool = False,
-        on_bucket_done=None,
-        max_concurrency: int = 1) -> dict:
+        on_bucket_done=None) -> dict:
     """Run the transcript→triples pipeline one partition-commit at a
-    time, skipping partitions already in the ledger. Returns run stats.
-
-    `max_concurrency > 1` submits bucket jobs from a thread pool so the
-    cluster never idles between per-bucket commits (Spark's scheduler
-    interleaves concurrent jobs; each worker thread runs in the FAIR
-    scheduler pool so one bucket's stages don't starve another's —
-    enable spark.scheduler.mode=FAIR on a real cluster). The commit
-    unit is unchanged: per-bucket atomic marker after the data write,
-    so kill/resume semantics are identical to the sequential path.
-    """
-    import threading
-
+    time, skipping partitions already in the ledger. Returns run stats."""
     from .kernel_path import kernel_transcript_triples
     from .vectorized import transcript_triples
 
     ledger = Ledger(warehouse, stage)
     done = ledger.committed()
-    pending = [k for k in range(n_buckets) if k not in done]
     stats = {"resumed_from": len(done), "ran": 0, "skipped": len(done)}
-    lock = threading.Lock()
-
     src = transcripts.withColumn("_part", bucket_col(n_buckets))
-
-    def run_bucket(k: int) -> None:
+    fn = kernel_transcript_triples if use_kernel_path \
+        else transcript_triples
+    for k in range(n_buckets):
+        if k in done:
+            continue
         t0 = time.time()
-        if max_concurrency > 1:
-            # local properties are thread-local in Spark: each worker
-            # thread's jobs land in their own scheduler pool
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"checkpoint-{k % max_concurrency}")
-        part = src.filter(F.col("_part") == k).drop("_part")
-        fn = kernel_transcript_triples if use_kernel_path \
-            else transcript_triples
-        triples = fn(part)
+        triples = fn(src.filter(F.col("_part") == k).drop("_part"))
         out_dir = os.path.join(warehouse, stage, f"part_id={k}")
         if os.path.exists(out_dir):  # partial write from a killed run
             shutil.rmtree(out_dir)
@@ -113,24 +93,9 @@ def run_checkpointed_triples(
             "committed_at": time.time(),
             "path": out_dir,
         })
-        with lock:
-            stats["ran"] += 1
-            # invoked under the lock so callbacks written for the
-            # sequential API stay race-free when max_concurrency > 1
-            # (per-bucket bookkeeping is cheap; Spark jobs themselves
-            # run outside the lock)
-            if on_bucket_done is not None:
-                on_bucket_done(k)
-
-    if max_concurrency <= 1:
-        for k in pending:
-            run_bucket(k)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            futures = [pool.submit(run_bucket, k) for k in pending]
-            for f in futures:
-                f.result()
+        stats["ran"] += 1
+        if on_bucket_done is not None:
+            on_bucket_done(k)
     return stats
 
 

@@ -9,12 +9,13 @@ lib/toRdf.js:88) specializes to a per-row projection + explode:
 - literal canonicalization (ref lib/toRdf.js:230-261) for our column
   types is integer/string/dateTime formatting — plain column exprs,
 - node-map merge + quad dedup (ref lib/util.js:249-306 addValue with
-  allowDuplicate:false) is `dropDuplicates` over the 7 triple columns —
-  a partial-aggregate-friendly shuffle (identical rows collapse
-  map-side, so hot conversations don't create a hot reduce key).
+  allowDuplicate:false) is document-local: `array_distinct` on each
+  turn's mention list before the explode.
 
-Everything stays inside whole-stage codegen; the only shuffle in the
-whole job is the final dedup.
+Everything stays inside whole-stage codegen, and the default
+`dedup="local"` plan has no shuffle at all. Only `dedup="global"`
+adds one: a `dropDuplicates` over the 7 triple columns, which
+collapses identical rows map-side.
 """
 from __future__ import annotations
 

@@ -104,25 +104,81 @@ def test_cooccur_lift_hand_computed(spark):
     assert got == {("A", "B"): (2, 888888), ("B", "C"): (2, 1333333)}
 
 
-def test_tool_transitions_hand_computed(spark):
+def _query_and_oracle(spark, monkeypatch, triples, query, oracle):
+    """(Spark rows, DuckDB rows) of a kg_api query and its oracle over
+    the same hand-written triple table, each in result order."""
+    import duckdb
+
+    from jsonld_js_spark import kg_api
+    from jsonld_js_spark.pipeline.vectorized import TRIPLE_COLUMNS
+    df = spark.createDataFrame(
+        triples, ", ".join(f"{c} string" for c in TRIPLE_COLUMNS))
+    monkeypatch.setattr(kg_api, "_triples", lambda *a, **k: df)
+    got = [tuple(r) for r in query(spark, None).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE hand_triples (" + ", ".join(
+        f"{c} VARCHAR" for c in TRIPLE_COLUMNS) + ")")
+    con.executemany("INSERT INTO hand_triples VALUES (" +
+                    ", ".join("?" * len(TRIPLE_COLUMNS)) + ")", triples)
+    return got, con.execute(oracle("SELECT * FROM hand_triples")).fetchall()
+
+
+def test_tool_transitions_hand_computed(spark, monkeypatch):
     """Branching transition shares on a hand trajectory corpus (the
     generator's fixed tool cycle gives every tool ONE successor, so
-    the oracle gate never sees a split). Two conversations:
+    the oracle gate never sees a split), through the Spark query and
+    the DuckDB oracle. Tool-using turns by turnIndex:
       c1: search(1) -> code(3) -> search(5) -> web(7)
       c2: search(2) -> code(4)
-    Adjacent tool-turn bigrams: search->code x2, code->search x1,
-    search->web x1. Out of 'search': 3 total -> code 666666 ppm,
-    web 333333 ppm (floor); out of 'code': 1 -> 1000000."""
-    from jsonld_js_spark.kg_api import tool_transitions
-    rows = spark.createDataFrame(
-        [("c1", 1, "search"), ("c1", 3, "code"), ("c1", 5, "search"),
-         ("c1", 7, "web"), ("c2", 2, "search"), ("c2", 4, "code")],
-        "conv string, idx int, tool string")
-    got = {(r["tool_from"], r["tool_to"]): (r["n_trans"], r["share_ppm"])
-           for r in tool_transitions(rows).collect()}
-    assert got == {("search", "code"): (2, 666666),
-                   ("search", "web"): (1, 333333),
-                   ("code", "search"): (1, 1000000)}
+      c3: {web, code}(1) -> search(2)   two tools on one turn
+      c4: search(6), code(6)            two turns share an index
+    Ties on the index order by tool: c3 is code -> web -> search and
+    c4 is code -> search. Adjacent tool-turn bigrams: search->code x2,
+    search->web x1, code->search x2, code->web x1, web->search x1.
+    Out of 'search' and 'code': 3 each -> 666666 / 333333 ppm (floor);
+    out of 'web': 1 -> 1000000."""
+    from jsonld_js_spark.kg_api import (
+        oracle_kg_tool_transitions, q_kg_tool_transitions)
+    from jsonld_js_spark.vocab import TR
+    turns = [("c1", 1, 1, ["search"]), ("c1", 3, 3, ["code"]),
+             ("c1", 5, 5, ["search"]), ("c1", 7, 7, ["web"]),
+             ("c2", 2, 2, ["search"]), ("c2", 4, 4, ["code"]),
+             ("c3", 1, 1, ["web", "code"]), ("c3", 2, 2, ["search"]),
+             ("c4", 1, 6, ["search"]), ("c4", 2, 6, ["code"])]
+    triples = []
+    for conv, turn, idx, tools in turns:
+        subj = f"http://example.org/conv/{conv}/turn/{turn}"
+        triples.append((subj, TR + "turnIndex", str(idx), "Literal",
+                        None, None, None))
+        triples += [(subj, TR + "usesTool", tool, "NamedNode",
+                     None, None, None) for tool in tools]
+    got, want = _query_and_oracle(spark, monkeypatch, triples,
+                                  q_kg_tool_transitions,
+                                  oracle_kg_tool_transitions)
+    assert got == want == [("code", "search", 2, 666666),
+                           ("code", "web", 1, 333333),
+                           ("search", "code", 2, 666666),
+                           ("search", "web", 1, 333333),
+                           ("web", "search", 1, 1000000)]
+
+
+def test_literal_stats_null_value_matches_oracle(spark, monkeypatch):
+    """A NULL obj_value counts toward n but is not a distinct value, as
+    in DuckDB's count(DISTINCT ...); a group whose values are all NULL
+    still appears, with n_distinct 0."""
+    from jsonld_js_spark.kg_api import (
+        oracle_kg_literal_stats, q_kg_literal_stats)
+    xs = "http://www.w3.org/2001/XMLSchema#string"
+    triples = [("s1", "p1", "a", "Literal", xs, None, None),
+               ("s2", "p1", "a", "Literal", xs, None, None),
+               ("s3", "p1", None, "Literal", xs, None, None),
+               ("s4", "p2", None, "Literal", None, None, None)]
+    got, want = _query_and_oracle(spark, monkeypatch, triples,
+                                  q_kg_literal_stats,
+                                  oracle_kg_literal_stats)
+    assert got == want == [("p1", "Literal", xs, 3, 1, 1, 1, "a", "a"),
+                           ("p2", "Literal", "", 1, 0, None, None,
+                            None, None)]
 
 
 def test_relation_timeline_hand_computed(spark):

@@ -101,50 +101,3 @@ def test_partial_write_without_marker_is_redone(spark, transcripts,
     got = {tuple(r) for r in read_committed(spark, wh).collect()}
     want = {tuple(r) for r in transcript_triples(transcripts).collect()}
     assert got == want
-
-
-def test_concurrent_buckets_match_sequential(spark, transcripts, tmp_path):
-    """max_concurrency=2 commits the same data with the same ledger
-    semantics as the sequential path (kill/resume contract intact)."""
-    wh_seq = str(tmp_path / "seq")
-    wh_con = str(tmp_path / "con")
-    run_checkpointed_triples(spark, transcripts, wh_seq,
-                             n_buckets=N_BUCKETS)
-    stats = run_checkpointed_triples(spark, transcripts, wh_con,
-                                     n_buckets=N_BUCKETS,
-                                     max_concurrency=2)
-    assert stats["ran"] == N_BUCKETS
-    a = {tuple(r) for r in read_committed(spark, wh_seq).collect()}
-    b = {tuple(r) for r in read_committed(spark, wh_con).collect()}
-    assert a == b
-    assert len(Ledger(wh_con, "triples").metrics()) == N_BUCKETS
-
-
-def test_concurrent_kill_and_resume(spark, transcripts, tmp_path):
-    """A failure mid-flight with concurrent workers still resumes
-    exactly-once: committed buckets skipped, the rest re-run."""
-    wh = str(tmp_path / "wh")
-    import threading
-    seen = []
-    lock = threading.Lock()
-
-    def killer(k):
-        with lock:
-            seen.append(k)
-            if len(seen) == 2:
-                raise _Kill()
-
-    with pytest.raises(_Kill):
-        run_checkpointed_triples(spark, transcripts, wh,
-                                 n_buckets=N_BUCKETS, max_concurrency=2,
-                                 on_bucket_done=killer)
-    n_done = len(Ledger(wh, "triples").committed())
-    assert n_done >= 2  # in-flight buckets may also have committed
-    stats = run_checkpointed_triples(spark, transcripts, wh,
-                                     n_buckets=N_BUCKETS)
-    assert stats["skipped"] == n_done
-    assert stats["ran"] == N_BUCKETS - n_done
-    resumed = {tuple(r) for r in read_committed(spark, wh).collect()}
-    single = {tuple(r) for r in transcript_triples(transcripts).collect()}
-    assert resumed == single
-    assert read_committed(spark, wh).count() == len(single)

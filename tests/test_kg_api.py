@@ -449,6 +449,25 @@ def test_pagerank_early_stop(spark):
     assert rows == full == {n: 1000000 for n in "abc"}
 
 
+def test_pagerank_empty_graph(spark):
+    """No edges: zero rows and no superstep run."""
+    from jsonld_js_spark.kg_api import pagerank
+
+    ranks = pagerank(spark.createDataFrame([], "subj string, dst string"))
+    assert ranks.collect() == []
+    assert ranks._pr_supersteps == 0
+
+
+def test_ppr_no_seeds(spark):
+    """An empty seed list returns an empty (node, rank) table."""
+    from jsonld_js_spark.kg_api import personalized_pagerank
+
+    edges = spark.createDataFrame([("a", "b")], "subj string, dst string")
+    ranks = personalized_pagerank(edges, [])
+    assert ranks.collect() == []
+    assert ranks.schema.simpleString() == "struct<node:string,rank:bigint>"
+
+
 def test_kg_entity_comention_guard_observed(spark):
     """The quadratic guard is default-on and NOT silent: the guard's
     companion dropped-conversation count equals the independently
