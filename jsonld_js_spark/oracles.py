@@ -37,6 +37,7 @@ all_triples AS (
   SELECT turn_iri, '{TR}role', role, 'Literal', '{XSD_STRING}' FROM base
   UNION ALL
   SELECT turn_iri, '{TR}text', text, 'Literal', '{XSD_STRING}' FROM base
+  WHERE text IS NOT NULL
   UNION ALL
   SELECT turn_iri, '{TR}turnIndex', cast(turn_idx as string), 'Literal',
          '{XSD_INTEGER}' FROM base

@@ -32,11 +32,10 @@ import re
 
 from ..kernel import to_rdf
 from ..vocab import (
-    ENT_NS, MENTION_RE, TRANSCRIPT_CONTEXT, conv_iri, turn_iri,
+    ENT_NS, MENTION_DIGITS_RE, TRANSCRIPT_CONTEXT, conv_iri, turn_iri,
 )
 
-# same match surface as MENTION_RE, digit tail captured directly
-_MENTION_DIGITS_RE = re.compile(r"\[\[[A-Za-z]+([0-9]+)\]\]")
+_MENTION_DIGITS_RE = re.compile(MENTION_DIGITS_RE)
 _ENT_PREFIX = ENT_NS + "Entity"
 
 TRIPLE_SCHEMA = StructType([
@@ -51,7 +50,8 @@ TRIPLE_SCHEMA = StructType([
 
 
 def build_conversation_doc(conv_id: str, turns: list[dict]) -> dict:
-    """One conversation (turn dicts sorted by turn_idx) → JSON-LD doc."""
+    """One conversation (turn dicts sorted by turn_idx) → JSON-LD doc.
+    A NULL text is omitted, as JSON-LD expansion drops a null value."""
     turn_nodes = []
     for t in turns:
         node = {
@@ -59,9 +59,10 @@ def build_conversation_doc(conv_id: str, turns: list[dict]) -> dict:
             "@type": "Turn",
             "turnIndex": int(t["turn_idx"]),
             "role": t["role"],
-            "text": t["text"],
             "ts": t["ts_lex"],
         }
+        if t["text"] is not None:
+            node["text"] = t["text"]
         if t.get("tool"):
             node["usesTool"] = "tool:" + t["tool"]
         if t["mention_iris"]:
@@ -101,15 +102,15 @@ def _emit_conversations(pdf: pd.DataFrame, doc_transform=None,
     Python lists (pandas to_dict/itertuples overhead is ~40% of batch
     time at this grain).
     """
-    # batched mention detection + entity linking (vectorized str ops).
-    # _MENTION_DIGITS_RE matches exactly the MENTION_RE surface but
-    # captures only the digit tail, so the per-mention char-level
-    # digit scrape (a genexpr per character — measured ~15% of batch
-    # prep) collapses to one string concat; numpy's ISO datetime
-    # writer replaces strftime's per-row format interpreter (same
-    # second-truncated lexical form, ~6x faster).
-    mention_iris = pdf["text"].str.findall(_MENTION_DIGITS_RE).apply(
-        lambda ms: [_ENT_PREFIX + m for m in ms])
+    # batched mention detection + entity linking (vectorized str ops;
+    # a NULL text has no mentions). MENTION_DIGITS_RE matches exactly
+    # the MENTION_RE surface but captures only the digit tail, so the
+    # per-mention char-level digit scrape (a genexpr per character —
+    # measured ~15% of batch prep) collapses to one string concat;
+    # numpy's ISO datetime writer replaces strftime's per-row format
+    # interpreter (same second-truncated lexical form, ~6x faster).
+    mention_iris = pdf["text"].fillna("").str.findall(
+        _MENTION_DIGITS_RE).apply(lambda ms: [_ENT_PREFIX + m for m in ms])
     import numpy as np
     ts_lex = np.char.add(
         np.datetime_as_string(pdf["ts"].to_numpy(dtype="datetime64[s]"),

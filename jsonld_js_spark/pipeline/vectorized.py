@@ -12,10 +12,24 @@ lib/toRdf.js:88) specializes to a per-row projection + explode:
   allowDuplicate:false) is document-local: `array_distinct` on each
   turn's mention list before the explode.
 
-Everything stays inside whole-stage codegen, and the default
-`dedup="local"` plan has no shuffle at all. Only `dedup="global"`
-adds one: a `dropDuplicates` over the 7 triple columns, which
-collapses identical rows map-side.
+The plan is three operators, all in ONE whole-stage-codegen stage:
+
+1. a Project computes the per-row values once (conv/turn IRI,
+   turnIndex string, dateTime lexical form, tool IRI) plus a small
+   `array<string>` of slot tags: `#type #role [#text] #idx #ts [#tool]
+   #has [#conv]`, then the turn's mention values (digit tails, or raw
+   surfaces under link_entities=False). Optional slots are a
+   `when(…, array(tag)).otherwise(empty array)`;
+2. a Generate explodes the tags;
+3. a CASE projection maps each tag to (subj, pred, obj_value,
+   obj_termtype, obj_datatype); a tag without `#` is a mention.
+
+No higher-order function (`transform`, `filter`, `array_compact`)
+appears anywhere: one inside the generator's expression takes the
+whole Generate out of codegen and re-evaluates its captured
+expressions per element. The default `dedup="local"` plan has no
+shuffle at all. Only `dedup="global"` adds one: a `dropDuplicates`
+over the 7 triple columns, which collapses identical rows map-side.
 """
 from __future__ import annotations
 
@@ -23,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..vocab import (
-    CONV_NS, ENT_NS, MENTION_RE, RDF_TYPE, TOOL_NS, TR,
+    CONV_NS, ENT_NS, MENTION_DIGITS_RE, MENTION_RE, RDF_TYPE, TOOL_NS, TR,
     XSD_DATETIME, XSD_INTEGER, XSD_STRING,
 )
 
@@ -57,73 +71,87 @@ def transcript_triples(transcripts: DataFrame,
     resolving to the canonical form at emit time — the input shape for
     post-hoc identity resolution (kg_api.sameas_closure), which must
     reproduce the linked KG exactly (tested + oracle-gated).
+
+    A NULL `text` is dropped as JSON-LD expansion drops a null value:
+    that turn gets no text triple and no mentions, and keeps the rest.
     """
-    lit = F.lit
-    conv_iri = F.concat(lit(CONV_NS), F.col("conv_id"))
-    turn_iri = F.concat(conv_iri, lit("/turn/"),
-                        F.col("turn_idx").cast("string"))
-    ts_lex = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'")
+    lit, col = F.lit, F.col
+    no_tags = F.array().cast("array<string>")
 
-    named = lit("NamedNode")
-    literal = lit("Literal")
-    no_dt = lit(None).cast("string")
-
-    def trip(subj, pred, obj_value, termtype, datatype):
-        return F.struct(
-            subj.alias("subj"), pred.alias("pred"),
-            obj_value.alias("obj_value"), termtype.alias("obj_termtype"),
-            datatype.alias("obj_datatype"))
+    def tag_if(cond, tag):
+        return F.when(cond, F.array(lit(tag))).otherwise(no_tags)
 
     # mention detection: JVM-side regex; entity linking = canonical-form
-    # IRI resolution (surface 'entity12'/'Entity12' → ent:Entity12)
-    raw_mentions = F.regexp_extract_all("text", lit(MENTION_RE), 1)
-    if link_entities:
-        mention_entities = F.transform(
-            raw_mentions,
-            lambda s: F.concat(lit("Entity"),
-                               F.regexp_extract(s, r"[0-9]+", 0)))
-    else:
-        mention_entities = raw_mentions
+    # IRI resolution (surface 'entity12'/'Entity12' → ent:Entity12), so
+    # the linked path extracts only the digit tail and the CASE below
+    # prefixes it
+    mentions = F.regexp_extract_all(
+        "text", lit(MENTION_DIGITS_RE if link_entities else MENTION_RE), 1)
     if dedup == "local":
-        mention_entities = F.array_distinct(mention_entities)
+        mentions = F.array_distinct(mentions)
+    tags = F.concat(
+        F.array(lit("#type"), lit("#role")),
+        tag_if(col("text").isNotNull(), "#text"),
+        F.array(lit("#idx"), lit("#ts")),
+        tag_if(col("tool").isNotNull(), "#tool"),
+        F.array(lit("#has")),
+        tag_if(col("turn_idx") == 0, "#conv"),
+        F.coalesce(mentions, no_tags))
 
-    # ONE array of every triple this row contributes → ONE source scan
-    # and ONE Generate (a union-of-branches plan would rescan the
-    # source once per branch — 4x the I/O at the real Iceberg scan).
-    # Nulls (absent tool, non-first turn) drop via array_compact; the
-    # conversation-type triple rides on turn 0 (every conversation has
-    # one) so no distinct/shuffle is needed.
-    all_triples = F.array_compact(F.concat(
-        F.array(
-            trip(turn_iri, lit(RDF_TYPE), lit(TR + "Turn"), named, no_dt),
-            trip(turn_iri, lit(TR + "role"), F.col("role"), literal,
-                 lit(XSD_STRING)),
-            trip(turn_iri, lit(TR + "text"), F.col("text"), literal,
-                 lit(XSD_STRING)),
-            trip(turn_iri, lit(TR + "turnIndex"),
-                 F.col("turn_idx").cast("string"), literal,
-                 lit(XSD_INTEGER)),
-            trip(turn_iri, lit(TR + "ts"), ts_lex, literal,
-                 lit(XSD_DATETIME)),
-            F.when(F.col("tool").isNotNull(), trip(
-                turn_iri, lit(TR + "usesTool"),
-                F.concat(lit(TOOL_NS), F.col("tool")), named, no_dt)),
-            trip(conv_iri, lit(TR + "hasTurn"), turn_iri, named, no_dt),
-            F.when(F.col("turn_idx") == 0, trip(
-                conv_iri, lit(RDF_TYPE), lit(TR + "Conversation"),
-                named, no_dt)),
-        ),
-        F.transform(mention_entities, lambda e: trip(
-            turn_iri, lit(TR + "mentions"), F.concat(lit(ENT_NS), e),
-            named, no_dt)),
-    ))
+    # ONE scan and ONE Generate (a union-of-branches plan would rescan
+    # the source once per branch — 4x the I/O at the real Iceberg
+    # scan). The conversation-type triple rides on turn 0 (every
+    # conversation has one) so no distinct/shuffle is needed.
+    conv_iri = F.concat(lit(CONV_NS), col("conv_id"))
+    idx = col("turn_idx").cast("string")
+    rows = transcripts.select(
+        conv_iri.alias("conv_iri"),
+        F.concat(conv_iri, lit("/turn/"), idx).alias("turn_iri"),
+        "role", "text", idx.alias("idx"),
+        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts_lex"),
+        F.concat(lit(TOOL_NS), col("tool")).alias("tool_iri"),
+        tags.alias("tags"))
 
-    triples = (transcripts
-               .select(F.explode(all_triples).alias("t"))
-               .select("t.subj", "t.pred", "t.obj_value",
-                       "t.obj_termtype", "t.obj_datatype",
-                       F.lit(None).cast("string").alias("obj_language"),
-                       F.lit("").alias("graph")))
+    # tag → (predicate, object, object datatype; None = NamedNode object)
+    slots = {
+        "#type": (RDF_TYPE, lit(TR + "Turn"), None),
+        "#role": (TR + "role", col("role"), XSD_STRING),
+        "#text": (TR + "text", col("text"), XSD_STRING),
+        "#idx": (TR + "turnIndex", col("idx"), XSD_INTEGER),
+        "#ts": (TR + "ts", col("ts_lex"), XSD_DATETIME),
+        "#tool": (TR + "usesTool", col("tool_iri"), None),
+        "#has": (TR + "hasTurn", col("turn_iri"), None),
+        "#conv": (RDF_TYPE, lit(TR + "Conversation"), None),
+    }
+    tag = col("tag")
+
+    def by_tag(field, mention_value):
+        # F.when opens the CASE, Column.when adds each further branch;
+        # mention values never start with '#', so they take the ELSE
+        expr = F
+        for t, slot in slots.items():
+            if slot[field] is not None:
+                expr = expr.when(tag == t, lit(slot[field]))
+        return expr.otherwise(mention_value)
+
+    literal_tags = [t for t, slot in slots.items() if slot[2] is not None]
+    mention_iri = F.concat(
+        lit(ENT_NS + "Entity" if link_entities else ENT_NS), tag)
+    # explode_outer: `tags` is never empty, and a plain explode of a
+    # column makes Catalyst infer a `size(tags) > 0` Filter and push it
+    # below the Project, which evaluates the regex twice per row
+    triples = (rows
+               .select("*", F.explode_outer("tags").alias("tag"))
+               .select(
+                   F.when(tag.isin("#has", "#conv"), col("conv_iri"))
+                    .otherwise(col("turn_iri")).alias("subj"),
+                   by_tag(0, lit(TR + "mentions")).alias("pred"),
+                   by_tag(1, mention_iri).alias("obj_value"),
+                   F.when(tag.isin(*literal_tags), lit("Literal"))
+                    .otherwise(lit("NamedNode")).alias("obj_termtype"),
+                   by_tag(2, lit(None).cast("string")).alias("obj_datatype"),
+                   lit(None).cast("string").alias("obj_language"),
+                   lit("").alias("graph")))
 
     if dedup in (True, "global"):
         # cross-source set-semantics merge (ref lib/util.js:249-306)

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.vectorized import transcript_triples
-from ..vocab import MENTION_RE
+from ..vocab import MENTION_DIGITS_RE, MENTION_RE
 
 TRANSCRIPT_DDL = ("conv_id string, turn_idx int, role string, "
                   "text string, tool string, ts timestamp")
@@ -28,6 +28,18 @@ def read_transcript_stream(spark: SparkSession, input_dir: str,
     return (spark.readStream.schema(TRANSCRIPT_DDL)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(input_dir))
+
+
+def _turn_entities(stream: DataFrame) -> DataFrame:
+    """(ts, entity): one row per distinct canonical entity a turn
+    mentions. The explode sees only the digit tails; the `Entity`
+    prefix is added above it, so no higher-order function takes the
+    Generate out of codegen."""
+    return stream.select(
+        "ts",
+        F.explode(F.array_distinct(F.regexp_extract_all(
+            "text", F.lit(MENTION_DIGITS_RE), 1))).alias("digits")
+    ).select("ts", F.concat(F.lit("Entity"), "digits").alias("entity"))
 
 
 def stream_transcript_triples(spark: SparkSession, input_dir: str,
@@ -57,13 +69,7 @@ def stream_mention_counts(spark: SparkSession, input_dir: str,
     (the hot-entity monitor). Late turns within the watermark update
     their window; older ones are dropped — bounded state."""
     stream = read_transcript_stream(spark, input_dir)
-    mentions = stream.select(
-        "ts",
-        F.explode(F.array_distinct(F.transform(
-            F.regexp_extract_all("text", F.lit(MENTION_RE), 1),
-            lambda s: F.concat(F.lit("Entity"),
-                               F.regexp_extract(s, r"[0-9]+", 0)))))
-        .alias("entity"))
+    mentions = _turn_entities(stream)
     counts = (mentions
               .withWatermark("ts", watermark)
               .groupBy(F.window("ts", window, slide), "entity")
@@ -336,13 +342,7 @@ def stream_entity_timeline(spark: SparkSession, input_dir: str,
     (entity × conv) pairs, so a deployment pairs this with
     stream_hll_postings keyed ent:conv (fixed registers) instead."""
     stream = read_transcript_stream(spark, input_dir)
-    mentions = stream.select(
-        "ts",
-        F.explode(F.array_distinct(F.transform(
-            F.regexp_extract_all("text", F.lit(MENTION_RE), 1),
-            lambda s: F.concat(F.lit("Entity"),
-                               F.regexp_extract(s, r"[0-9]+", 0)))))
-        .alias("entity"))
+    mentions = _turn_entities(stream)
     prof = (mentions.groupBy("entity")
             .agg(F.min("ts").alias("first_seen"),
                  F.max("ts").alias("last_seen"),

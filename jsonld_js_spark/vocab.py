@@ -23,6 +23,9 @@ XSD_DATETIME = XSD + "dateTime"
 # for a non-canonical surface form); extraction is a plain regex so the
 # vectorized path stays JVM-side and the oracle stays ANSI-SQL.
 MENTION_RE = r"\[\[([A-Za-z]+[0-9]+)\]\]"
+# Same match surface, capturing only the digit tail: the canonical
+# entity is "Entity" + tail, so linking needs no second regex.
+MENTION_DIGITS_RE = r"\[\[[A-Za-z]+([0-9]+)\]\]"
 
 TRANSCRIPT_CONTEXT = {
     "@vocab": TR,

@@ -69,6 +69,73 @@ def test_per_turn_text_equality(spark, transcripts):
     assert joined.count() == transcripts.count()
 
 
+HAND_DDL = ("conv_id string, turn_idx int, role string, text string, "
+            "tool string, ts timestamp")
+
+
+@pytest.mark.parametrize("link_entities,dedup,expected", [
+    (True, "local", ["Entity3"]),
+    (True, "global", ["Entity3"]),
+    (True, False, ["Entity3", "Entity3", "Entity3"]),
+    (False, "local", ["Entity3", "entity3"]),
+    (False, "global", ["Entity3", "entity3"]),
+    (False, False, ["Entity3", "Entity3", "entity3"]),
+])
+def test_mention_rows_per_dedup_mode(spark, link_entities, dedup,
+                                     expected):
+    """One turn mentioning [[Entity3]], [[entity3]], [[Entity3]]:
+    linking folds the case variant, local/global dedup drop the repeats,
+    dedup=False keeps every raw mention row."""
+    import datetime
+    from pyspark.sql import functions as F
+    from jsonld_js_spark.vocab import ENT_NS
+    df = spark.createDataFrame(
+        [("c", 0, "user", "a [[Entity3]] b [[entity3]] c [[Entity3]]",
+          None, datetime.datetime(2024, 1, 1))], HAND_DDL)
+    out = transcript_triples(df, dedup=dedup, link_entities=link_entities)
+    rows = sorted(r["obj_value"] for r in
+                  out.filter(F.col("pred") == TR + "mentions").collect())
+    assert rows == [ENT_NS + e for e in expected]
+
+
+def test_null_text_turn_keeps_its_other_triples(spark):
+    """JSON-LD expansion drops a null value: a turn whose text is NULL
+    gets no text triple and no mentions, and keeps every other triple
+    (on turn 0 that includes the conversation's rdf:type). Both Spark
+    paths must emit exactly this set."""
+    import datetime
+    from jsonld_js_spark.vocab import (
+        CONV_NS, ENT_NS, RDF_TYPE, TOOL_NS, XSD_DATETIME, XSD_INTEGER,
+        XSD_STRING,
+    )
+    df = spark.createDataFrame([
+        ("c", 0, "user", None, "search", datetime.datetime(2024, 1, 1)),
+        ("c", 1, "assistant", "see [[entity7]]", None,
+         datetime.datetime(2024, 1, 1, 0, 1)),
+    ], HAND_DDL)
+    conv, t0, t1 = CONV_NS + "c", CONV_NS + "c/turn/0", CONV_NS + "c/turn/1"
+    iri = lambda s, p, o: (s, p, o, "NamedNode", None, None, "")
+    lit = lambda s, p, o, dt: (s, p, o, "Literal", dt, None, "")
+    expected = {
+        iri(conv, RDF_TYPE, TR + "Conversation"),
+        iri(conv, TR + "hasTurn", t0),
+        iri(conv, TR + "hasTurn", t1),
+        iri(t0, RDF_TYPE, TR + "Turn"),
+        lit(t0, TR + "role", "user", XSD_STRING),
+        lit(t0, TR + "turnIndex", "0", XSD_INTEGER),
+        lit(t0, TR + "ts", "2024-01-01T00:00:00Z", XSD_DATETIME),
+        iri(t0, TR + "usesTool", TOOL_NS + "search"),
+        iri(t1, RDF_TYPE, TR + "Turn"),
+        lit(t1, TR + "role", "assistant", XSD_STRING),
+        lit(t1, TR + "text", "see [[entity7]]", XSD_STRING),
+        lit(t1, TR + "turnIndex", "1", XSD_INTEGER),
+        lit(t1, TR + "ts", "2024-01-01T00:01:00Z", XSD_DATETIME),
+        iri(t1, TR + "mentions", ENT_NS + "Entity7"),
+    }
+    assert _as_set(transcript_triples(df)) == expected
+    assert _as_set(kernel_transcript_triples(df)) == expected
+
+
 def test_entity_canonicalization(spark, transcripts):
     rows = entity_canonical_map(transcripts).collect()
     by_surface = {r["surface"]: r for r in rows}
@@ -301,6 +368,28 @@ def test_flagship_plan_is_shuffle_free(spark):
         assert plan.count("FileScan") == 1
         assert "Generate" in plan  # the one explode
         assert "Union" not in plan
+
+
+def test_flagship_plan_is_one_codegen_stage(spark):
+    """The flagship runs as compiled code: a higher-order function
+    (transform/filter) anywhere in the generator takes the whole
+    Generate out of whole-stage codegen, so the executed plan must be
+    ONE *(n) stage with the Generate inside it."""
+    import re
+    import tempfile
+    with tempfile.TemporaryDirectory() as d:
+        transcripts_df(spark, n_conv=20).write \
+            .mode("overwrite").parquet(f"{d}/t.parquet")
+        src = spark.read.parquet(f"{d}/t.parquet")
+        plan = transcript_triples(src)._jdf.queryExecution() \
+            .executedPlan().toString()
+    generates = [ln for ln in plan.splitlines() if "Generate" in ln]
+    assert generates
+    assert all(re.search(r"\*\(\d+\) Generate", ln) for ln in generates), plan
+    assert len(set(re.findall(r"\*\((\d+)\)", plan))) == 1, plan
+    lowered = plan.lower()
+    for hof in ("transform", "filter(", "knownnotcontainsnull"):
+        assert hof not in lowered, plan
 
 
 def test_grouped_kernel_plan_is_shuffle_free(spark):
