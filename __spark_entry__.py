@@ -1,6 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-`queries()` exposes every implemented operator; `oracle_sql()` gives the
+`queries()` and `oracle_sql()` are views of one table,
+`jsonld_js_spark.registry.GATED`: each gated query and the
 DuckDB-equivalent SQL the driver runs side-by-side at sf=0.01.
 
 The KG-construction queries run over the deterministic synthetic
@@ -18,110 +19,21 @@ from pyspark.sql import DataFrame, SparkSession
 SF_CORRECTNESS = 0.01  # driver runs oracles at sf0.01
 
 
-def _utc(spark: SparkSession) -> SparkSession:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark
-
-
-def _transcripts(spark: SparkSession, sf_dir: str):
-    from jsonld_js_spark.transcripts import transcripts_df
-    return transcripts_df(_utc(spark), sf_dir=sf_dir)
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG-construction pipeline (vectorized hot path) on
     the sf0.001-scale transcript table."""
-    from jsonld_js_spark.pipeline import transcript_triples
-    return transcript_triples(_transcripts(spark, "/root/testdata/sf0.001"))
-
-
-# ---------------------------------------------------------------------------
-# queries
-
-def _q_triples(spark, sf_dir):
-    from jsonld_js_spark.pipeline import transcript_triples
-    return transcript_triples(_transcripts(spark, sf_dir))
-
-
-def _q_triples_kernel(spark, sf_dir):
-    from jsonld_js_spark.pipeline import kernel_transcript_triples
-    return kernel_transcript_triples(_transcripts(spark, sf_dir))
-
-
-def _q_triples_grouped(spark, sf_dir):
-    """Layout-aware kernel path: the generator (like an Iceberg table
-    bucketed/sorted by conv_id, turn_idx) emits conversation-contiguous
-    partitions, so the co-locating shuffle is skipped entirely and the
-    whole plan is narrow (one scan, zero Exchange) — the production
-    shape when the table layout is guaranteed."""
-    from jsonld_js_spark.pipeline import kernel_transcript_triples
-    return kernel_transcript_triples(_transcripts(spark, sf_dir),
-                                     assume_grouped=True)
-
-
-def _q_entity_map(spark, sf_dir):
-    from jsonld_js_spark.pipeline import entity_canonical_map
-    return entity_canonical_map(_transcripts(spark, sf_dir))
-
-
-def _q_predicate_stats(spark, sf_dir):
-    from pyspark.sql import functions as F
-    from jsonld_js_spark.pipeline import transcript_triples
-    return (transcript_triples(_transcripts(spark, sf_dir))
-            .groupBy("pred").agg(
-                F.count("*").alias("n_triples"),
-                F.countDistinct("subj").alias("n_subjects"))
-            .orderBy("pred"))
-
-
-def _q_conv_sizes(spark, sf_dir):
-    from pyspark.sql import functions as F
-    t = _transcripts(spark, sf_dir)
-    return (t.groupBy("conv_id").agg(
-        F.count("*").alias("n_turns"),
-        F.max("turn_idx").alias("max_turn_idx"))
-        .orderBy("conv_id"))
-
-
-def _q_mentions_topk(spark, sf_dir):
-    from pyspark.sql import functions as F
-    from jsonld_js_spark.pipeline import entity_canonical_map
-    m = entity_canonical_map(_transcripts(spark, sf_dir))
-    return (m.groupBy("canonical_iri")
-             .agg(F.sum("n_mentions").alias("n_mentions"))
-             .orderBy(F.desc("n_mentions"), "canonical_iri").limit(20))
+    from jsonld_js_spark.kg_api import q_kg_transcript_triples
+    return q_kg_transcript_triples(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from jsonld_js_spark import kg_api, operators
-    q = {
-        "kg_transcript_triples": _q_triples,
-        "kg_transcript_triples_kernel": _q_triples_kernel,
-        "kg_transcript_triples_grouped": _q_triples_grouped,
-        "kg_entity_canonical_map": _q_entity_map,
-        "kg_predicate_stats": _q_predicate_stats,
-        "kg_conv_sizes": _q_conv_sizes,
-        "kg_mentions_topk": _q_mentions_topk,
-    }
-    q.update(kg_api.queries())
-    q.update(operators.queries())
-    from jsonld_js_spark.pipeline import curate
-    q.update(curate.QUERIES)
-    return q
+    from jsonld_js_spark.registry import GATED
+    return {name: row.query for name, row in GATED.items()}
 
-
-# ---------------------------------------------------------------------------
-# oracles (DuckDB SQL)
 
 def _oracle_sql(n_conv: int) -> dict[str, str]:
-    from jsonld_js_spark import kg_api, operators
-    from jsonld_js_spark.oracles import kg_oracles
-    out = kg_oracles(n_conv)
-    out.update(kg_api.oracles(n_conv))
-    out.update(operators.oracle_sql())
-    from jsonld_js_spark.pipeline import curate
-    out.update(curate.ORACLES)
-    return out
+    from jsonld_js_spark.registry import GATED
+    return {name: row.sql(n_conv) for name, row in GATED.items()}
 
 
 def oracle_sql() -> dict[str, str]:

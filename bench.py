@@ -2,8 +2,9 @@
 {"metric": ..., "value": N, "unit": ..., "queries": {name: sec}, "sf": ...}
 
 Default: headline queries at $SPARK_GRAFT_SF_DIR (sf0.1) on
-local[$SPARK_GRAFT_CPUS]. The flagship metric is end-to-end
-triples/sec of the vectorized KG pipeline (BASELINE.json metric).
+local[$SPARK_GRAFT_CPUS] (default: one per core). The flagship metric
+is end-to-end triples/sec of the vectorized KG pipeline (BASELINE.json
+metric).
 
 --scaling additionally runs the identical flagship job at local[8] and
 local[32] on the same input and reports throughput at both plus the
@@ -77,10 +78,6 @@ def flagship_run(spark, sf_dir=None, n_conv=None) -> tuple[float, int, int]:
     return time.time() - t0, n_triples, n_turns
 
 
-def _noop_run(spark, n_conv: int) -> tuple[float, int, int]:
-    return flagship_run(spark, n_conv=n_conv)
-
-
 def scaling_evidence(sf_dir: str, sf: float) -> dict:
     """N vs 4N evidence (north_rule): the identical flagship job at two
     parallelism levels, full materialization, median of 3 runs each
@@ -96,10 +93,10 @@ def scaling_evidence(sf_dir: str, sf: float) -> dict:
     for cpus in (2, 8, 32):
         spark = make_spark(cpus)
         try:
-            _noop_run(spark, 5000)  # warm JVM/codegen
+            flagship_run(spark, n_conv=5000)  # warm JVM/codegen
             runs = []
             for _ in range(n_rep):
-                secs, n_triples, n_turns = _noop_run(spark, n_conv)
+                secs, n_triples, n_turns = flagship_run(spark, n_conv=n_conv)
                 runs.append(secs)
             med = statistics.median(runs)
             out[f"local[{cpus}]"] = {
@@ -150,7 +147,7 @@ def _write_bench_md(sf, s: dict) -> None:
 def main() -> int:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     from jsonld_js_spark.transcripts import sf_from_dir
     sf = sf_from_dir(sf_dir)
 
@@ -173,13 +170,12 @@ def main() -> int:
         queries["kg_transcript_triples"] = round(secs, 3)
         tps = n_triples / secs
 
-        bench_names = [n for n in entry.queries()
-                       if n != "kg_transcript_triples"]
         skip = set(os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(","))
-        for name in bench_names:
+        skip.add("kg_transcript_triples")  # the flagship, timed above
+        for name, fn in entry.queries().items():
             if name in skip:
                 continue
-            q_secs, _ = time_query(entry.queries()[name], spark, sf_dir)
+            q_secs, _ = time_query(fn, spark, sf_dir)
             queries[name] = round(q_secs, 3)
     finally:
         spark.stop()

@@ -8,7 +8,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .frame_spark import frame_embed, frame_subjects
-from .pipeline import transcript_triples
+from .oracles import MENTION_RE_DUCK
+from .pipeline import (
+    entity_canonical_map, kernel_transcript_triples, transcript_triples,
+)
 from .transcripts import transcripts_df
 from .vocab import (
     ENT_NS, MENTION_RE, RDF_TYPE, TR, XSD_DATETIME, XSD_STRING,
@@ -18,6 +21,107 @@ from .vocab import (
 def _triples(spark, sf_dir, cache=False):
     t = transcript_triples(transcripts_df(spark, sf_dir=sf_dir))
     return t.cache() if cache else t
+
+
+def _transcripts(spark, sf_dir):
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return transcripts_df(spark, sf_dir=sf_dir)
+
+
+# ---------------------------------------------------------------------------
+# KG construction over the transcript table. The triple-set queries share
+# one oracle, oracles._triples_select.
+
+def q_kg_transcript_triples(spark, sf_dir):
+    return transcript_triples(_transcripts(spark, sf_dir))
+
+
+def q_kg_transcript_triples_kernel(spark, sf_dir):
+    return kernel_transcript_triples(_transcripts(spark, sf_dir))
+
+
+def q_kg_transcript_triples_grouped(spark, sf_dir):
+    """Layout-aware kernel path: the generator (like an Iceberg table
+    bucketed/sorted by conv_id, turn_idx) emits conversation-contiguous
+    partitions, so the co-locating shuffle is skipped entirely and the
+    whole plan is narrow (one scan, zero Exchange) — the production
+    shape when the table layout is guaranteed."""
+    return kernel_transcript_triples(_transcripts(spark, sf_dir),
+                                     assume_grouped=True)
+
+
+def q_kg_entity_canonical_map(spark, sf_dir):
+    return entity_canonical_map(_transcripts(spark, sf_dir))
+
+
+def _mentions_cte(transcripts_sql: str) -> str:
+    return f"""
+WITH transcripts AS ({transcripts_sql}),
+raw_mentions AS (
+  SELECT unnest(regexp_extract_all(text, '{MENTION_RE_DUCK}', 1)) AS surface
+  FROM transcripts
+),
+entity_map AS (
+  SELECT surface,
+         '{ENT_NS}Entity' || regexp_extract(surface, '[0-9]+', 0)
+           AS canonical_iri,
+         cast(case when surface =
+                        'Entity' || regexp_extract(surface, '[0-9]+', 0)
+              then 1.0 else 0.9 end as double) AS link_score,
+         count(*) AS n_mentions
+  FROM raw_mentions GROUP BY surface
+)
+"""
+
+
+def oracle_kg_entity_canonical_map(transcripts_sql: str) -> str:
+    return _mentions_cte(transcripts_sql) + "SELECT * FROM entity_map"
+
+
+def q_kg_predicate_stats(spark, sf_dir):
+    return (transcript_triples(_transcripts(spark, sf_dir))
+            .groupBy("pred").agg(
+                F.count("*").alias("n_triples"),
+                F.countDistinct("subj").alias("n_subjects"))
+            .orderBy("pred"))
+
+
+def oracle_kg_predicate_stats(triples_sql: str) -> str:
+    return f"""
+SELECT pred, count(*) AS n_triples, count(distinct subj) AS n_subjects
+FROM ({triples_sql}) GROUP BY pred ORDER BY pred
+"""
+
+
+def q_kg_conv_sizes(spark, sf_dir):
+    t = _transcripts(spark, sf_dir)
+    return (t.groupBy("conv_id").agg(
+        F.count("*").alias("n_turns"),
+        F.max("turn_idx").alias("max_turn_idx"))
+        .orderBy("conv_id"))
+
+
+def oracle_kg_conv_sizes(transcripts_sql: str) -> str:
+    return f"""
+WITH transcripts AS ({transcripts_sql})
+SELECT conv_id, count(*) AS n_turns, max(turn_idx) AS max_turn_idx
+FROM transcripts GROUP BY conv_id ORDER BY conv_id
+"""
+
+
+def q_kg_mentions_topk(spark, sf_dir):
+    m = entity_canonical_map(_transcripts(spark, sf_dir))
+    return (m.groupBy("canonical_iri")
+             .agg(F.sum("n_mentions").alias("n_mentions"))
+             .orderBy(F.desc("n_mentions"), "canonical_iri").limit(20))
+
+
+def oracle_kg_mentions_topk(transcripts_sql: str) -> str:
+    return _mentions_cte(transcripts_sql) + """
+SELECT canonical_iri, cast(sum(n_mentions) as bigint) AS n_mentions
+FROM entity_map GROUP BY canonical_iri
+ORDER BY n_mentions DESC, canonical_iri LIMIT 20
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -449,7 +553,6 @@ def q_kg_merge_sources(spark, sf_dir):
 
 
 def oracle_kg_merge_sources(triples_sql: str) -> str:
-    from .oracles import kg_oracles  # noqa: F401  (structure parity)
     return f"""
 WITH tr AS ({triples_sql}),
 cu AS ({ORACLE_KG_CUSTOMER_GRAPH.replace("ORDER BY subj, pred, obj_value", "")}),
@@ -3184,115 +3287,3 @@ SELECT node, rank FROM {prev} WHERE rank > 0
 ORDER BY rank DESC, node LIMIT 50
 """
 
-
-def queries() -> dict:
-    return {
-        "kg_frame_turns": q_kg_frame_turns,
-        "kg_flatten_nodes": q_kg_flatten_nodes,
-        "kg_fromrdf_nodemap": q_kg_fromrdf_nodemap,
-        "kg_customer_graph": q_kg_customer_graph,
-        "kg_events_graph": q_kg_events_graph,
-        "kg_conv_window": q_kg_conv_window,
-        "kg_merge_sources": q_kg_merge_sources,
-        "kg_nquads": q_kg_nquads,
-        "kg_frame_kernel_path": q_kg_frame_kernel_path,
-        "kg_fromrdf_roundtrip": q_kg_fromrdf_roundtrip,
-        "kg_compact_conversations": q_kg_compact_conversations,
-        "kg_nquads_source_roundtrip": q_kg_nquads_source_roundtrip,
-        "kg_incremental_triples": q_kg_incremental_triples,
-        "kg_degree_stats": q_kg_degree_stats,
-        "kg_entity_comention": q_kg_entity_comention,
-        "kg_pagerank": q_kg_pagerank,
-        "kg_sameas_closure": q_kg_sameas_closure,
-        "kg_khop": q_kg_khop,
-        "kg_triangle_count": q_kg_triangle_count,
-        "kg_label_propagation": q_kg_label_propagation,
-        "kg_random_walks": q_kg_random_walks,
-        "kg_skipgram_pairs": q_kg_skipgram_pairs,
-        "kg_neighbor_jaccard": q_kg_neighbor_jaccard,
-        "kg_kcore": q_kg_kcore,
-        "kg_neighborhood_growth": q_kg_neighborhood_growth,
-        "kg_anf_registers": q_kg_anf_registers,
-        "kg_ppr": q_kg_ppr,
-        "kg_link_prediction": q_kg_link_prediction,
-        "kg_entity_timeline": q_kg_entity_timeline,
-        "kg_cooccur_lift": q_kg_cooccur_lift,
-        "kg_tool_transitions": q_kg_tool_transitions,
-        "kg_relation_timeline": q_kg_relation_timeline,
-        "kg_conv_profile": q_kg_conv_profile,
-        "kg_components": q_kg_components,
-        "kg_literal_stats": q_kg_literal_stats,
-        "kg_predicate_cooccur": q_kg_predicate_cooccur,
-        "kg_mention_contexts": q_kg_mention_contexts,
-        "kg_degree_distribution": q_kg_degree_distribution,
-        "kg_entity_role_affinity": q_kg_entity_role_affinity,
-        "kg_entity_aliases": q_kg_entity_aliases,
-    }
-
-
-def oracles(n_conv: int) -> dict:
-    from .oracles import _triples_select
-    from .transcripts import transcripts_sql
-    triples_sql = _triples_select(n_conv)
-    return {
-        "kg_frame_turns": oracle_kg_frame_turns(triples_sql),
-        "kg_flatten_nodes": oracle_kg_flatten_nodes(triples_sql),
-        "kg_fromrdf_nodemap": oracle_kg_fromrdf_nodemap(triples_sql),
-        "kg_customer_graph": ORACLE_KG_CUSTOMER_GRAPH,
-        "kg_events_graph": oracle_kg_events_graph(),
-        "kg_conv_window": oracle_kg_conv_window(
-            transcripts_sql(n_conv, "duckdb")),
-        "kg_merge_sources": oracle_kg_merge_sources(triples_sql),
-        "kg_nquads": oracle_kg_nquads(triples_sql),
-        "kg_frame_kernel_path": oracle_kg_frame_kernel_path(
-            transcripts_sql(n_conv, "duckdb")),
-        # round-trip must reproduce the original triple set exactly
-        "kg_fromrdf_roundtrip": triples_sql,
-        # SQL-checkable counts; the JSON text itself is verified in
-        # tests/test_kg_api.py against the single-node kernel
-        "kg_compact_conversations": oracle_kg_compact_conversations(
-            triples_sql),
-        # sink→source round-trip must reproduce the triple set exactly
-        "kg_nquads_source_roundtrip": triples_sql,
-        "kg_incremental_triples":
-            oracle_kg_incremental_triples(triples_sql, n_conv),
-        "kg_degree_stats": oracle_kg_degree_stats(triples_sql),
-        "kg_entity_comention":
-            oracle_kg_entity_comention(triples_sql),
-        "kg_pagerank": oracle_kg_pagerank(triples_sql),
-        # identity resolution over the surface-form KG must reproduce
-        # the independently-derived LINKED triple set exactly (set
-        # equality theorem for the normalizing resolver — the
-        # round-trip oracle pattern)
-        "kg_sameas_closure": triples_sql,
-        "kg_khop": oracle_kg_khop(triples_sql),
-        "kg_triangle_count": oracle_kg_triangle_count(triples_sql),
-        "kg_label_propagation": oracle_kg_label_propagation(triples_sql),
-        "kg_random_walks": oracle_kg_random_walks(triples_sql),
-        "kg_skipgram_pairs": oracle_kg_skipgram_pairs(triples_sql),
-        "kg_neighbor_jaccard": oracle_kg_neighbor_jaccard(triples_sql),
-        "kg_kcore": oracle_kg_kcore(triples_sql),
-        "kg_neighborhood_growth":
-            oracle_kg_neighborhood_growth(triples_sql),
-        "kg_anf_registers": oracle_kg_anf_registers(triples_sql),
-        "kg_ppr": oracle_kg_ppr(triples_sql),
-        "kg_link_prediction": oracle_kg_link_prediction(triples_sql),
-        "kg_entity_timeline": oracle_kg_entity_timeline(triples_sql),
-        "kg_cooccur_lift": oracle_kg_cooccur_lift(triples_sql),
-        "kg_tool_transitions": oracle_kg_tool_transitions(triples_sql),
-        "kg_relation_timeline":
-            oracle_kg_relation_timeline(triples_sql),
-        "kg_conv_profile": oracle_kg_conv_profile(triples_sql),
-        "kg_components": oracle_kg_components(triples_sql),
-        "kg_literal_stats": oracle_kg_literal_stats(triples_sql),
-        "kg_predicate_cooccur":
-            oracle_kg_predicate_cooccur(triples_sql),
-        "kg_mention_contexts": oracle_kg_mention_contexts(
-            transcripts_sql(n_conv, "duckdb")),
-        "kg_degree_distribution":
-            oracle_kg_degree_distribution(triples_sql),
-        "kg_entity_role_affinity":
-            oracle_kg_entity_role_affinity(triples_sql),
-        "kg_entity_aliases": oracle_kg_entity_aliases(
-            transcripts_sql(n_conv, "duckdb")),
-    }

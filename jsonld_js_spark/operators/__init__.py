@@ -1,48 +1,4 @@
 """Large-scale training-data pipeline operators (dedup, similarity,
 text analysis, multimodal plumbing) over the documents/embeddings
-tables. Each module registers (query, oracle) pairs here."""
-from __future__ import annotations
-
-
-def queries() -> dict:
-    from . import (asof, bpe, classifier, dedup, jsonld_column, lm,
-                   multimodal, packing, relational, sampling, sessions,
-                   similarity, sketches, textstats)
-    out = {}
-    out.update(asof.QUERIES)
-    out.update(bpe.QUERIES)
-    out.update(relational.QUERIES)
-    out.update(sketches.QUERIES)
-    out.update(classifier.QUERIES)
-    out.update(dedup.QUERIES)
-    out.update(similarity.QUERIES)
-    out.update(textstats.QUERIES)
-    out.update(sampling.QUERIES)
-    out.update(packing.QUERIES)
-    out.update(lm.QUERIES)
-    out.update(multimodal.QUERIES)
-    out.update(sessions.QUERIES)
-    out.update(jsonld_column.QUERIES)
-    return out
-
-
-def oracle_sql() -> dict:
-    from . import (asof, bpe, classifier, dedup, jsonld_column, lm,
-                   multimodal, packing, relational, sampling, sessions,
-                   similarity, sketches, textstats)
-    out = {}
-    out.update(asof.ORACLES)
-    out.update(bpe.ORACLES)
-    out.update(relational.ORACLES)
-    out.update(sketches.ORACLES)
-    out.update(classifier.ORACLES)
-    out.update(dedup.ORACLES)
-    out.update(similarity.ORACLES)
-    out.update(textstats.ORACLES)
-    out.update(sampling.ORACLES)
-    out.update(packing.ORACLES)
-    out.update(lm.ORACLES)
-    out.update(multimodal.ORACLES)
-    out.update(sessions.ORACLES)
-    out.update(jsonld_column.ORACLES)
-    return out
+tables. Each module defines `q_*` queries and their DuckDB oracles;
+registry.py pairs them into the gated-query table."""

@@ -169,9 +169,3 @@ SELECT user_id, event_id, cast(us as bigint) AS us,
             then us - cand_us end as bigint) AS lag_us
 FROM carried WHERE is_left = 1 ORDER BY event_id
 """
-
-
-QUERIES = {"events_asof_join": q_events_asof_join,
-           "events_asof_join_salted": q_events_asof_join_salted}
-ORACLES = {"events_asof_join": ORACLE_EVENTS_ASOF,
-           "events_asof_join_salted": ORACLE_EVENTS_ASOF}

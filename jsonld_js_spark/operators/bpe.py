@@ -419,13 +419,3 @@ SELECT doc_id,
        {hash60_sql(f"array_to_string({seg}, ' ')")} AS chunk_hash
 FROM chunks ORDER BY doc_id, chunk_idx
 """
-
-
-QUERIES = {"vocab_bpe_merges": q_vocab_bpe_merges,
-           "vocab_bpe_tokenize": q_vocab_bpe_tokenize,
-           "vocab_bpe_tokenize_scale": q_vocab_bpe_tokenize_scale,
-           "text_chunks_bpe": q_text_chunks_bpe}
-ORACLES = {"vocab_bpe_merges": oracle_vocab_bpe_merges(),
-           "vocab_bpe_tokenize": oracle_vocab_bpe_tokenize(),
-           "vocab_bpe_tokenize_scale": oracle_vocab_bpe_tokenize(),
-           "text_chunks_bpe": oracle_text_chunks_bpe()}

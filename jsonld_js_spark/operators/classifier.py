@@ -33,9 +33,6 @@ from pyspark.sql import functions as F
 
 from .textstats import _NORM_SQL, _docs, _norm, hash60, hash60_sql
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
 D_FEATURES = 4096
 WEIGHT_MIX = 2654435761  # Knuth multiplicative constant
 WEIGHT_MOD = 2001        # weights in [0, 2000], neutral mean 1000
@@ -110,6 +107,3 @@ SELECT doc_id, n_features, score_milli,
        score_milli >= 1000000 AS keep
 FROM scored ORDER BY doc_id
 """
-
-QUERIES["text_classifier_score"] = q_text_classifier_score
-ORACLES["text_classifier_score"] = ORACLE_CLASSIFIER_SCORE

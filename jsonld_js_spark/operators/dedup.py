@@ -841,26 +841,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-QUERIES = {
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_cross_corpus": q_dedup_cross_corpus,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_clusters_star": q_dedup_clusters_star,
-}
-ORACLES = {
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "dedup_minhash_lsh": ORACLE_DEDUP_MINHASH,
-    "dedup_cross_corpus": ORACLE_DEDUP_CROSS_CORPUS,
-    "dedup_ngram_jaccard": ORACLE_DEDUP_NGRAM,
-    "dedup_simhash": ORACLE_DEDUP_SIMHASH,
-    "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
-    "dedup_clusters_star": ORACLE_DEDUP_CLUSTERS,
-}
-
-
 # ---------------------------------------------------------------------------
 # Cross-document boilerplate-line removal stats (the CCNet/RefinedWeb
 # move: a "line" shared by >= K documents is boilerplate; report how
@@ -946,9 +926,6 @@ SELECT t.doc_id, t.n_lines,
 FROM totals t LEFT JOIN dropped d ON t.doc_id = d.doc_id
 ORDER BY t.doc_id
 """
-
-QUERIES["corpus_boilerplate_stats"] = q_corpus_boilerplate_stats
-ORACLES["corpus_boilerplate_stats"] = ORACLE_CORPUS_BOILERPLATE
 
 
 # ---------------------------------------------------------------------------
@@ -1094,9 +1071,6 @@ FROM spans s JOIN toks t ON s.doc_id = t.doc_id
 ORDER BY s.doc_id, s.span_start
 """
 
-QUERIES["dedup_substring"] = q_dedup_substring
-ORACLES["dedup_substring"] = ORACLE_DEDUP_SUBSTRING
-
 
 # ---------------------------------------------------------------------------
 # Eval-set contamination check: flag training documents sharing a
@@ -1179,9 +1153,6 @@ WHERE floor(s.n_shared * 1000000.0 / v.n_eval)
       >= {CONTAM_OVERLAP_PPM_MIN}
 ORDER BY s.doc_id, s.eval_doc_id
 """
-
-QUERIES["corpus_contamination"] = q_corpus_contamination
-ORACLES["corpus_contamination"] = ORACLE_CORPUS_CONTAMINATION
 
 
 # ---------------------------------------------------------------------------
@@ -1325,9 +1296,6 @@ LEFT JOIN scrub s ON t.doc_id = s.doc_id
 ORDER BY t.doc_id
 """
 
-QUERIES["dedup_substring_scrub"] = q_dedup_substring_scrub
-ORACLES["dedup_substring_scrub"] = ORACLE_DEDUP_SUBSTRING_SCRUB
-
 
 # ---------------------------------------------------------------------------
 # Decontamination: the curation counterpart of `contamination` — drop
@@ -1384,9 +1352,6 @@ SELECT c.doc_id,
 FROM corpus c ANTI JOIN flagged f ON c.doc_id = f.doc_id
 ORDER BY c.doc_id
 """
-
-QUERIES["corpus_decontaminate"] = q_corpus_decontaminate
-ORACLES["corpus_decontaminate"] = ORACLE_CORPUS_DECONTAMINATE
 
 
 # ---------------------------------------------------------------------------
@@ -1476,9 +1441,6 @@ FROM m ORDER BY doc_id
 
 
 ORACLE_DEDUP_KEEP_BEST = _oracle_dedup_keep_best()
-
-QUERIES["dedup_keep_best"] = q_dedup_keep_best
-ORACLES["dedup_keep_best"] = ORACLE_DEDUP_KEEP_BEST
 
 
 # ---------------------------------------------------------------------------
@@ -1621,6 +1583,3 @@ SELECT doc_id,
               "FILTER (WHERE is_dup = 0), chr(10)), '')")} AS kept_hash
 FROM flagged GROUP BY doc_id ORDER BY doc_id
 """
-
-QUERIES["corpus_line_dedup"] = q_corpus_line_dedup
-ORACLES["corpus_line_dedup"] = ORACLE_CORPUS_LINE_DEDUP

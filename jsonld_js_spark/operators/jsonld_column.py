@@ -200,12 +200,3 @@ SELECT '_:b' || cast(row_number() OVER (ORDER BY event_id) - 1
        '' AS graph
 FROM events ORDER BY subj, pred, obj_value
 """
-
-QUERIES = {
-    "jsonld_props_triples": q_jsonld_props_triples,
-    "jsonld_props_bnode_triples": q_jsonld_props_bnode_triples,
-}
-ORACLES = {
-    "jsonld_props_triples": ORACLE_JSONLD_PROPS,
-    "jsonld_props_bnode_triples": ORACLE_JSONLD_PROPS_BNODE,
-}

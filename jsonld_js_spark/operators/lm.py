@@ -29,9 +29,6 @@ from pyspark.sql import functions as F
 
 from .textstats import _NORM_SQL, _docs, _norm
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
 PPM = 1_000_000
 
 
@@ -97,6 +94,3 @@ SELECT doc_id, cast(count(*) AS bigint) AS n_bigrams,
        cast(sum(ppm) // count(*) AS bigint) AS score_ppm
 FROM scored GROUP BY doc_id ORDER BY doc_id
 """
-
-QUERIES["text_lm_score"] = q_text_lm_score
-ORACLES["text_lm_score"] = ORACLE_LM_SCORE

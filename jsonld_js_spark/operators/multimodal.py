@@ -899,27 +899,3 @@ FROM ph a JOIN ph b
 WHERE {_ham_sql('a.phash_hex', 'b.phash_hex', 'duckdb')} <= {PHASH_HAM_T}
 ORDER BY doc_a, doc_b
 """
-
-
-QUERIES = {
-    "multimodal_decode": q_multimodal_decode,
-    "multimodal_decode_real": q_multimodal_decode_real,
-    "multimodal_resize": q_multimodal_resize,
-    "multimodal_frame_sample": q_multimodal_frame_sample,
-    "multimodal_dedup": q_multimodal_dedup,
-    "multimodal_neardup": q_multimodal_neardup,
-    "multimodal_audio_features": q_multimodal_audio_features,
-    "multimodal_phash": q_multimodal_phash,
-    "multimodal_phash_neardup": q_multimodal_phash_neardup,
-}
-ORACLES = {
-    "multimodal_decode": ORACLE_MULTIMODAL_DECODE,
-    "multimodal_decode_real": ORACLE_MULTIMODAL_DECODE_REAL,
-    "multimodal_resize": ORACLE_MULTIMODAL_RESIZE,
-    "multimodal_frame_sample": ORACLE_MULTIMODAL_FRAMES,
-    "multimodal_dedup": ORACLE_MULTIMODAL_DEDUP,
-    "multimodal_neardup": _oracle_multimodal_neardup(),
-    "multimodal_audio_features": ORACLE_MULTIMODAL_AUDIO_FEATURES,
-    "multimodal_phash": ORACLE_MULTIMODAL_PHASH,
-    "multimodal_phash_neardup": ORACLE_MULTIMODAL_PHASH_NEARDUP,
-}

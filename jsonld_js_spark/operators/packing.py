@@ -37,9 +37,6 @@ from pyspark.sql import functions as F
 
 from .textstats import _NORM_SQL, _docs, _norm, hash60, hash60_sql
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
 SEQ_LEN = 512        # tokens per packed training sequence
 N_BUCKETS = 32       # two-level-scan fan-out; O(N_BUCKETS) driver state
 PACK_SALT = "pack:"
@@ -295,14 +292,3 @@ SELECT doc_id, lang, n_tokens, lang_tok_offset
 FROM o WHERE lang_tok_offset < {_BUDGET_SQL}
 ORDER BY doc_id
 """
-
-
-QUERIES["corpus_pack_sequences"] = q_corpus_pack_sequences
-QUERIES["corpus_pack_sequences_bpe"] = q_corpus_pack_sequences_bpe
-QUERIES["corpus_token_budget_sample"] = q_corpus_token_budget_sample
-QUERIES["corpus_token_budget_sample_bpe"] = \
-    q_corpus_token_budget_sample_bpe
-ORACLES["corpus_pack_sequences"] = ORACLE_PACK
-ORACLES["corpus_pack_sequences_bpe"] = oracle_pack_bpe()
-ORACLES["corpus_token_budget_sample"] = ORACLE_BUDGET
-ORACLES["corpus_token_budget_sample_bpe"] = oracle_budget_bpe()

@@ -167,11 +167,3 @@ SELECT cast(GROUPING(l_returnflag, l_linestatus) as bigint) AS lvl,
 FROM rows_q GROUP BY ROLLUP (l_returnflag, l_linestatus)
 ORDER BY lvl, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """
-
-
-QUERIES = {"rel_pricing_summary": q_rel_pricing_summary,
-           "rel_top_orders": q_rel_top_orders,
-           "rel_pricing_rollup": q_rel_pricing_rollup}
-ORACLES = {"rel_pricing_summary": ORACLE_REL_PRICING,
-           "rel_top_orders": ORACLE_REL_TOP_ORDERS,
-           "rel_pricing_rollup": ORACLE_REL_ROLLUP}

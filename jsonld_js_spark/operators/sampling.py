@@ -18,9 +18,6 @@ from pyspark.sql import functions as F
 
 from .textstats import _docs, hash60, hash60_sql
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
 # hash buckets are per-mille; salts decorrelate the two operators
 SPLIT_SALT = "split:"
 SAMPLE_SALT = "sample:"
@@ -522,19 +519,3 @@ SELECT doc_id, lang, cast(w as bigint) AS w,
 FROM ranked WHERE rn <= {WSAMPLE_K}
 ORDER BY lang, priority, doc_id
 """
-
-
-QUERIES["corpus_split"] = q_corpus_split
-QUERIES["corpus_sample_stratified"] = q_corpus_sample_stratified
-QUERIES["corpus_sample_weighted"] = q_corpus_sample_weighted
-QUERIES["corpus_domain_mix"] = q_corpus_domain_mix
-QUERIES["corpus_domain_mix_bpe"] = q_corpus_domain_mix_bpe
-QUERIES["corpus_mix_upsample"] = q_corpus_mix_upsample
-QUERIES["corpus_mix_upsample_bpe"] = q_corpus_mix_upsample_bpe
-ORACLES["corpus_sample_weighted"] = ORACLE_CORPUS_SAMPLE_WEIGHTED
-ORACLES["corpus_split"] = ORACLE_CORPUS_SPLIT
-ORACLES["corpus_sample_stratified"] = ORACLE_CORPUS_SAMPLE
-ORACLES["corpus_domain_mix"] = ORACLE_CORPUS_DOMAIN_MIX
-ORACLES["corpus_domain_mix_bpe"] = oracle_domain_mix_bpe()
-ORACLES["corpus_mix_upsample"] = ORACLE_CORPUS_MIX_UPSAMPLE
-ORACLES["corpus_mix_upsample_bpe"] = oracle_mix_upsample_bpe()

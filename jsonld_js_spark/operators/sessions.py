@@ -291,13 +291,3 @@ WHERE (s.m * c.n_events - s.S) * (s.m * c.n_events - s.S)
       > {ANOMALY_K2} * (s.m * s.Q - s.S * s.S)
 ORDER BY c.user_id, c.day
 """
-
-
-QUERIES = {"events_sessionize": q_events_sessionize,
-           "events_funnel": q_events_funnel,
-           "events_retention": q_events_retention,
-           "events_anomaly": q_events_anomaly}
-ORACLES = {"events_sessionize": ORACLE_EVENTS_SESSIONIZE,
-           "events_funnel": _oracle_events_funnel(),
-           "events_retention": ORACLE_EVENTS_RETENTION,
-           "events_anomaly": ORACLE_EVENTS_ANOMALY}

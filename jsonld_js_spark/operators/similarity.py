@@ -172,7 +172,6 @@ def _lsh_sig_sql(vq: str = "vq") -> str:
     return "(" + " + ".join(parts) + ")"
 
 
-
 N_SIG_BANDS = 3  # 3 bands x 4 planes → 16 buckets/band
 
 
@@ -401,8 +400,6 @@ SELECT vec_a, vec_b, {cos} AS cos_ppm FROM pairs
 WHERE {cos} >= {NEARDUP_PPM}
 ORDER BY vec_a, vec_b
 """
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -775,19 +772,3 @@ def _oracle_dedup_semantic() -> str:
             "AS keep, d.dup_of "
             "FROM assign s LEFT JOIN dups d ON d.vec_id = s.vec_id "
             "ORDER BY s.vec_id")
-
-
-QUERIES = {
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "dedup_embedding_cosine": q_dedup_embedding_cosine,
-    "dedup_semantic": q_dedup_semantic,
-}
-ORACLES = {
-    "ann_cosine_topk": ORACLE_ANN_COSINE,
-    "ann_lsh_topk": _oracle_ann_lsh(),
-    "ann_ivf_topk": _oracle_ann_ivf(),
-    "dedup_embedding_cosine": _oracle_neardup(),
-    "dedup_semantic": _oracle_dedup_semantic(),
-}

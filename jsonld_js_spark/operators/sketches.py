@@ -535,17 +535,3 @@ SELECT source, h % {OPH_K} AS bucket,
        cast(min(h) as bigint) AS min_h
 FROM h GROUP BY source, bucket ORDER BY source, bucket
 """
-
-
-QUERIES = {"sketch_hll_postings": q_sketch_hll_postings,
-           "sketch_hll_by_source": q_sketch_hll_by_source,
-           "sketch_countmin_tokens": q_sketch_countmin_tokens,
-           "sketch_quantile_doclen": q_sketch_quantile_doclen,
-           "sketch_bloom_fingerprints": q_sketch_bloom_fingerprints,
-           "sketch_oph_sources": q_sketch_oph_sources}
-ORACLES = {"sketch_hll_postings": ORACLE_SKETCH_HLL,
-           "sketch_hll_by_source": ORACLE_SKETCH_HLL_BY_SOURCE,
-           "sketch_countmin_tokens": ORACLE_SKETCH_COUNTMIN,
-           "sketch_quantile_doclen": ORACLE_SKETCH_QUANTILE,
-           "sketch_bloom_fingerprints": ORACLE_SKETCH_BLOOM,
-           "sketch_oph_sources": ORACLE_SKETCH_OPH}

@@ -269,20 +269,6 @@ FROM documents ORDER BY doc_id
 """
 
 
-QUERIES = {
-    "text_tokens": q_text_tokens,
-    "text_quality": q_text_quality,
-    "text_langid": q_text_langid,
-    "text_fingerprint": q_text_fingerprint,
-}
-ORACLES = {
-    "text_tokens": ORACLE_TEXT_TOKENS,
-    "text_quality": ORACLE_TEXT_QUALITY,
-    "text_langid": ORACLE_TEXT_LANGID,
-    "text_fingerprint": ORACLE_TEXT_FINGERPRINT,
-}
-
-
 # ---------------------------------------------------------------------------
 # fixed-token chunking — the pre-tokenization pass of a training/RAG
 # pipeline: every document explodes into overlapping CHUNK_TOKENS-token
@@ -425,11 +411,6 @@ WHERE fps.doc_id = canon.canonical_doc_id
 ORDER BY q.doc_id
 """
 
-QUERIES["text_chunks"] = q_text_chunks
-QUERIES["corpus_quality_filter"] = q_corpus_quality_filter
-ORACLES["text_chunks"] = ORACLE_TEXT_CHUNKS
-ORACLES["corpus_quality_filter"] = ORACLE_CORPUS_FILTER
-
 
 # ---------------------------------------------------------------------------
 # PII scrubbing — the redaction pass of a training-data pipeline:
@@ -516,9 +497,6 @@ SELECT doc_id,
 FROM a ORDER BY doc_id
 """
 
-QUERIES["text_pii_scrub"] = q_text_pii_scrub
-ORACLES["text_pii_scrub"] = ORACLE_TEXT_PII_SCRUB
-
 
 # ---------------------------------------------------------------------------
 # corpus TF-IDF: per-document distinctive terms. Integer-exact variant
@@ -582,9 +560,6 @@ ranked AS (
 SELECT doc_id, rank, token, tf, df, score_ppm FROM ranked
 WHERE rank <= {TFIDF_TOP_K} ORDER BY doc_id, rank
 """
-
-QUERIES["text_tfidf_topk"] = q_text_tfidf_topk
-ORACLES["text_tfidf_topk"] = ORACLE_TEXT_TFIDF
 
 
 # ---------------------------------------------------------------------------
@@ -715,9 +690,6 @@ FROM scored GROUP BY doc_id
 ORDER BY score DESC, doc_id LIMIT {BM25_TOP_K}
 """
 
-QUERIES["text_bm25_topk"] = q_text_bm25_topk
-ORACLES["text_bm25_topk"] = ORACLE_TEXT_BM25
-
 
 # ---------------------------------------------------------------------------
 # Corpus-level top-k bigrams by DOCUMENT frequency. Scale shape: one
@@ -766,10 +738,6 @@ SELECT ngram, cast(count(*) as bigint) AS df
 FROM bi GROUP BY ngram
 ORDER BY df DESC, ngram LIMIT {NGRAM_TOP_K}
 """
-
-QUERIES["corpus_ngram_topk"] = q_corpus_ngram_topk
-ORACLES["corpus_ngram_topk"] = ORACLE_CORPUS_NGRAM_TOPK
-
 
 
 # ---------------------------------------------------------------------------
@@ -910,9 +878,6 @@ SELECT doc_id, n_tokens, dup_token_ppm, top_bigram_ppm, dup_5gram_ppm,
 FROM ppm ORDER BY doc_id
 """
 
-QUERIES["text_repetition"] = q_text_repetition
-ORACLES["text_repetition"] = ORACLE_TEXT_REPETITION
-
 
 # ---------------------------------------------------------------------------
 # corpus profiling: exact nearest-rank token-length percentiles per
@@ -983,9 +948,6 @@ SELECT source,
 FROM ranked GROUP BY source ORDER BY source
 """
 
-QUERIES["corpus_length_percentiles"] = q_corpus_length_percentiles
-ORACLES["corpus_length_percentiles"] = ORACLE_CORPUS_LENGTH_PCTS
-
 
 # ---------------------------------------------------------------------------
 # JSONL shard round-trip: documents -> .jsonl part files -> documents,
@@ -1013,6 +975,3 @@ ORACLE_DOC_JSONL_ROUNDTRIP = """
 SELECT doc_id, text, lang, source, n_chars
 FROM documents ORDER BY doc_id
 """
-
-QUERIES["doc_jsonl_roundtrip"] = q_doc_jsonl_roundtrip
-ORACLES["doc_jsonl_roundtrip"] = ORACLE_DOC_JSONL_ROUNDTRIP

@@ -1,9 +1,9 @@
-"""DuckDB oracle SQL for the KG-construction queries.
+"""The DuckDB triple set that the KG-construction oracles build on.
 
-Each oracle independently re-derives the expected result in ANSI SQL
-from the same deterministic transcript CTE (transcripts.py) — the
-driver (and tests/test_pipeline.py) compare them value-for-value
-against the Spark DataFrame results.
+`_triples_select(n_conv)` independently re-derives the vectorized
+pipeline's DISTINCT triple set in ANSI SQL from the same deterministic
+transcript CTE (transcripts.py); the `oracle_kg_*` builders in kg_api.py
+query it, and registry.py pairs them with their Spark queries.
 """
 from __future__ import annotations
 
@@ -65,48 +65,3 @@ SELECT DISTINCT subj, pred, obj_value, obj_termtype, obj_datatype,
 FROM all_triples
 """
 
-
-def _mentions_cte(n_conv: int) -> str:
-    return f"""
-WITH transcripts AS ({transcripts_sql(n_conv, 'duckdb')}),
-raw_mentions AS (
-  SELECT unnest(regexp_extract_all(text, '{MENTION_RE_DUCK}', 1)) AS surface
-  FROM transcripts
-),
-entity_map AS (
-  SELECT surface,
-         '{ENT_NS}Entity' || regexp_extract(surface, '[0-9]+', 0)
-           AS canonical_iri,
-         cast(case when surface =
-                        'Entity' || regexp_extract(surface, '[0-9]+', 0)
-              then 1.0 else 0.9 end as double) AS link_score,
-         count(*) AS n_mentions
-  FROM raw_mentions GROUP BY surface
-)
-"""
-
-
-def kg_oracles(n_conv: int) -> dict[str, str]:
-    triples = _triples_select(n_conv)
-    return {
-        "kg_transcript_triples": triples,
-        "kg_transcript_triples_kernel": triples,
-        "kg_transcript_triples_grouped": triples,
-        "kg_entity_canonical_map":
-            _mentions_cte(n_conv) + "SELECT * FROM entity_map",
-        "kg_predicate_stats": f"""
-SELECT pred, count(*) AS n_triples, count(distinct subj) AS n_subjects
-FROM ({triples}) GROUP BY pred ORDER BY pred
-""",
-        "kg_conv_sizes": f"""
-WITH transcripts AS ({transcripts_sql(n_conv, 'duckdb')})
-SELECT conv_id, count(*) AS n_turns, max(turn_idx) AS max_turn_idx
-FROM transcripts GROUP BY conv_id ORDER BY conv_id
-""",
-        "kg_mentions_topk":
-            _mentions_cte(n_conv) + """
-SELECT canonical_iri, cast(sum(n_mentions) as bigint) AS n_mentions
-FROM entity_map GROUP BY canonical_iri
-ORDER BY n_mentions DESC, canonical_iri LIMIT 20
-""",
-    }

@@ -378,6 +378,3 @@ FROM o ORDER BY doc_id
 
 
 ORACLE_CORPUS_CURATE = oracle_corpus_curate()
-
-QUERIES = {"corpus_curate_pipeline": q_corpus_curate_pipeline}
-ORACLES = {"corpus_curate_pipeline": ORACLE_CORPUS_CURATE}

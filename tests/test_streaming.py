@@ -461,8 +461,13 @@ def test_stream_tool_transitions_matches_batch(spark, tmp_path):
     batch = {(r["tool_from"], r["tool_to"]): r["n_trans"]
              for r in tool_transitions(batch_in).collect()}
     assert agg == batch
-    ops = q.lastProgress["stateOperators"]
-    assert ops and ops[0]["numRowsTotal"] <= 3  # bounded per-conv state
+    # bounded per-conv state after EVERY stateful micro-batch, not only
+    # whichever one happened to run last
+    stateful = [p["stateOperators"][0] for p in q.recentProgress
+                if p["stateOperators"]]
+    assert stateful
+    assert all(op["numRowsTotal"] <= 3 for op in stateful), \
+        [op["numRowsTotal"] for op in stateful]
 
 
 def test_stream_tool_transitions_checkpoint_restart(spark, tmp_path):

@@ -88,65 +88,76 @@ def norm_rows(cols, rows):
                             for v in t))
 
 
-def main(argv):
+def make_spark():
+    """The session both gate tools run in: one local task slot per core."""
     from pyspark.sql import SparkSession
-    import __spark_entry__ as entry
+    return (SparkSession.builder.master(f"local[{os.cpu_count()}]")
+            .config("spark.sql.shuffle.partitions", "16")
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.session.timeZone", "UTC")
+            .config("spark.driver.memory", "8g")
+            .getOrCreate())
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.ui.enabled", "false")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
+
+def connect_duckdb(data_dir: str, tables) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
-    for t in TABLES:
+    for t in tables:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+            f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{t}.parquet'")
+    return con
 
+
+def compare_one(spark, con, qs, oracles, name, data_dir) -> dict:
+    """Run one query and its oracle over `data_dir`; `ok` iff columns,
+    type classes and the order-insensitive row multisets all match."""
+    df = qs[name](spark, data_dir)
+    cols = df.columns
+    stypes = {f.name: spark_type_class(f.dataType)
+              for f in df.schema.fields}
+    rows = [tuple(r) for r in df.collect()]
+    tbl = con.execute(oracles[name]).fetch_arrow_table()
+    ocols = tbl.schema.names
+    otypes = {f.name: arrow_type_class(f.type) for f in tbl.schema}
+    orows = [tuple(d[c] for c in ocols) for d in tbl.to_pylist()]
+    ok_cols = sorted(cols) == sorted(ocols)
+    ok_types = ok_cols and all(stypes[c] == otypes[c] for c in cols)
+    a = norm_rows(cols, rows)
+    b = norm_rows(ocols, orows)
+    out = {"name": name, "ok": ok_cols and ok_types and a == b,
+           "spark_rows": len(rows), "oracle_rows": len(orows)}
+    if out["ok"]:
+        return out
+    sa, sb = set(a), set(b)
+    out.update(extra=[repr(x)[:160] for x in list(sa - sb)[:2]],
+               missing=[repr(x)[:160] for x in list(sb - sa)[:2]])
+    if not ok_cols:
+        out["cols"] = {"spark": sorted(cols), "oracle": sorted(ocols)}
+    elif not ok_types:
+        out["types"] = {c: (stypes[c], otypes[c]) for c in cols
+                        if stypes[c] != otypes[c]}
+    return out
+
+
+def main(argv):
+    import __spark_entry__ as entry
+
+    spark = make_spark()
+    con = connect_duckdb(SF_DIR, TABLES)
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    selected = argv or list(qs)
     failures = []
-    for name in selected:
-        fn = qs[name]
+    for name in argv or list(qs):
         t0 = time.time()
-        df = fn(spark, SF_DIR)
-        cols = df.columns
-        stypes = {f.name: spark_type_class(f.dataType)
-                  for f in df.schema.fields}
-        rows = [tuple(r) for r in df.collect()]
-        t_spark = time.time() - t0
-        if name not in oracles:
-            print(f"  {name}: rows={len(rows)} (rows-only, no oracle) "
-                  f"[{t_spark:.1f}s]")
-            continue
-        t0 = time.time()
-        tbl = con.execute(oracles[name]).fetch_arrow_table()
-        ocols = tbl.schema.names
-        otypes = {f.name: arrow_type_class(f.type) for f in tbl.schema}
-        orows = [tuple(d[c] for c in ocols) for d in tbl.to_pylist()]
-        t_duck = time.time() - t0
-        ok_cols = sorted(cols) == sorted(ocols)
-        ok_types = ok_cols and all(stypes[c] == otypes[c] for c in cols)
-        a = norm_rows(cols, rows)
-        b = norm_rows(ocols, orows)
-        ok = ok_cols and ok_types and a == b
-        status = "OK" if ok else "FAIL"
-        print(f"  {name}: {status} spark_rows={len(rows)} "
-              f"oracle_rows={len(orows)} [{t_spark:.1f}s/{t_duck:.1f}s]")
-        if not ok:
+        r = compare_one(spark, con, qs, oracles, name, SF_DIR)
+        status = "OK" if r["ok"] else "FAIL"
+        print(f"  {name}: {status} spark_rows={r['spark_rows']} "
+              f"oracle_rows={r['oracle_rows']} [{time.time() - t0:.1f}s]")
+        if not r["ok"]:
             failures.append(name)
-            if not ok_cols:
-                print(f"    cols: spark={sorted(cols)} oracle={sorted(ocols)}")
-            elif not ok_types:
-                diff = {c: (stypes[c], otypes[c]) for c in cols
-                        if stypes[c] != otypes[c]}
-                print(f"    type classes (spark, oracle): {diff}")
-            else:
-                sa, sb = set(a), set(b)
-                print(f"    extra={list(sa - sb)[:3]}")
-                print(f"    missing={list(sb - sa)[:3]}")
+            for k in ("cols", "types", "extra", "missing"):
+                if k in r:
+                    print(f"    {k}: {r[k]}")
     spark.stop()
     if failures:
         print("FAILURES:", failures)

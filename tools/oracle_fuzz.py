@@ -7,8 +7,8 @@ strings, boundary-length documents, duplicate vectors, equal
 timestamps. This tool synthesizes a fresh ADVERSARIAL corpus per seed
 (documents + embeddings + events — inside the documented input
 contract: ascii text, non-null columns, nonzero vectors, unique ids)
-and runs the SAME type-strict compare over every gated query that
-reads those tables.
+and runs the SAME type-strict compare (check_oracles.compare_one) over
+every gated query in jsonld_js_spark/registry.py.
 
 Planted shapes per corpus (probabilistic per seed): exact-duplicate
 and near-duplicate docs, empty/whitespace-only text, single-char and
@@ -39,10 +39,7 @@ from datetime import datetime, timedelta
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb
-
-from check_oracles import (arrow_type_class, norm_rows,
-                           spark_type_class)
+from check_oracles import compare_one, connect_duckdb, make_spark
 
 # One work dir PER SEED: queries that .cache() internally are
 # plan-keyed — re-writing the same path would serve the previous
@@ -51,45 +48,9 @@ from check_oracles import (arrow_type_class, norm_rows,
 # keeps plan identities distinct.
 WORK_ROOT = "/root/repo/.local/oracle_fuzz"
 
-# gated queries whose ONLY inputs are documents/embeddings/events
-FUZZABLE = [
-    "dedup_exact", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_clusters", "dedup_clusters_star",
-    "dedup_keep_best", "dedup_cross_corpus", "dedup_substring",
-    "dedup_substring_scrub", "dedup_semantic", "dedup_embedding_cosine",
-    "ann_cosine_topk", "ann_lsh_topk", "ann_ivf_topk",
-    "text_tokens", "text_quality", "text_langid", "text_fingerprint",
-    "text_chunks", "text_pii_scrub", "text_tfidf_topk",
-    "text_bm25_topk",
-    "text_repetition", "text_classifier_score", "text_lm_score",
-    "corpus_quality_filter", "corpus_ngram_topk", "corpus_split",
-    "corpus_sample_stratified", "corpus_boilerplate_stats",
-    "corpus_line_dedup",
-    "corpus_contamination", "corpus_decontaminate",
-    "corpus_length_percentiles", "corpus_domain_mix",
-    "corpus_mix_upsample", "corpus_pack_sequences",
-    "corpus_token_budget_sample", "vocab_bpe_merges",
-    "vocab_bpe_tokenize", "doc_jsonl_roundtrip",
-    "sketch_hll_postings", "sketch_hll_by_source",
-    "sketch_countmin_tokens", "sketch_quantile_doclen",
-    "sketch_bloom_fingerprints",
-    "multimodal_decode", "multimodal_decode_real",
-    "multimodal_resize",
-    "multimodal_frame_sample", "multimodal_dedup",
-    "multimodal_neardup", "multimodal_audio_features",
-    "multimodal_phash", "multimodal_phash_neardup",
-    "events_sessionize", "events_funnel", "events_retention",
-    "events_asof_join", "events_anomaly",
-    "jsonld_props_triples", "jsonld_props_bnode_triples",
-    "rel_pricing_summary", "rel_top_orders", "rel_pricing_rollup",
-    "corpus_curate_pipeline", "events_asof_join_salted",
-    "vocab_bpe_tokenize_scale", "corpus_pack_sequences_bpe",
-    "corpus_token_budget_sample_bpe", "corpus_domain_mix_bpe",
-    "corpus_mix_upsample_bpe", "text_chunks_bpe",
-    "sketch_oph_sources", "corpus_sample_weighted",
-]
-
-# kg_* queries read the deterministic transcripts generator (plus the
+# Every gated query is fuzzed. The data-pipeline operators read only
+# the synthesized documents/embeddings/events/TPC-H tables. The kg_*
+# queries read the deterministic transcripts generator (plus the
 # customer/nation/region dims and events). Their input is randomized
 # along the axes the generator contract allows: corpus SIZE (n_conv —
 # varies hot-conv count, entity-id mass, empty-tail groups; the work
@@ -97,27 +58,9 @@ FUZZABLE = [
 # oracle CTE is rebuilt per seed via _oracle_sql(n_conv)) and fully
 # randomized dim tables (duplicate names, dangling foreign keys,
 # negative balances).
-KG_FUZZABLE = [
-    "kg_transcript_triples", "kg_transcript_triples_kernel",
-    "kg_transcript_triples_grouped",
-    "kg_entity_canonical_map", "kg_predicate_stats", "kg_conv_sizes",
-    "kg_conv_window", "kg_mentions_topk", "kg_customer_graph",
-    "kg_events_graph", "kg_merge_sources", "kg_flatten_nodes",
-    "kg_frame_turns", "kg_frame_kernel_path", "kg_compact_conversations",
-    "kg_fromrdf_nodemap", "kg_fromrdf_roundtrip", "kg_nquads",
-    "kg_nquads_source_roundtrip", "kg_incremental_triples",
-    "kg_entity_comention", "kg_degree_stats", "kg_khop",
-    "kg_triangle_count", "kg_label_propagation", "kg_neighbor_jaccard",
-    "kg_sameas_closure", "kg_pagerank", "kg_random_walks",
-    "kg_skipgram_pairs", "kg_kcore",
-    "kg_neighborhood_growth", "kg_anf_registers", "kg_ppr",
-    "kg_link_prediction", "kg_entity_timeline", "kg_cooccur_lift",
-    "kg_tool_transitions", "kg_relation_timeline",
-    "kg_conv_profile", "kg_components",
-    "kg_literal_stats", "kg_predicate_cooccur",
-    "kg_mention_contexts", "kg_degree_distribution",
-    "kg_entity_role_affinity", "kg_entity_aliases",
-]
+FUZZ_TABLES = ("documents", "embeddings", "events", "orders", "lineitem",
+               "customer", "nation", "region")
+
 
 def _vocab(rng):
     # the BM25 query terms ride every vocab so text_bm25_topk fuzzes
@@ -340,30 +283,6 @@ def write_tables(rng, work):
     return len(docs), len(embs), len(evs)
 
 
-def compare_one(spark, con, qs, oracles, name, work):
-    df = qs[name](spark, work)
-    cols = df.columns
-    stypes = {f.name: spark_type_class(f.dataType)
-              for f in df.schema.fields}
-    rows = [tuple(r) for r in df.collect()]
-    tbl = con.execute(oracles[name]).fetch_arrow_table()
-    ocols = tbl.schema.names
-    otypes = {f.name: arrow_type_class(f.type) for f in tbl.schema}
-    orows = [tuple(d[c] for c in ocols) for d in tbl.to_pylist()]
-    ok_cols = sorted(cols) == sorted(ocols)
-    ok_types = ok_cols and all(stypes[c] == otypes[c] for c in cols)
-    a = norm_rows(cols, rows)
-    b = norm_rows(ocols, orows)
-    if ok_cols and ok_types and a == b:
-        return None
-    sa, sb = set(a), set(b)
-    return {"name": name, "spark_rows": len(rows),
-            "oracle_rows": len(orows), "ok_cols": ok_cols,
-            "ok_types": ok_types,
-            "extra": [repr(x)[:160] for x in list(sa - sb)[:2]],
-            "missing": [repr(x)[:160] for x in list(sb - sa)[:2]]}
-
-
 def main(argv):
     n_seeds = int(argv[0]) if argv else 5
     seed0 = int(argv[1]) if len(argv) > 1 else 1
@@ -374,20 +293,15 @@ def main(argv):
     if "--only" in argv:
         only = argv[argv.index("--only") + 1].split(",")
 
-    from pyspark.sql import SparkSession
     import __spark_entry__ as entry
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.ui.enabled", "false")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
+    spark = make_spark()
     qs = entry.queries()
     bad = []
-    pool = FUZZABLE + KG_FUZZABLE
+    pool = list(qs)
     if only:
-        unknown = [n for n in only if n not in pool]
-        assert not unknown, f"not fuzzable: {unknown}"
+        unknown = [n for n in only if n not in qs]
+        if unknown:
+            sys.exit(f"not gated: {unknown}")
         pool = only
     for s in range(seed0, seed0 + n_seeds):
         rng = random.Random(s)
@@ -403,12 +317,7 @@ def main(argv):
         oracles = entry._oracle_sql(n_conv)
         spark.catalog.clearCache()
         nd, ne, nv = write_tables(rng, work)
-        con = duckdb.connect()
-        con.execute("SET TimeZone='UTC'")
-        for t in ("documents", "embeddings", "events", "orders",
-                  "lineitem", "customer", "nation", "region"):
-            con.execute(f"CREATE VIEW {t} AS "
-                        f"SELECT * FROM '{work}/{t}.parquet'")
+        con = connect_duckdb(work, FUZZ_TABLES)
         names = (rng.sample(pool, subset) if subset
                  else list(pool))
         t0 = time.time()
@@ -418,7 +327,7 @@ def main(argv):
                 r = compare_one(spark, con, qs, oracles, name, work)
             except Exception as ex:  # noqa: BLE001 — report, keep going
                 r = {"name": name, "error": repr(ex)[:300]}
-            if r is not None:
+            if not r.get("ok"):
                 fails.append(r)
         con.close()
         shutil.rmtree(f"{WORK_ROOT}/seed{s}", ignore_errors=True)
