@@ -6,7 +6,7 @@ call here, and the distributed counterpart.
 
 | jsonld.js (reference)       | this engine (single-node)          | distributed                         |
 |-----------------------------|------------------------------------|-------------------------------------|
-| jsonld.expand(doc)          | kernel.expand(doc)                 | specialization in pipeline/vectorized.py; generic via mapInPandas |
+| jsonld.expand(doc)          | kernel.expand(doc)                 | specialization in pipeline/vectorized.py; generic via mapInArrow |
 | jsonld.compact(doc, ctx)    | kernel.compact(doc, ctx)           | kg_api.q_kg_compact_conversations   |
 | jsonld.flatten(doc, ctx)    | kernel.flatten(doc, ctx)           | kg_api.q_kg_flatten_nodes           |
 | jsonld.frame(doc, frame)    | kernel.frame(doc, frame)           | frame_spark (semi-joins) / kg_frame_kernel_path |

@@ -19,8 +19,8 @@ import re
 from typing import Callable, Optional
 
 from .util import (
-    JsonLdError, KEYWORDS, is_keyword, is_keyword_form, is_absolute_iri,
-    prepend_base, parse_iri,
+    JsonLdError, KEYWORDS, MEMO_CAP, is_keyword, is_keyword_form,
+    is_absolute_iri, prepend_base, parse_iri,
 )
 
 CONTAINER_KEYWORDS = frozenset(
@@ -804,6 +804,10 @@ def expand_iri(active_ctx: dict, value, *, vocab: bool = False,
         hit = memo.get(value, _MISS)
         if hit is not _MISS:
             return hit
+        # every miss inserts below; capped like util._ABS_IRI_CACHE,
+        # because a shared worker context sees every conversation's @ids
+        if len(memo) > MEMO_CAP:
+            memo.clear()
 
     if is_keyword_form(value):
         if memo is not None:

@@ -25,7 +25,7 @@ from .util import (
     XSD_BOOLEAN, XSD_INTEGER, XSD_DOUBLE, canonical_double,
     canonical_integer, is_absolute_iri, is_blank_node_id, is_keyword,
     is_value, is_list, is_double, is_integer_number, jcs_canonicalize,
-    js_parse_float, parse_json,
+    js_parse_float, parse_json, MEMO_CAP,
 )
 
 I18N_NS = "https://www.w3.org/ns/i18n#"
@@ -53,8 +53,7 @@ def to_rdf(expanded, options: dict | None = None) -> list[tuple]:
 
 # predicate classification memo (pure per string): 0 = relative IRI
 # (skipped), 1 = named, 2 = blank node (skipped unless generalized
-# RDF). Capped like _ABS_IRI_CACHE so a unique-predicate stream can't
-# grow a worker's memory.
+# RDF). Capped at MEMO_CAP.
 _PRED_CLASS: dict = {}
 
 
@@ -102,7 +101,7 @@ def _graph_to_rdf(dataset, graph: dict, graph_term: str, issuer, options):
                     cls = 1
                 else:
                     cls = 0
-                if len(_PRED_CLASS) > 65536:
+                if len(_PRED_CLASS) > MEMO_CAP:
                     _PRED_CLASS.clear()
                 _PRED_CLASS[property_out] = cls
             # relative-IRI predicates skipped (ref lib/toRdf.js:119-121);

@@ -90,19 +90,24 @@ def is_keyword_form(value) -> bool:
     return isinstance(value, str) and bool(_KEYWORD_FORM_RE.match(value))
 
 
+# Entry cap shared by the kernel's per-process string memos
+# (_ABS_IRI_CACHE, rdf._PRED_CLASS, the contexts' _iri_memo): a memo is
+# cleared before an insert once it holds more than this, so a stream of
+# unique IRIs cannot grow a worker's memory with the data.
+MEMO_CAP = 65536
+
 _ABS_IRI_CACHE: dict = {}
 
 
 def is_absolute_iri(value) -> bool:
     """Pure predicate of the string — memoized (expand re-checks the
     same predicate/type IRIs per key and toRDF per node; the regex is
-    ~40% of the check's cost at transcript scale). Capped: cleared at
-    64k entries so a pathological unique-IRI stream can't grow a
-    worker's memory."""
+    ~40% of the check's cost at transcript scale). Capped at
+    MEMO_CAP."""
     if value.__class__ is str:
         hit = _ABS_IRI_CACHE.get(value)
         if hit is None:
-            if len(_ABS_IRI_CACHE) > 65536:
+            if len(_ABS_IRI_CACHE) > MEMO_CAP:
                 _ABS_IRI_CACHE.clear()
             hit = _ABS_IRI_CACHE[value] = bool(_ABSOLUTE_IRI_RE.match(value))
         return hit

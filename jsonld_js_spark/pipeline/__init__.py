@@ -8,7 +8,7 @@ Two parallel implementations of the same semantics:
   codegen, no Python in the per-row path.
 - `kernel_path` — the general path: per-conversation JSON-LD documents
   run through the pure-Python kernel inside Arrow-batched
-  `applyInPandas`. Handles arbitrary documents/contexts; also the
+  `mapInArrow`. Handles arbitrary documents/contexts; also the
   differential oracle for the vectorized path.
 """
 from .vectorized import (  # noqa: F401

@@ -1,12 +1,12 @@
 """General-path transcript→triples: per-conversation JSON-LD documents
-through the pure-Python kernel inside Arrow-batched mapInPandas.
+through the pure-Python kernel inside Arrow-batched mapInArrow.
 
 This is the path that handles ARBITRARY JSON-LD (any context, nested
 nodes, lists, named graphs) — the fixed-shape hot path in
 `vectorized.py` is its specialization. It doubles as the differential
 oracle: tests assert both paths emit identical triple sets.
 
-Why mapInPandas and not applyInPandas: grouping is still by conv_id
+Why mapInArrow and not applyInPandas: grouping is still by conv_id
 (we repartition + sortWithinPartitions so each conversation's turns are
 contiguous in partition order), but one Python call processes a whole
 Arrow batch (~10k rows ≈ hundreds of conversations) instead of paying
@@ -14,29 +14,35 @@ per-group invocation overhead for median-10-turn conversations. A
 conversation larger than one Arrow batch is handled by carrying the
 partial tail between batches — partition-local, deterministic.
 
-Mention detection + entity-link scoring run vectorized on the pandas
-batch (Series.str ops over Arrow columns — no per-row Python), per the
-north_star contract; only the JSON-LD tree recursion itself is
-per-conversation Python, which is exactly the semantics the reference
-defines recursively (ref lib/expand.js:68, lib/nodeMap.js:47).
+Per-row prep (the lexical timestamp, mention detection) runs in the
+JVM, in a Project under the Python node; the batch reaches Python as
+Arrow columns turned into plain lists, with no pandas frame at either
+end. Only the JSON-LD tree recursion itself is per-conversation Python,
+which is exactly the semantics the reference defines recursively (ref
+lib/expand.js:68, lib/nodeMap.js:47). Output leaves in record batches
+of about CHUNK_QUADS quads, so a worker's memory does not grow with the
+input batch size.
 """
 from __future__ import annotations
 
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
-
-import re
 
 from ..kernel import to_rdf
 from ..vocab import (
     ENT_NS, MENTION_DIGITS_RE, TRANSCRIPT_CONTEXT, conv_iri, turn_iri,
 )
 
-_MENTION_DIGITS_RE = re.compile(MENTION_DIGITS_RE)
 _ENT_PREFIX = ENT_NS + "Entity"
+
+# quads pending in a Python worker before they are yielded as one
+# output record batch
+CHUNK_QUADS = 8192
 
 TRIPLE_SCHEMA = StructType([
     StructField("subj", StringType()),
@@ -47,6 +53,8 @@ TRIPLE_SCHEMA = StructType([
     StructField("obj_language", StringType()),
     StructField("graph", StringType()),
 ])
+_QUAD_TYPE = pa.struct([(name, pa.string())
+                        for name in TRIPLE_SCHEMA.fieldNames()])
 
 
 def build_conversation_doc(conv_id: str, turns: list[dict]) -> dict:
@@ -92,67 +100,17 @@ def _shared_active_ctx():
     return _SHARED_CTX
 
 
-def _emit_conversations(pdf: pd.DataFrame, doc_transform=None,
-                        quad_filter=None,
-                        expansion_map=None) -> pd.DataFrame:
-    """Vectorized prep + per-conversation kernel run over one batch.
-
-    Rows arrive sorted by (conv_id, turn_idx) (sortWithinPartitions
-    upstream), so conversations are contiguous slices — iterate plain
-    Python lists (pandas to_dict/itertuples overhead is ~40% of batch
-    time at this grain).
-    """
-    # batched mention detection + entity linking (vectorized str ops;
-    # a NULL text has no mentions). MENTION_DIGITS_RE matches exactly
-    # the MENTION_RE surface but captures only the digit tail, so the
-    # per-mention char-level digit scrape (a genexpr per character —
-    # measured ~15% of batch prep) collapses to one string concat;
-    # numpy's ISO datetime writer replaces strftime's per-row format
-    # interpreter (same second-truncated lexical form, ~6x faster).
-    mention_iris = pdf["text"].fillna("").str.findall(
-        _MENTION_DIGITS_RE).apply(lambda ms: [_ENT_PREFIX + m for m in ms])
-    import numpy as np
-    ts_lex = np.char.add(
-        np.datetime_as_string(pdf["ts"].to_numpy(dtype="datetime64[s]"),
-                              unit="s"), "Z")
-
-    conv_ids = pdf["conv_id"].tolist()
-    cols = (pdf["turn_idx"].tolist(), pdf["role"].tolist(),
-            pdf["text"].tolist(), pdf["tool"].tolist(),
-            ts_lex.tolist(), mention_iris.tolist())
-
-    options = {"activeCtx": _shared_active_ctx(), "skipCopy": True,
-               "processingMode": "json-ld-1.1"}
-    if expansion_map is not None:
-        # per-event callback inside kernel expansion
-        # (ref lib/jsonld.js:109-117); NOTE: disables the IRI memo on
-        # this worker's shared context — use doc_transform/quad_filter
-        # for hot-path rewrites and reserve this for event-level hooks
-        options["expansionMap"] = expansion_map
-    out: list[tuple] = []
-    n = len(conv_ids)
-    start = 0
-    while start < n:
-        end = start
-        cid = conv_ids[start]
-        while end < n and conv_ids[end] == cid:
-            end += 1
-        turns = [
-            {"turn_idx": cols[0][k], "role": cols[1][k],
-             "text": cols[2][k], "tool": cols[3][k],
-             "ts_lex": cols[4][k], "mention_iris": cols[5][k]}
-            for k in range(start, end)]
-        doc = build_conversation_doc(cid, turns)
-        del doc["@context"]  # context pre-processed (activeCtx)
-        if doc_transform is not None:
-            doc = doc_transform(doc)
-        # set-semantics dedup is per-node in the node map; emit raw
-        quads = to_rdf(doc, options)
-        if quad_filter is not None:
-            quads = [q for q in quads if quad_filter(q)]
-        out.extend(quads)
-        start = end
-    return pd.DataFrame(out, columns=TRIPLE_SCHEMA.fieldNames())
+def _last_group_start(keys) -> int:
+    """Index where the run of rows sharing the last key begins (0 for
+    no rows). Equal keys are contiguous (upstream sort), so the scan
+    stops at the first different key."""
+    i = len(keys)
+    if i:
+        last = keys[i - 1]
+        i -= 1
+        while i and keys[i - 1] == last:
+            i -= 1
+    return i
 
 
 def batched_by_key(key: str, emit):
@@ -172,28 +130,101 @@ def batched_by_key(key: str, emit):
         for pdf in batches:
             if tail is not None:
                 pdf = pd.concat([tail, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                tail = None
-                continue
-            last = pdf[key].iloc[-1]
-            head = pdf[pdf[key] != last]
-            tail = pdf[pdf[key] == last]
-            if len(head):
-                yield emit(head)
-        if tail is not None and len(tail):
+            cut = _last_group_start(pdf[key].to_numpy())
+            if cut:
+                yield emit(pdf.iloc[:cut])
+            tail = pdf.iloc[cut:] if len(pdf) else None
+        if tail is not None:
             yield emit(tail)
     return run
 
 
-def _batched(doc_transform=None, quad_filter=None, expansion_map=None):
-    """Build the mapInPandas function, capturing optional hooks (the
+def _whole_conversations(batches: Iterator[pa.RecordBatch]):
+    """Yield `(columns, end)` per Arrow batch, the columns as Python
+    lists: rows [0, end) are whole conversations. The partial last
+    conversation is carried into the next batch, and yielded whole
+    after the partition's last batch (partition-local, deterministic;
+    conversations are contiguous, as in batched_by_key)."""
+    carry = None
+    for batch in batches:
+        # via numpy: Array.to_pylist boxes every value in a scalar
+        # object first, ~10x slower on these string and int columns
+        cols = [c.to_numpy(zero_copy_only=False).tolist()
+                for c in batch.columns]
+        if carry is not None:
+            cols = [old + new for old, new in zip(carry, cols)]
+        cut = _last_group_start(cols[0])
+        yield cols, cut
+        carry = [c[cut:] for c in cols]
+    if carry is not None and carry[0]:
+        yield carry, len(carry[0])
+
+
+def _conversation_quads(cols, end: int, options: dict,
+                        doc_transform, quad_filter):
+    """Kernel quads of each whole conversation in rows [0, end), one
+    list per conversation. Rows are sorted by (conv_id, turn_idx), so
+    a conversation is a contiguous slice of the column lists."""
+    conv_ids, turn_idx, role, text, tool, ts_lex, mention_tails = cols
+    start = 0
+    while start < end:
+        cid = conv_ids[start]
+        stop = start + 1
+        while stop < end and conv_ids[stop] == cid:
+            stop += 1
+        turns = [
+            {"turn_idx": turn_idx[k], "role": role[k], "text": text[k],
+             "tool": tool[k], "ts_lex": ts_lex[k],
+             "mention_iris": [_ENT_PREFIX + d
+                              for d in (mention_tails[k] or "").split()]}
+            for k in range(start, stop)]
+        doc = build_conversation_doc(cid, turns)
+        del doc["@context"]  # context pre-processed (activeCtx)
+        if doc_transform is not None:
+            doc = doc_transform(doc)
+        # set-semantics dedup is per-node in the node map; emit raw
+        quads = to_rdf(doc, options)
+        if quad_filter is not None:
+            quads = [q for q in quads if quad_filter(q)]
+        yield quads
+        start = stop
+
+
+def _quad_batch(quads: list[tuple]) -> pa.RecordBatch:
+    return pa.RecordBatch.from_struct_array(pa.array(quads, type=_QUAD_TYPE))
+
+
+def _kernel_batches(doc_transform=None, quad_filter=None,
+                    expansion_map=None):
+    """Build the mapInArrow function, capturing optional hooks (the
     engine's counterpart of the reference's expansionMap/compactionMap
     callback surface, ref lib/jsonld.js:109-117: arbitrary Python
-    callables ride the UDF closure to the executors)."""
-    return batched_by_key(
-        "conv_id",
-        lambda pdf: _emit_conversations(pdf, doc_transform, quad_filter,
-                                        expansion_map))
+    callables ride the UDF closure to the executors).
+
+    Output is bounded: after a conversation, the pending quads are
+    yielded as one record batch once there are at least CHUNK_QUADS,
+    so a batch holds at most CHUNK_QUADS - 1 plus one conversation's
+    quads, whatever the input batch size."""
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        options = {"activeCtx": _shared_active_ctx(), "skipCopy": True,
+                   "processingMode": "json-ld-1.1"}
+        if expansion_map is not None:
+            # per-event callback inside kernel expansion
+            # (ref lib/jsonld.js:109-117); NOTE: disables the IRI memo on
+            # this worker's shared context — use doc_transform/quad_filter
+            # for hot-path rewrites and reserve this for event-level hooks
+            options["expansionMap"] = expansion_map
+        pending: list[tuple] = []
+        for cols, end in _whole_conversations(batches):
+            for quads in _conversation_quads(cols, end, options,
+                                             doc_transform, quad_filter):
+                pending.extend(quads)
+                if len(pending) >= CHUNK_QUADS:
+                    yield _quad_batch(pending)
+                    pending = []
+        if pending:
+            yield _quad_batch(pending)
+    return run
 
 
 def kernel_transcript_triples(transcripts: DataFrame,
@@ -235,8 +266,19 @@ def kernel_transcript_triples(transcripts: DataFrame,
         part = (transcripts
                 .repartition(n, "conv_id")
                 .sortWithinPartitions("conv_id", "turn_idx"))
-    triples = part.mapInPandas(
-        _batched(doc_transform, quad_filter, expansion_map),
+    # per-row prep runs in the JVM, in a Project directly under the
+    # Python node: the vectorized path's lexical timestamp, and the
+    # mention digit tails (the canonical entity is "Entity" + tail; a
+    # NULL text has no mentions), space-joined so that every column
+    # reaching Python is flat. Column order is what
+    # _conversation_quads unpacks.
+    rows = part.select(
+        "conv_id", "turn_idx", "role", "text", "tool",
+        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts_lex"),
+        F.array_join(F.regexp_extract_all("text", F.lit(MENTION_DIGITS_RE),
+                                          1), " ").alias("mention_tails"))
+    triples = rows.mapInArrow(
+        _kernel_batches(doc_transform, quad_filter, expansion_map),
         schema=TRIPLE_SCHEMA)
     if dedup:
         triples = triples.dropDuplicates(TRIPLE_SCHEMA.fieldNames())

@@ -271,6 +271,110 @@ def test_kernel_path_conversation_spanning_batches(spark):
                 "spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+def _turn(idx, text=None, tool=None, tails=()):
+    return {"turn_idx": idx, "role": "user" if idx % 2 else "assistant",
+            "text": text, "tool": tool, "ts_lex": "2026-01-01T00:00:00Z",
+            "mention_tails": None if text is None else " ".join(tails)}
+
+
+def _kernel_doc(conv_id, turns):
+    from jsonld_js_spark.pipeline.kernel_path import build_conversation_doc
+    from jsonld_js_spark.vocab import ENT_NS
+    return build_conversation_doc(conv_id, [
+        dict(t, mention_iris=[ENT_NS + "Entity" + d
+                              for d in (t["mention_tails"] or "").split()])
+        for t in turns])
+
+
+def test_kernel_arrow_loop_chunks_and_carries_tails():
+    """The mapInArrow function over hand-built 100-row batches (no
+    Spark): a 3,000-turn conversation straddling 30 batches comes out
+    whole, every output batch holds at most CHUNK_QUADS plus one
+    conversation's quads, and the output rows equal to_rdf over each
+    whole conversation, in order."""
+    import pyarrow as pa
+
+    from jsonld_js_spark.kernel import to_rdf
+    from jsonld_js_spark.pipeline.kernel_path import (
+        CHUNK_QUADS, _kernel_batches,
+    )
+    from jsonld_js_spark.vocab import RDF_TYPE
+
+    convs = []
+    for i in range(400):
+        convs.append((f"conv-{i:04d}", [
+            _turn(k, text=None if (i + k) % 11 == 0 else f"turn {k}",
+                  tool="search" if k == 2 else None,
+                  tails=[str(i % 5), str(k)] if k % 3 == 0 else ())
+            for k in range(5)]))
+        if i == 150:
+            convs.append(("conv-0150-big", [
+                _turn(k, text=f"about [[Entity{k % 7}]]", tails=[str(k % 7)])
+                for k in range(3000)]))
+    cols = ("conv_id", "turn_idx", "role", "text", "tool", "ts_lex",
+            "mention_tails")
+    schema = pa.schema([
+        ("conv_id", pa.string()), ("turn_idx", pa.int32()),
+        ("role", pa.string()), ("text", pa.string()),
+        ("tool", pa.string()), ("ts_lex", pa.string()),
+        ("mention_tails", pa.string())])
+    rows = [dict(t, conv_id=cid) for cid, turns in convs for t in turns]
+    batches = [pa.RecordBatch.from_pylist(
+        [{c: r[c] for c in cols} for r in rows[i:i + 100]], schema=schema)
+        for i in range(0, len(rows), 100)]
+
+    out = list(_kernel_batches()(iter(batches)))
+
+    want = [to_rdf(_kernel_doc(cid, turns)) for cid, turns in convs]
+    assert len(out) > 2
+    # each batch ends where a conversation ends, and holds fewer than
+    # CHUNK_QUADS quads before that last conversation
+    last_conv_at, n = {}, 0
+    for quads in want:
+        n += len(quads)
+        last_conv_at[n] = len(quads)
+    n = 0
+    for b in out:
+        n += b.num_rows
+        assert b.num_rows - last_conv_at[n] < CHUNK_QUADS
+    got = [tuple(r.values()) for b in out for r in b.to_pylist()]
+    assert got == [q for quads in want for q in quads]
+    conv_types = [q for q in got if q[1] == RDF_TYPE
+                  and q[2] == TR + "Conversation"]
+    assert sorted(q[0] for q in conv_types) == sorted(
+        "http://example.org/conv/" + cid for cid, _ in convs)
+
+
+def test_shared_context_iri_memo_is_capped():
+    """More unique @ids than MEMO_CAP through the worker-shared context:
+    every IRI memo dict stays bounded, and each conversation's quads
+    equal a run whose IRI memo starts empty (the memo is a pure
+    optimisation)."""
+    from jsonld_js_spark.kernel import to_rdf
+    from jsonld_js_spark.kernel.context import (
+        initial_context, process_context,
+    )
+    from jsonld_js_spark.kernel.util import MEMO_CAP
+    from jsonld_js_spark.pipeline.kernel_path import _shared_active_ctx
+    from jsonld_js_spark.vocab import TRANSCRIPT_CONTEXT
+
+    opts = {"processingMode": "json-ld-1.1", "base": None}
+    shared = _shared_active_ctx()
+    fresh = process_context(initial_context(opts), TRANSCRIPT_CONTEXT, opts)
+    biggest = 0
+    for i in range(MEMO_CAP + 100):
+        docs = []
+        for _ in range(2):
+            doc = _kernel_doc(f"memo-{i:06d}", [_turn(0)])
+            del doc["@context"]
+            docs.append(doc)
+        got = to_rdf(docs[0], {"activeCtx": shared, "skipCopy": True})
+        biggest = max(biggest, *map(len, shared["_iri_memo"]))
+        fresh.pop("_iri_memo", None)
+        assert got == to_rdf(docs[1], {"activeCtx": fresh, "skipCopy": True})
+    assert MEMO_CAP < biggest <= MEMO_CAP + 1
+
+
 def test_salted_aggregation_splits_hot_keys(spark, transcripts):
     """The two-phase entity count's first phase keys on
     (surface, partition-salt): the hottest entity must be split across
@@ -396,7 +500,10 @@ def test_grouped_kernel_plan_is_shuffle_free(spark):
     """The layout-aware kernel path (assume_grouped=True, the registry's
     kg_transcript_triples_grouped) must plan ZERO Exchange: one scan
     straight into the Arrow-batched kernel stage — the production plan
-    over an Iceberg table bucketed/sorted by (conv_id, turn_idx)."""
+    over an Iceberg table bucketed/sorted by (conv_id, turn_idx).
+    Arrow in and out (MapInArrow, no pandas node), with the per-row
+    prep (lexical timestamp, mention tails) evaluated in the JVM below
+    the Python node."""
     import tempfile
     with tempfile.TemporaryDirectory() as d:
         transcripts_df(spark, n_conv=20).write \
@@ -406,3 +513,11 @@ def test_grouped_kernel_plan_is_shuffle_free(spark):
             ._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
         assert plan.count("FileScan") == 1
+        assert "MapInPandas" not in plan
+        lines = plan.splitlines()
+        python_node = [i for i, ln in enumerate(lines) if "MapInArrow" in ln]
+        assert len(python_node) == 1, plan
+        below = "\n".join(lines[python_node[0] + 1:])
+        for prep in ("date_format(", "regexp_extract_all("):
+            assert prep not in lines[python_node[0]], plan
+            assert prep in below, plan
