@@ -4,9 +4,11 @@ mapInPandas) applying K >= 2000 merge rules — the regime where the
 column-expression applier cannot even be planned (2K nested replace
 calls in one expression).
 
-Corpus: the same closed-form two-tier synthesis as jobs/soak_bpe.py
-(constant 5,000-word vocabulary, exactly computable frequencies) at N
-and 4N documents. Rules: K compositional merges synthesized
+Corpus: a closed-form two-tier synthesis (doc d holds K=40 words;
+word id (d*K + j) % 5000, folded to the 50-word hot head on every third
+position; words are base-4 'abcd' encodings), so the vocabulary is a
+constant 5,000 words with exactly computable frequencies, at N and 4N
+documents. Rules: K compositional merges synthesized
 deterministically over the corpus alphabet ('abcdx' + '</w>'), so the
 chain applies densely (every word is hit by many rules) — rules are
 NOT learned here (learning scale is soaked separately); application
@@ -34,13 +36,84 @@ import os
 import random
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F
 
-from jobs.soak_bpe import (K, _jvm_peak_rss_gib, closed_form_counts,
-                           encode, ref_tokenize_word, synth_docs, wid)
+K = 40
+VOCAB = 5000
+HOT = 50
+
+
+def encode(i: int) -> str:
+    s = ""
+    for _ in range(7):
+        s = "abcd"[i % 4] + s
+        i //= 4
+    return "x" + s
+
+
+def wid(d: int, j: int) -> int:
+    w = (d * K + j) % VOCAB
+    return w % HOT if j % 3 == 0 else w
+
+
+def closed_form_counts(n_docs: int) -> Counter:
+    c = Counter()
+    for d in range(n_docs):
+        base = d * K
+        for j in range(0, K, 3):
+            c[(base + j) % VOCAB % HOT] += 1
+        for j in range(K):
+            if j % 3:
+                c[(base + j) % VOCAB] += 1
+    return Counter({encode(i): n for i, n in c.items()})
+
+
+def ref_tokenize_word(word: str, merges) -> int:
+    s = " " + " ".join(word) + " </w> "
+    for _, a, b, _c in merges:
+        pat, rep = f" {a} {b} ", f" {a}{b} "
+        s = s.replace(pat, rep).replace(pat, rep)
+    return len(s.strip().split(" "))
+
+
+def synth_docs(spark, n_docs: int):
+    vdf = spark.createDataFrame(
+        [(i, encode(i)) for i in range(VOCAB)], "wid long, word string")
+    pos = (spark.range(n_docs).select(F.col("id").alias("doc_id"))
+           .select("doc_id", F.explode(
+               F.sequence(F.lit(0), F.lit(K - 1))).alias("j")))
+    pos = pos.withColumn(
+        "wid",
+        F.when(F.col("j") % 3 == 0,
+               (F.col("doc_id") * K + F.col("j")) % VOCAB % HOT)
+        .otherwise((F.col("doc_id") * K + F.col("j")) % VOCAB))
+    return (pos.join(F.broadcast(vdf), "wid")
+            .groupBy("doc_id")
+            .agg(F.concat_ws(" ", F.transform(
+                F.sort_array(F.collect_list(F.struct("j", "word"))),
+                lambda s: s["word"])).alias("text")))
+
+
+def _jvm_peak_rss_gib():
+    best = 0
+    for pid in os.listdir("/proc"):
+        if not pid.isdigit():
+            continue
+        try:
+            with open(f"/proc/{pid}/comm") as f:
+                if "java" not in f.read():
+                    continue
+            with open(f"/proc/{pid}/status") as f:
+                for line in f:
+                    if line.startswith("VmHWM:"):
+                        best = max(best, int(line.split()[1]))
+        except OSError:
+            continue
+    return round(best / (1024 * 1024), 2)
 
 
 def synth_rules(k: int, seed: int = 7, max_sym_len: int = 10):

@@ -12,6 +12,7 @@ from .oracles import MENTION_RE_DUCK
 from .pipeline import (
     entity_canonical_map, kernel_transcript_triples, transcript_triples,
 )
+from .supersteps import truncate
 from .transcripts import transcripts_df
 from .vocab import (
     ENT_NS, MENTION_RE, RDF_TYPE, TR, XSD_DATETIME, XSD_STRING,
@@ -909,10 +910,8 @@ def q_kg_pagerank(spark, sf_dir):
 
     Scale shape: each iteration is one edges⋈ranks shuffle on the src
     key + one partial-aggregated groupBy(dst) — the same co-located
-    join every Pregel-style engine runs; ranks are 2 longs/node. Five
-    iterations keep lineage shallow locally; at 100 TB checkpoint the
-    rank table every few rounds exactly like connected_components
-    (operators/dedup.py:_reliable_checkpoint). Top-k is a TakeOrdered."""
+    join every Pregel-style engine runs; ranks are 2 longs/node. Top-k
+    is a TakeOrdered."""
     edges = _named_edges(spark, sf_dir).cache()
     return (pagerank(edges).orderBy(F.desc("rank"), "node").limit(50))
 
@@ -966,27 +965,17 @@ def _rank_supersteps(edges, seeds, iters, tol_ppm=None):
     superstep plan; the broadcast stages materialize eagerly outside
     the cached-plan reuse and re-derive the full nested lineage each
     round (measured 35.7 s vs 3.4 s at sf0.01). The per-round collect
-    also materializes the previous rank checkpoint, which truncates the
-    effective lineage exactly like the eager-count pattern. Still
+    also materializes the previous round's truncated rank state. Still
     exact int64, still oracle-expressible as an unrolled CTE."""
-    # localCheckpoint (not cache) on the loop-invariant frames AND the
-    # per-superstep rank state: cache substitutes at physical planning
-    # but Catalyst still re-ANALYZES the full logical lineage of every
-    # superstep plan — with the corpus-scale triple build at the root
-    # that re-analysis dominates (the kg_skipgram_pairs lesson).
-    # Truncating the plan itself cut sf0.1 wall 14.4 → 11.4 s warm /
-    # 30.9 → 25.7 s cold. At 100 TB swap for _reliable_checkpoint
-    # every few rounds (executor-loss safety), exactly like
-    # connected_components; rank state is 2 longs/node.
-    nodes = (edges.select(F.col("subj").alias("node"))
-             .union(edges.select(F.col("dst").alias("node")))
-             .distinct().localCheckpoint())
+    nodes = truncate(edges.select(F.col("subj").alias("node"))
+                     .union(edges.select(F.col("dst").alias("node")))
+                     .distinct())
     outd = edges.groupBy("subj").agg(F.count("*").alias("outd"))
     # out-degree rides the edge table: ONE join outside the loop
     # instead of an outd join per superstep (5 joins saved)
-    edges_w = edges.join(outd, "subj").localCheckpoint()
+    edges_w = truncate(edges.join(outd, "subj"))
     if seeds is None:
-        k = nodes.count()  # nodes is already materialized
+        k = nodes.count()  # materializes nodes
         if k == 0:  # empty graph: no supersteps, empty rank table
             out = nodes.select("node", F.lit(0).cast("long").alias("rank"))
             out._pr_supersteps = 0
@@ -1005,13 +994,12 @@ def _rank_supersteps(edges, seeds, iters, tol_ppm=None):
     # node table and let the flag ride the rank state, so the
     # per-superstep dangling sum is a single filter-agg over the rank
     # state — no per-round groupBy/anti-join (measured ~-25% wall)
-    nodes_f = (nodes.join(outd.select(F.col("subj").alias("node"),
-                                      F.lit(False).alias("dang")),
-                          "node", "left")
-               .select("node",
-                       F.coalesce("dang", F.lit(True)).alias("dang"),
-                       *seed_col)
-               .localCheckpoint())
+    nodes_f = truncate(
+        nodes.join(outd.select(F.col("subj").alias("node"),
+                               F.lit(False).alias("dang")),
+                   "node", "left")
+        .select("node", F.coalesce("dang", F.lit(True)).alias("dang"),
+                *seed_col))
     flags = nodes_f.columns[1:]
     ranks = nodes_f.select(
         "node", F.expr(seeded(init)).cast("long").alias("rank"), *flags)
@@ -1030,20 +1018,14 @@ def _rank_supersteps(edges, seeds, iters, tol_ppm=None):
                     F.lit(0)).alias("dsum"))
                 .collect()[0]["dsum"])
         dshare = int(dsum) // k
-        # Lazy localCheckpoint each superstep; the NEXT round's
-        # dangling collect is the action that materializes it, so
-        # every iteration runs exactly once and the PLAN (not just the
-        # computed data) stays one-superstep shallow — see the
-        # localCheckpoint note above.
-        old, ranks = ranks, (
+        old, ranks = ranks, truncate(
             nodes_f.join(inflow, "node", "left")
             .select("node",
                     F.expr(f"{seeded(teleport)} + {PR_DAMP_NUM} * "
                            f"(coalesce(inflow, 0) + {seeded(dshare)}) "
                            f"DIV {PR_DAMP_DEN}").cast("long")
                     .alias("rank"),
-                    *flags)
-            .localCheckpoint(eager=False))
+                    *flags))
         steps += 1
         if tol_ppm is not None:
             delta = (ranks.alias("n").join(old.alias("o"), "node")
@@ -1278,8 +1260,8 @@ def triangle_counts(edges):
     # each (src/dst swap, o1/o2/closing, three corner projections) and
     # derive from a corpus-scale scan — Catalyst does not dedupe the
     # shared subtree (CLAUDE.md), so uncached they re-ran it up to 9x
-    # (measured 42.3 -> 1.8 s at sf0.1). At 100 TB swap for
-    # _reliable_checkpoint of the oriented edge set.
+    # (measured 42.3 -> 1.8 s at sf0.1). At 100 TB checkpoint the
+    # oriented edge set reliably (supersteps.truncate).
     und = (edges.select(F.col("ent_a").alias("src"),
                         F.col("ent_b").alias("dst"))
            .unionAll(edges.select(F.col("ent_b").alias("src"),
@@ -1398,25 +1380,18 @@ def label_propagation(edges, iters: int = LPA_ITERS):
     argmin — expressed as `min_by(label, struct(-cnt, label))` inside a
     single groupBy(node) agg so the vote resolution gets map-side
     partial combine instead of a row_number window sort. Label state is
-    2 strings/node; per-superstep cache keeps lineage shallow (at
-    100 TB swap for _reliable_checkpoint every few rounds, exactly like
-    connected_components)."""
+    2 strings/node."""
     nodes = edges.select(F.col("a").alias("node")).distinct()
-    # localCheckpoint, not cache: truncate the superstep PLAN so the
-    # final action doesn't re-analyze iters× nested lineage with the
-    # corpus scan at the root (the pagerank/skipgram lesson); lazy so
-    # each round still computes exactly once at materialization
-    labels = (nodes.select("node", F.col("node").alias("label"))
-              .localCheckpoint(eager=False))
+    labels = truncate(nodes.select("node", F.col("node").alias("label")))
     for _ in range(iters):
         votes = (edges.join(labels, edges["b"] == labels["node"])
                  .select(edges["a"].alias("node"), "label"))
         counts = (votes.groupBy("node", "label")
                   .agg(F.count("*").alias("cnt")))
-        labels = (counts.groupBy("node")
-                  .agg(F.expr("min_by(label, struct(-cnt, label))")
-                       .alias("label"))
-                  .localCheckpoint(eager=False))
+        labels = truncate(
+            counts.groupBy("node")
+            .agg(F.expr("min_by(label, struct(-cnt, label))")
+                 .alias("label")))
     return labels
 
 
@@ -1505,26 +1480,18 @@ def khop(edges, seeds, k: int = KHOP_K):
     broadcasts the frontier while it is small — the common case for
     seed-neighborhood queries — and falls back to a hash join when a
     hub explodes it), one distinct, one left-anti against visited.
-    k is a small constant (subgraph extraction, not reachability), so
-    lineage stays k-shallow with per-level cache; at 100 TB swap the
-    cache for _reliable_checkpoint exactly like connected_components.
+    k is a small constant (subgraph extraction, not reachability).
     Expects `edges` to carry each undirected edge in both directions.
     """
-    # lazy localCheckpoint per level (not cache): `new` and `visited`
-    # are each referenced twice per level AND feed the next level, so
-    # with cache the final plan nests k levels of corpus-rooted
-    # lineage that Catalyst re-analyzes whole (pagerank lesson)
-    visited = (seeds.select("node")
-               .withColumn("hops", F.lit(0).cast("long"))
-               .localCheckpoint(eager=False))
+    visited = truncate(seeds.select("node")
+                       .withColumn("hops", F.lit(0).cast("long")))
     frontier = visited.select("node")
     for h in range(1, k + 1):
         nxt = (frontier.join(edges, frontier["node"] == edges["a"])
                .select(F.col("b").alias("node")).distinct())
-        new = (nxt.join(visited, "node", "left_anti")
-               .withColumn("hops", F.lit(h).cast("long"))
-               .localCheckpoint(eager=False))
-        visited = visited.unionAll(new).localCheckpoint(eager=False)
+        new = truncate(nxt.join(visited, "node", "left_anti")
+                       .withColumn("hops", F.lit(h).cast("long")))
+        visited = truncate(visited.unionAll(new))
         frontier = new.select("node")
     return visited
 
@@ -1536,9 +1503,8 @@ def q_kg_khop(spark, sf_dir):
     levels — the standard seed-expansion subgraph every KG application
     (RAG context building, entity cards) runs."""
     fwd = _named_edges(spark, sf_dir)
-    # cache: the distinct-ed edge set re-shuffles per BFS level when
-    # uncached (Catalyst no-subplan-reuse); triple-scale, so at 100 TB
-    # swap for a reliable checkpoint
+    # checkpoint: the distinct-ed edge set re-shuffles per BFS level
+    # when uncached (Catalyst no-subplan-reuse)
     edges = (fwd.unionAll(fwd.select("dst", "subj")).toDF("a", "b")
              .distinct().localCheckpoint())
     seeds = spark.createDataFrame([(ENT_NS + "Entity0",)], "node string")
@@ -1731,34 +1697,29 @@ def random_walks(edges, walks_per_node: int = WALKS_PER_NODE,
     shuffle on the current node plus a groupBy(seed, w) argmin
     expressed as min_by(b, struct(h, b)) with map-side partial
     combine; the hub-node fan-out (state rows x degree) collapses in
-    the combiner before the exchange. Lineage stays walk_len-shallow
-    via per-step cache (swap for _reliable_checkpoint at 100 TB —
-    same policy as khop/connected_components). Walks over a sink node
-    (possible only on DIRECTED edge sets) simply end early: absent
-    rows, never nulls.
+    the combiner before the exchange. Each level is taken from the
+    truncated walk state, so the final union does not nest every
+    step's lineage again. Walks over a sink node (possible only on
+    DIRECTED edge sets) simply end early: absent rows, never nulls.
     """
     from .operators.textstats import hash60
     nodes = edges.select(F.col("a").alias("seed")).distinct()
     walks = nodes.select("seed", F.explode(F.array(
         *[F.lit(w).cast("long") for w in range(walks_per_node)]))
         .alias("w"))
-    # lazy localCheckpoint per step (pagerank lesson): truncate the
-    # PLAN, not just the computed data — the union of walk_len levels
-    # otherwise nests every step's corpus-rooted lineage for Catalyst
-    # to re-analyze at the final action
-    state = (walks.select("seed", "w", F.col("seed").alias("node"))
-             .localCheckpoint(eager=False))
+    state = truncate(walks.select("seed", "w",
+                                  F.col("seed").alias("node")))
     levels = [state.select(
         "seed", "w", F.lit(0).cast("long").alias("step"), "node")]
     for h in range(1, walk_len + 1):
         key = F.concat_ws("|", F.col("seed"), F.col("w").cast("string"),
                           F.lit(str(h)), F.col("b"))
-        state = (state.join(edges, state["node"] == edges["a"])
-                 .select("seed", "w", F.col("b").alias("b"),
-                         hash60(key).alias("h"))
-                 .groupBy("seed", "w")
-                 .agg(F.expr("min_by(b, struct(h, b))").alias("node"))
-                 .localCheckpoint(eager=False))
+        state = truncate(
+            state.join(edges, state["node"] == edges["a"])
+            .select("seed", "w", F.col("b").alias("b"),
+                    hash60(key).alias("h"))
+            .groupBy("seed", "w")
+            .agg(F.expr("min_by(b, struct(h, b))").alias("node")))
         levels.append(state.select(
             "seed", "w", F.lit(h).cast("long").alias("step"), "node"))
     out = levels[0]
@@ -1876,8 +1837,7 @@ def q_kg_skipgram_pairs(spark, sf_dir):
     BOTH join subtrees — Catalyst re-analyzes the doubled tree every
     run (measured 11.0 -> ~7 s at sf0.1 cold; the remainder is the
     walk loop itself — per-step fixed stage costs on a
-    vocabulary-scale graph, which amortize at real scale. At 100 TB
-    use a reliable checkpoint, same policy as connected_components).
+    vocabulary-scale graph, which amortize at real scale).
     """
     edges = _comention_edges(spark, sf_dir).cache()
     walks = random_walks(edges).localCheckpoint()
@@ -2929,10 +2889,9 @@ def kcore_edges(edges, k: int = KCORE_K,
     `max_rounds` chained MATERIALIZED rounds; equality holds whether
     or not the peel converges early, because past `max_rounds` both
     sides stop. Per round: one degree agg + two semi-joins (keys
-    uniform after the first peel); `localCheckpoint` truncates the
-    per-round lineage (the iterative-result rule — at 100 TB swap for
-    reliable checkpoint). Driver state is a 1-row count per round."""
-    cur = edges.distinct().localCheckpoint()
+    uniform after the first peel). Driver state is a 1-row count per
+    round."""
+    cur = truncate(edges.distinct())
     n_edges = cur.count()
     for _ in range(max_rounds):
         if n_edges == 0:
@@ -2940,11 +2899,10 @@ def kcore_edges(edges, k: int = KCORE_K,
         keep = (cur.groupBy("a").agg(F.count("*").alias("d"))
                 .filter(F.col("d") >= k)
                 .select(F.col("a").alias("node")))
-        nxt = (cur.join(keep.select(F.col("node").alias("a")),
-                        "a", "left_semi")
-               .join(keep.select(F.col("node").alias("b")),
-                     "b", "left_semi")
-               .localCheckpoint())
+        nxt = truncate(cur.join(keep.select(F.col("node").alias("a")),
+                                "a", "left_semi")
+                       .join(keep.select(F.col("node").alias("b")),
+                             "b", "left_semi"))
         m = nxt.count()
         if m == n_edges:
             break
@@ -3023,18 +2981,16 @@ def neighborhood_growth(edges, h_max: int = ANF_H) -> list:
     which explodes on low-diameter graphs — `anf_registers` below is
     the fixed-state path a 100 TB run uses, and pytest pins its
     estimates to THIS exact function. Per level: one join + one
-    distinct (both keyed on node ids), `localCheckpoint` truncates the
-    per-level lineage (the iterative-result rule)."""
-    edges = edges.distinct().localCheckpoint()
+    distinct (both keyed on node ids)."""
+    edges = truncate(edges.distinct())
     nodes = edges.select(F.col("a").alias("node")).distinct()
-    pairs = (nodes.select(F.col("node").alias("src"),
-                          F.col("node").alias("dst"))
-             .localCheckpoint())
+    pairs = truncate(nodes.select(F.col("node").alias("src"),
+                                  F.col("node").alias("dst")))
     counts = [(0, pairs.count())]
     for h in range(1, h_max + 1):
         grown = (pairs.join(edges, F.col("dst") == F.col("a"))
                  .select("src", F.col("b").alias("dst")))
-        pairs = pairs.unionAll(grown).distinct().localCheckpoint()
+        pairs = truncate(pairs.unionAll(grown).distinct())
         counts.append((h, pairs.count()))
     return counts
 
@@ -3071,24 +3027,24 @@ def anf_registers(edges, h_max: int = ANF_H):
     register. The float ESTIMATOR on top is judged in pytest against
     the exact counts."""
     from .operators.textstats import hash60
-    edges = edges.distinct().localCheckpoint()
+    edges = truncate(edges.distinct())
     nodes = edges.select(F.col("a").alias("node")).distinct()
-    regs = (nodes.select("node", hash60(F.col("node")).alias("h"))
-            .select("node",
-                    F.expr(f"h DIV {_ANF_W_MOD}").alias("bucket"),
-                    F.when(F.col("h") % F.lit(_ANF_W_MOD) == 0,
-                           F.lit(_ANF_RHO_MAX))
-                    .otherwise(F.lit(_ANF_RHO_MAX) -
-                               F.length(F.bin(F.col("h") %
-                                              F.lit(_ANF_W_MOD))))
-                    .cast("long").alias("rho"))
-            .localCheckpoint())
+    regs = truncate(
+        nodes.select("node", hash60(F.col("node")).alias("h"))
+        .select("node",
+                F.expr(f"h DIV {_ANF_W_MOD}").alias("bucket"),
+                F.when(F.col("h") % F.lit(_ANF_W_MOD) == 0,
+                       F.lit(_ANF_RHO_MAX))
+                .otherwise(F.lit(_ANF_RHO_MAX) -
+                           F.length(F.bin(F.col("h") %
+                                          F.lit(_ANF_W_MOD))))
+                .cast("long").alias("rho")))
     for _ in range(h_max):
         nbr = (edges.join(regs, F.col("b") == F.col("node"))
                .select(F.col("a").alias("node"), "bucket", "rho"))
-        regs = (regs.unionAll(nbr)
-                .groupBy("node", "bucket").agg(F.max("rho").alias("rho"))
-                .localCheckpoint())
+        regs = truncate(regs.unionAll(nbr)
+                        .groupBy("node", "bucket")
+                        .agg(F.max("rho").alias("rho")))
     return regs
 
 

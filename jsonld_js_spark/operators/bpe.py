@@ -14,10 +14,7 @@ word keys). Everything after runs on the WORD VOCABULARY (|unique
 words| rows — ~10^7-10^8 at web scale, kilobytes at test scale): K
 iterations of a vocab-scale pair count + a 1-row argmax collected to
 the driver (the k-means-centroid pattern: driver-side state is one
-merge rule, never data) + a literal-pattern replace projection. The
-per-iteration vocab state is localCheckpoint-ed so the plan stays
-one-iteration shallow (the pagerank lesson); at cluster scale swap for
-reliable checkpoint().
+merge rule, never data) + a literal-pattern replace projection.
 
 Exactness/portability contract (CLAUDE.md cross-engine rules):
 - words = regexp_extract_all(lower(text), '[a-z]+') — ascii letter
@@ -44,6 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
+from ..supersteps import truncate
+
 N_MERGES = 6  # gated-query constant; parameterized for real use
 
 MERGE_SCHEMA = StructType([
@@ -64,11 +63,11 @@ def bpe_merges(docs, n_merges: int = N_MERGES):
     words = docs.select(F.explode(
         F.regexp_extract_all(F.lower("text"), F.lit("[a-z]+"), 0))
         .alias("word"))
-    vocab = (words.groupBy("word").agg(F.count("*").alias("cnt"))
-             .select(F.concat(F.regexp_replace("word", "(.)", "$1 "),
-                              F.lit("</w>")).alias("sym"),
-                     "cnt")
-             .localCheckpoint())
+    vocab = truncate(
+        words.groupBy("word").agg(F.count("*").alias("cnt"))
+        .select(F.concat(F.regexp_replace("word", "(.)", "$1 "),
+                         F.lit("</w>")).alias("sym"),
+                "cnt"))
     merges: list[tuple] = []
     for rank in range(1, n_merges + 1):
         # size guard: a fully-merged single-symbol word has no pairs,
@@ -91,10 +90,9 @@ def bpe_merges(docs, n_merges: int = N_MERGES):
             pat = F.lit(f" {a} {b} ")
             rep = F.lit(f" {a}{b} ")
             delim = F.concat(F.lit(" "), "sym", F.lit(" "))
-            vocab = (vocab.select(
+            vocab = truncate(vocab.select(
                 F.trim(F.replace(F.replace(delim, pat, rep), pat, rep))
-                .alias("sym"), "cnt")
-                .localCheckpoint(eager=False))
+                .alias("sym"), "cnt"))
     return spark.createDataFrame(merges, MERGE_SCHEMA)
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..supersteps import truncate
 from .textstats import hash60, hash60_sql
 
 N_MINHASH = 8
@@ -545,23 +546,6 @@ ORDER BY doc_a, doc_b
 CC_MAX_ITERS = 20
 
 
-def _reliable_checkpoint(df):
-    """checkpoint() against reliable storage (truncates iterative
-    lineage AND survives executor loss — localCheckpoint pins blocks
-    to executor memory/disk, so one lost executor kills a 100 TB
-    clustering run). The checkpoint dir defaults to a local tmp path;
-    on a cluster set SPARK_GRAFT_CHECKPOINT_DIR to an HDFS/S3 URI or
-    pre-set sparkContext.setCheckpointDir."""
-    import os
-    import tempfile
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(os.environ.get(
-            "SPARK_GRAFT_CHECKPOINT_DIR",
-            tempfile.mkdtemp(prefix="spark-graft-ckpt-")))
-    return df.checkpoint(eager=True)
-
-
 def connected_components(edges, max_iters: int = CC_MAX_ITERS,
                          algorithm: str = "label"):
     """(src, dst) undirected edge list -> (doc_id, cluster_id) with
@@ -581,17 +565,16 @@ def connected_components(edges, max_iters: int = CC_MAX_ITERS,
     over the shrinking edge set; the driver sees only a fixpoint
     checksum. Use for graphs whose diameter is unknown.
 
-    Both variants checkpoint per round against reliable storage
-    (`_reliable_checkpoint`) so lineage stays flat and executor loss
+    Both variants write one reliable checkpoint per round
+    (`supersteps.truncate(..., reliable=True)`), so executor loss
     cannot kill the run.
 
     Expects `edges` to contain each undirected edge in BOTH
     directions (src->dst and dst->src)."""
     if algorithm == "star":
         return _cc_star(edges, max_iters)
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("cluster_id", F.col("doc_id"))
-              .cache())
+    labels = truncate(edges.select(F.col("src").alias("doc_id")).distinct()
+                      .withColumn("cluster_id", F.col("doc_id")))
     changed = -1
     for _ in range(max_iters):
         nbr_min = (edges.join(labels, edges["dst"] == labels["doc_id"])
@@ -608,7 +591,7 @@ def connected_components(edges, max_iters: int = CC_MAX_ITERS,
                               new_label.alias("cluster_id"),
                               (new_label != labels["cluster_id"])
                               .alias("_chg")))
-        new_labels = _reliable_checkpoint(new_labels)
+        new_labels = truncate(new_labels, reliable=True)
         changed = new_labels.filter(F.col("_chg")).count()
         labels = new_labels.drop("_chg")
         if changed == 0:
@@ -634,8 +617,8 @@ def _cc_star(edges, max_iters):
     """Alternating large-star/small-star; `edges` has both directions.
     Invariant per round: edge set shrinks toward the star set
     {(v, component_min)}; fixpoint detected by set checksum."""
-    cur = edges.filter(F.col("src") != F.col("dst")).distinct().cache()
-    all_nodes = cur.select(F.col("src").alias("doc_id")).distinct().cache()
+    cur = truncate(edges.filter(F.col("src") != F.col("dst")).distinct())
+    all_nodes = truncate(cur.select(F.col("src").alias("doc_id")).distinct())
     prev_sig = None
     for _ in range(max_iters):
         # large-star: connect every strictly-larger neighbor of u to
@@ -666,7 +649,7 @@ def _cc_star(edges, max_iters):
                  .select(F.col("node").alias("src"),
                          F.col("m").alias("dst"))
                  .distinct())
-        small = _reliable_checkpoint(small)
+        small = truncate(small, reliable=True)
         lg.unpersist()
         # fixpoint on the DIRECTED small set (every row has src > dst —
         # dst is the strict min — so the undirected mirror is a
@@ -677,11 +660,9 @@ def _cc_star(edges, max_iters):
         # the other — the union is disjoint by construction, and both
         # uses next round re-read the checkpoint parquet (cheaper than
         # re-materializing a cache of a derived mirror)
-        new_cur = small.unionAll(
+        cur = small.unionAll(
             small.select(F.col("dst").alias("src"),
                          F.col("src").alias("dst")))
-        cur.unpersist()
-        cur = new_cur
         if sig == prev_sig:
             break
         prev_sig = sig
