@@ -20,7 +20,7 @@ from .context import (
 from .util import (
     JsonLdError, is_keyword, is_absolute_iri, add_value, is_value, is_list,
     is_graph, is_simple_graph, is_subject, is_subject_reference,
-    remove_base, parse_iri, prepend_base,
+    remove_base, parse_iri, prepend_base, MEMO_CAP,
 )
 
 
@@ -491,8 +491,9 @@ def compact_iri(active_ctx, iri, *, value=None, vocab=False, reverse=False,
     the VALUE FEATURES the term-selection consults — the container
     candidates and type/language key (ref lib/compact.js:744-871) —
     which the memo key captures exactly, so structurally-identical
-    values share one selection. The memo rides the active context and
-    is dropped on clone, like _iri_memo (context.py:62)."""
+    values share one selection. The memo rides the active context, is
+    dropped on clone, like _iri_memo (context.py _clone_active_context),
+    and is capped at MEMO_CAP."""
     if iri is None:
         return iri
     if not isinstance(iri, str):
@@ -703,6 +704,8 @@ def compact_iri(active_ctx, iri, *, value=None, vocab=False, reverse=False,
                 term = _compact_iri_tail(active_ctx, iri, value is None,
                                          vocab, base)
             if key is not None:
+                if len(memo) > MEMO_CAP:
+                    memo.clear()
                 memo[key] = term
             return term
 
@@ -711,6 +714,8 @@ def compact_iri(active_ctx, iri, *, value=None, vocab=False, reverse=False,
     if rval is _CI_MISS:
         rval = _compact_iri_tail(active_ctx, iri, value is None, vocab,
                                  base)
+        if len(memo) > MEMO_CAP:
+            memo.clear()
         memo[key] = rval
     return rval
 

@@ -68,6 +68,7 @@ def _clone_active_context(active_ctx: dict) -> dict:
     child.pop("_ci_memo", None)
     child.pop("_val_memo", None)
     child.pop("_obj_memo", None)
+    child.pop("_shape_memo", None)
     # the processed-context cache is keyed per active-ctx IDENTITY
     # (the reference's getProcessed(activeCtx)) — a clone is a new
     # identity, so it starts empty
@@ -766,6 +767,16 @@ def _finish_term_definition(active_ctx, local_ctx, term, value, mapping,
 _MISS = object()
 
 
+def iri_memos(active_ctx: dict) -> tuple:
+    """The context's four expand_iri memos, indexed 2 * vocab + base.
+    A hit is what expand_iri returns for that string, with no local
+    context and no expansionMap (keywords are never stored)."""
+    memos = active_ctx.get("_iri_memo")
+    if memos is None:
+        memos = active_ctx["_iri_memo"] = ({}, {}, {}, {})
+    return memos
+
+
 def expand_iri(active_ctx: dict, value, *, vocab: bool = False,
                base: bool = False, local_ctx: dict = None,
                defined: dict = None, options: dict = None,
@@ -797,10 +808,8 @@ def expand_iri(active_ctx: dict, value, *, vocab: bool = False,
         # one dict per (vocab, base) flag pair: memo hits are plain
         # string lookups (no per-call key-tuple allocation/hash —
         # this is the hottest call site in the kernel)
-        memos = active_ctx.get("_iri_memo")
-        if memos is None:
-            memos = active_ctx["_iri_memo"] = ({}, {}, {}, {})
-        memo = memos[(2 if vocab else 0) + (1 if base else 0)]
+        memo = iri_memos(active_ctx)[(2 if vocab else 0) +
+                                     (1 if base else 0)]
         hit = memo.get(value, _MISS)
         if hit is not _MISS:
             return hit
@@ -808,6 +817,14 @@ def expand_iri(active_ctx: dict, value, *, vocab: bool = False,
         # because a shared worker context sees every conversation's @ids
         if len(memo) > MEMO_CAP:
             memo.clear()
+        if not vocab:
+            # an IRI whose first colon is followed by "//" expands to
+            # itself (_expand_iri_tail returns it before any lookup) —
+            # the common unique node @id
+            i = value.find(":")
+            if i > 0 and value.startswith("//", i + 1):
+                memo[value] = value
+                return value
 
     if is_keyword_form(value):
         if memo is not None:

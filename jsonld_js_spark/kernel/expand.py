@@ -11,13 +11,13 @@ from __future__ import annotations
 
 from .context import (
     _MISS as _CTX_MISS, expand_iri, get_context_value, get_scoped_context,
-    revert_to_previous_context,
+    iri_memos, revert_to_previous_context,
     process_context,
 )
 from .util import (
     JsonLdError, BCP47_RE, is_keyword, is_absolute_iri, add_value,
     is_value, is_list, is_graph, is_subject,
-    is_empty_object,
+    is_empty_object, MEMO_CAP,
 )
 
 _VALUE_KEYS = {"@value", "@type", "@language", "@direction", "@index"}
@@ -122,6 +122,32 @@ def expand(active_ctx, element, active_property=None, options=None,
         return rval
 
     # element is a dict ---------------------------------------------------
+    # node-shape fast path: one plan lookup per node (see _node_plan)
+    # when no per-call input can change the plan's outcome. A shape's
+    # plan is built when it repeats: the first sighting only records
+    # it (0), so a document of one-off shapes builds no plans
+    if type_scoped_context is None and \
+            active_ctx.get("previousContext") is None and \
+            options.get("expansionMap") is None and \
+            not options.get("isFrame"):
+        shapes = active_ctx.get("_shape_memo")
+        if shapes is None:
+            shapes = active_ctx["_shape_memo"] = {}
+        skey = (active_property, tuple(element))
+        plan = shapes.get(skey)
+        if plan is None:
+            if len(shapes) > MEMO_CAP:
+                shapes.clear()
+            shapes[skey] = 0
+        elif plan == 0:
+            plan = shapes[skey] = _node_plan(active_ctx, active_property,
+                                             element, options)
+        if plan:
+            rval = _expand_node(active_ctx, element, plan, options,
+                                shapes)
+            if rval is not _CTX_MISS:
+                return rval
+
     # expand the active property BEFORE any type-scoped-context revert
     # (ref lib/expand.js:163 — the order is observable through the
     # expansionMap event stream)
@@ -178,10 +204,10 @@ def expand(active_ctx, element, active_property=None, options=None,
     type_scoped_context = active_ctx
 
     # look for @type entries and apply type-scoped contexts, keys sorted
-    # (ref lib/expand.js:226-248). The per-key property plan memo
-    # (_expand_object) caches exactly this vocab expansion per key on
-    # the same ctx object — consult it to skip the expand_iri call
-    # (bypassed under an expansionMap: the events are observable)
+    # (ref lib/expand.js:226-248). A memoized key plan (_key_plan)
+    # holds exactly this vocab expansion per key on the same ctx
+    # object — consult it to skip the expand_iri call (bypassed under
+    # an expansionMap: the events are observable)
     type_key = None
     _no_emap = options.get("expansionMap") is None
     for key in keys_sorted:
@@ -287,6 +313,196 @@ def expand(active_ctx, element, active_property=None, options=None,
     return rval
 
 
+def _key_plan(active_ctx, key, options):
+    """(expanded property, kind) of a node key — a pure function of the
+    active context and the key, memoized in the context's `_obj_memo`
+    (capped at MEMO_CAP, dropped on clone, context.py
+    _clone_active_context). Callers bypass it under an expansionMap,
+    whose unmappedProperty/expandIri events are observable. Kinds:
+    0 = key drops (no absolute IRI/keyword expansion), 1 = keyword,
+    2 = simple regular property (no property-scoped context, no
+    @container, no @type:@json coercion, not a reverse term — the
+    _expand_object prelude + tail collapse to one add_value), 3 =
+    complex regular property."""
+    memo = active_ctx.get("_obj_memo")
+    if memo is None:
+        memo = active_ctx["_obj_memo"] = {}
+    plan = memo.get(key)
+    if plan is not None:
+        return plan
+    ep = expand_iri(active_ctx, key, vocab=True, options=options)
+    if ep is None or not (isinstance(ep, str) and
+                          (is_absolute_iri(ep) or is_keyword(ep))):
+        plan = (None, 0)
+    elif is_keyword(ep):
+        plan = (ep, 1)
+    elif get_scoped_context(active_ctx, key) is not _CTX_MISS:
+        plan = (ep, 3)
+    else:
+        _m = active_ctx["mappings"].get(key)
+        simple = not get_context_value(active_ctx, key, "@container") and \
+            not (_m and _m.get("reverse")) and \
+            get_context_value(active_ctx, key, "@type") != "@json"
+        plan = (ep, 2 if simple else 3)
+    if len(memo) > MEMO_CAP:
+        memo.clear()
+    memo[key] = plan
+    return plan
+
+
+# node-shape plan ops: the entries of a plan run in sorted key order
+_OP_ID, _OP_TYPE, _OP_PROP = 0, 1, 2
+
+
+def _node_plan(active_ctx, active_property, element, options):
+    """Node-shape plan for the fast path of expand(): a tuple
+    (entries, check_types, free_floating), or () when the shape needs
+    the generic dispatcher. Eligible shapes are node objects whose keys
+    are at most one @id, at most one @type and simple regular
+    properties (_key_plan kind 2, distinct IRIs) — so no @context
+    either — under an active property with no property-scoped context
+    that is neither @default nor @reverse. Entries are (op, key,
+    expanded property, _value_plan) in sorted key order; dropped keys
+    are left out. check_types is set when the context defines any
+    scoped context, so that @type values are checked for a
+    type-scoped context on every call.
+
+    The plan reads only the active context (it lives in the context's
+    `_shape_memo`), the active property and the key set, which is what
+    the memo key holds. The caller checks the per-call inputs: no
+    expansionMap, no frame expansion, no type-scoped context to
+    revert."""
+    if active_property in ("@default", "@reverse"):
+        return ()
+    if active_property is not None:
+        mapping = active_ctx["mappings"].get(active_property)
+        if mapping is not None and "@context" in mapping:
+            return ()
+        if expand_iri(active_ctx, active_property, vocab=True,
+                      options=options) == "@reverse":
+            return ()
+    entries, seen = [], set()
+    for key in sorted(element):
+        ep, kind = _key_plan(active_ctx, key, options)
+        if kind == 0:
+            continue
+        if ep in seen or (kind == 1 and ep not in ("@id", "@type")) or \
+                kind == 3:
+            return ()
+        seen.add(ep)
+        if ep == "@id":
+            entries.append((_OP_ID, key, ep, None))
+        elif ep == "@type":
+            entries.append((_OP_TYPE, key, ep, None))
+        else:
+            entries.append((_OP_PROP, key, ep,
+                            _value_plan(active_ctx, key, options)))
+    check_types = "@type" in seen and any(
+        m is not None and "@context" in m
+        for m in active_ctx["mappings"].values())
+    return (tuple(entries), check_types,
+            active_property is None or active_property == "@graph")
+
+
+def _expand_node(active_ctx, element, plan, options, shapes):
+    """expand() of a dict element along its node-shape plan; _CTX_MISS
+    when a value needs the generic dispatcher (a non-string @id, a
+    malformed or type-scoped @type). The generic path raises every
+    error the plan skips, and nothing here has a side effect before
+    that return, so falling back re-runs the element from scratch.
+    Dict items of a list value take their own plan from `shapes`
+    directly: the dispatcher's per-call checks hold for them too."""
+    entries, check_types, free_floating = plan
+    # expand_iri's own memos, read directly for the base (@id) and
+    # vocab+base (@type) expansions; a miss calls expand_iri
+    memos = iri_memos(active_ctx)
+    ids, types_ = memos[1], memos[3]
+    rval = {}
+    for op, key, ep, vp in entries:
+        value = element[key]
+        if op == _OP_PROP:
+            cls = value.__class__
+            if cls is list:
+                out = []
+                for item in value:
+                    icls = item.__class__
+                    if icls is str and vp[4] == 3:
+                        iri = ids.get(item, _CTX_MISS)
+                        if iri is _CTX_MISS:
+                            iri = expand_iri(active_ctx, item, base=True,
+                                             options=options)
+                        out.append({"@id": iri})
+                    elif icls is dict or isinstance(item, (dict, list)):
+                        ev = _CTX_MISS
+                        if icls is dict:
+                            p = shapes.get((key, tuple(item)))
+                            if p:
+                                ev = _expand_node(active_ctx, item, p,
+                                                  options, shapes)
+                        if ev is _CTX_MISS:
+                            ev = expand(active_ctx, item, key, options)
+                        if ev is None:
+                            continue
+                        if isinstance(ev, list):
+                            out.extend(ev)
+                        else:
+                            out.append(ev)
+                    elif item is not None:
+                        out.append(_expand_value(active_ctx, key, item,
+                                                 options))
+                rval[ep] = out
+            elif (cls is str or cls is int) and vp[4] == 0:
+                # the commonest value: an uncoerced string or integer
+                if vp[6] is not None:
+                    rval[ep] = [{"@value": value, "@type": vp[6]}]
+                elif cls is int or (vp[2] is None and vp[3] is None):
+                    rval[ep] = [{"@value": value}]
+                else:
+                    rval[ep] = [_expand_value(active_ctx, key, value,
+                                              options)]
+            elif value is None:
+                continue
+            elif isinstance(value, (dict, list)):
+                ev = expand(active_ctx, value, key, options)
+                if ev is None:
+                    continue
+                rval[ep] = ev if isinstance(ev, list) else [ev]
+            else:
+                rval[ep] = [_expand_value(active_ctx, key, value, options)]
+        elif op == _OP_ID:
+            if not isinstance(value, str):
+                return _CTX_MISS
+            iri = ids.get(value, _CTX_MISS)
+            rval["@id"] = expand_iri(active_ctx, value, base=True,
+                                     options=options) \
+                if iri is _CTX_MISS else iri
+        elif isinstance(value, str):
+            if check_types and \
+                    get_scoped_context(active_ctx, value) is not _CTX_MISS:
+                return _CTX_MISS
+            iri = types_.get(value, _CTX_MISS)
+            rval["@type"] = [expand_iri(active_ctx, value, vocab=True,
+                                        base=True, options=options,
+                                        type_expansion=True)
+                             if iri is _CTX_MISS else iri]
+        else:
+            if not isinstance(value, list):
+                return _CTX_MISS
+            for t in value:
+                if not isinstance(t, str) or (check_types and (
+                        get_scoped_context(active_ctx, t) is not _CTX_MISS)):
+                    return _CTX_MISS
+            if value:
+                rval["@type"] = [
+                    expand_iri(active_ctx, t, vocab=True, base=True,
+                               options=options, type_expansion=True)
+                    for t in value]
+    if free_floating and (not rval or (len(rval) == 1 and "@id" in rval)) \
+            and not options.get("keepFreeFloatingNodes"):
+        return None
+    return rval
+
+
 def _expand_object(active_ctx, active_property, element, rval, options,
                    inside_list, type_key, type_scoped_context,
                    expanded_parent_property=None):
@@ -309,19 +525,9 @@ def _expand_object(active_ctx, active_property, element, rval, options,
             active_ctx, tv0, vocab=True, options=options,
             type_expansion=True) == "@json"
 
-    # per-key property plan memo on the (immutable-after-processing)
-    # active context — a PURE optimization (memo-purity rule, CLAUDE.md):
-    # the plan (expanded property + dispatch kind) is a function of the
-    # active context and the key alone; dropped on context clone
-    # (context.py _clone_active_context) and bypassed under an
-    # expansionMap, whose unmappedProperty/expandIri events are part of
-    # the observable callback stream. Kinds: 0 = key drops (no absolute
-    # IRI/keyword expansion), 1 = keyword (re-runs the chain below —
-    # keywords are ~2 keys/node and exit it in <=2 compares), 2 =
-    # simple regular property (no property-scoped context, no
-    # @container, no @type:@json coercion, not a reverse term — the
-    # whole prelude + tail collapse to one add_value), 3 = complex
-    # regular property (skips only the expandIri + validity recheck).
+    # per-key plans (_key_plan) are bypassed under an expansionMap,
+    # whose unmappedProperty/expandIri events are part of the
+    # observable callback stream
     _plan_memo = None
     if options is None or options.get("expansionMap") is None:
         _plan_memo = active_ctx.get("_obj_memo")
@@ -333,8 +539,8 @@ def _expand_object(active_ctx, active_property, element, rval, options,
             continue
         value = element[key]
         kind = -1
-        plan = _plan_memo.get(key) if _plan_memo is not None else None
-        if plan is not None:
+        if _plan_memo is not None:
+            plan = _plan_memo.get(key) or _key_plan(active_ctx, key, options)
             expanded_property, kind = plan
             if kind == 0:
                 continue
@@ -356,26 +562,7 @@ def _expand_object(active_ctx, active_property, element, rval, options,
                     "options": options, "insideList": inside_list,
                     "value": value, "expandedParent": rval})
                 if expanded_property is None:
-                    if _plan_memo is not None:
-                        _plan_memo[key] = (None, 0)
                     continue
-
-            if _plan_memo is not None:
-                if is_keyword(expanded_property):
-                    kind = 1
-                elif get_scoped_context(active_ctx, key) is not _CTX_MISS:
-                    kind = 3
-                else:
-                    _c = get_context_value(active_ctx, key,
-                                           "@container") or []
-                    _m = active_ctx["mappings"].get(key)
-                    if not _c and not (_m and _m.get("reverse")) and \
-                            get_context_value(active_ctx, key,
-                                              "@type") != "@json":
-                        kind = 2
-                    else:
-                        kind = 3
-                _plan_memo[key] = (expanded_property, kind)
 
         if kind == 2:
             # simple regular property: with no scoped context the
@@ -790,6 +977,47 @@ def _expand_type(type_ctx, value, rval, options):
             or len(out) != 1 else out[0]
 
 
+def _value_plan(active_ctx, active_property, options):
+    """The per-property decision tuple of _expand_value: (expanded
+    property, @type coercion, @language, @direction, code, is_kw_ep,
+    typed). Code 1/2 = bare-IRI expansion for @id/@type, 3/4 = @id/
+    @vocab coercion, 0 = none of those (same precedence as the chain
+    in _expand_value); is_kw_ep covers the "other keyword values pass
+    through" rule; typed is the literal @type to stamp (None for
+    @id/@vocab/@none). A pure function of the active context and the
+    property, memoized in the context's `_val_memo` (capped at
+    MEMO_CAP, dropped on clone). Callers bypass it under an
+    expansionMap."""
+    memo = active_ctx.get("_val_memo")
+    if memo is None:
+        memo = active_ctx["_val_memo"] = {}
+    plan = memo.get(active_property)
+    if plan is None:
+        ep = expand_iri(active_ctx, active_property, vocab=True,
+                        options=options)
+        type_ = get_context_value(active_ctx, active_property, "@type")
+        if ep == "@id":
+            code = 1
+        elif ep == "@type":
+            code = 2
+        elif type_ == "@id" or ep == "@graph":
+            code = 3
+        elif type_ == "@vocab":
+            code = 4
+        else:
+            code = 0
+        typed = type_ if type_ is not None and \
+            type_ not in ("@id", "@vocab", "@none") else None
+        if len(memo) > MEMO_CAP:
+            memo.clear()
+        plan = memo[active_property] = (
+            ep, type_,
+            get_context_value(active_ctx, active_property, "@language"),
+            get_context_value(active_ctx, active_property, "@direction"),
+            code, is_keyword(ep), typed)
+    return plan
+
+
 def _expand_value(active_ctx, active_property, value, options):
     """Value Expansion (ref lib/expand.js:930-988).
 
@@ -807,38 +1035,7 @@ def _expand_value(active_ctx, active_property, value, options):
     plan = None
     if active_property.__class__ is str and (
             options is None or options.get("expansionMap") is None):
-        memo = active_ctx.get("_val_memo")
-        if memo is None:
-            memo = active_ctx["_val_memo"] = {}
-        plan = memo.get(active_property)
-        if plan is None:
-            ep = expand_iri(active_ctx, active_property, vocab=True,
-                            options=options)
-            type_ = get_context_value(active_ctx, active_property, "@type")
-            # precompiled dispatch (same precedence as the chain below):
-            # code 1/2 = bare-IRI expansion for @id/@type, 3/4 = @id/
-            # @vocab coercion, 0 = none of those; is_kw_ep covers the
-            # "other keyword values pass through" rule; typed is the
-            # literal @type to stamp (None for @id/@vocab/@none)
-            if ep == "@id":
-                code = 1
-            elif ep == "@type":
-                code = 2
-            elif type_ == "@id" or ep == "@graph":
-                code = 3
-            elif type_ == "@vocab":
-                code = 4
-            else:
-                code = 0
-            typed = type_ if type_ is not None and \
-                type_ not in ("@id", "@vocab", "@none") else None
-            plan = memo[active_property] = (
-                ep, type_,
-                get_context_value(active_ctx, active_property,
-                                  "@language"),
-                get_context_value(active_ctx, active_property,
-                                  "@direction"),
-                code, is_keyword(ep), typed)
+        plan = _value_plan(active_ctx, active_property, options)
     if plan is not None:
         expanded_property, type_, language, direction, code, is_kw_ep, \
             typed = plan

@@ -16,7 +16,7 @@ import copy
 
 from .util import (
     JsonLdError, IdentifierIssuer, add_value, compare_values, has_value,
-    is_keyword, is_value, is_list, is_subject_reference, is_blank_node_id,
+    is_keyword, is_list, is_subject_reference, is_blank_node_id, MEMO_CAP,
 )
 
 
@@ -58,36 +58,25 @@ def _ref_ids(memo: dict, subject: dict, prop: str) -> set:
     return s
 
 
-def _add_ref(memo: dict, subject: dict, prop: str, id_) -> None:
-    """add_value(subject, prop, {'@id': id_}, property_is_array=True,
-    allow_duplicate=False) with the ref-memo replacing the list scan
-    (identical semantics, see _ref_ids)."""
-    s = _ref_ids(memo, subject, prop)
-    if id_ in s:
-        return
-    s.add(id_)
-    # no duplicate exists (the memo is exact), so skip the scan too
-    add_value(subject, prop, {"@id": id_}, property_is_array=True)
-
-
 def create_node_map(input_, graphs: dict, graph: str,
                     issuer: IdentifierIssuer, name: str | None = None,
                     list_: dict | None = None, _memo: dict | None = None):
     """Node Map Generation (ref lib/nodeMap.js:47-223)."""
     if _memo is None:
         _memo = {}
-    if isinstance(input_, list):
-        for node in input_:
-            create_node_map(node, graphs, graph, issuer, None, list_, _memo)
-        return
-
-    if not isinstance(input_, dict):
-        if list_ is not None:
-            list_["@list"].append(input_)
-        return
+    if input_.__class__ is not dict:
+        if isinstance(input_, list):
+            for node in input_:
+                create_node_map(node, graphs, graph, issuer, None, list_,
+                                _memo)
+            return
+        if not isinstance(input_, dict):
+            if list_ is not None:
+                list_["@list"].append(input_)
+            return
 
     # value objects (ref lib/nodeMap.js:62-82)
-    if is_value(input_):
+    if "@value" in input_:
         if "@type" in input_:
             type_ = input_["@type"]
             if isinstance(type_, str) and type_.startswith("_:"):
@@ -110,14 +99,18 @@ def create_node_map(input_, graphs: dict, graph: str,
 
     # node object ---------------------------------------------------------
     # relabel bnode @type values first (ref lib/nodeMap.js:87-94)
-    if "@type" in input_:
-        types = input_["@type"]
-        new_types = []
-        for t in (types if isinstance(types, list) else [types]):
-            if isinstance(t, str) and t.startswith("_:"):
-                t = issuer.get_id(t)
-            new_types.append(t)
-        input_["@type"] = new_types if isinstance(types, list) else new_types[0]
+    types = input_.get("@type")
+    if types is not None or "@type" in input_:
+        if isinstance(types, list):
+            for t in types:
+                if isinstance(t, str) and t.startswith("_:"):
+                    input_["@type"] = [
+                        issuer.get_id(t)
+                        if isinstance(t, str) and t.startswith("_:") else t
+                        for t in types]
+                    break
+        elif isinstance(types, str) and types.startswith("_:"):
+            input_["@type"] = issuer.get_id(types)
 
     if name is None:
         name = input_.get("@id")
@@ -136,23 +129,34 @@ def create_node_map(input_, graphs: dict, graph: str,
         elif name is None or is_blank_node_id(name):
             name = issuer.get_id(name)
 
-    subjects = graphs.setdefault(graph, {})
-    if name == "undefined" and is_list(input_):
-        subject = subjects.setdefault(name, {})
-    else:
-        subject = subjects.setdefault(name, {"@id": name})
+    subjects = graphs.get(graph)
+    if subjects is None:
+        subjects = graphs[graph] = {}
+    subject = subjects.get(name)
+    # a fresh subject has no ref-memo sets (_ref_ids) until a recursion
+    # could reach it, so until then its properties dedupe node
+    # references in sets of their own, left out of the memo (a later
+    # _ref_ids builds from the live list)
+    fresh = subject is None
+    if fresh:
+        subject = subjects[name] = {} \
+            if name == "undefined" and is_list(input_) else {"@id": name}
 
     if list_ is not None:
         list_["@list"].append({"@id": name})
 
-    for property_ in sorted(input_.keys()):  # sorted (ref lib/nodeMap.js:111)
+    shape = _NODE_SHAPES.get(tuple(input_))
+    for property_, cat in shape or _node_shape(input_):  # sorted (ref :111)
         objects = input_[property_]
 
-        if property_ == "@id":
+        if cat == _K_PROP:
+            prop_out = property_
+        elif cat == _K_ID:
             continue
 
         # @reverse: invert onto the object node (ref lib/nodeMap.js:119-135)
-        if property_ == "@reverse":
+        elif cat == _K_REVERSE:
+            fresh = False
             referenced_node = {"@id": name}
             reverse_map = input_["@reverse"]
             for reverse_property, items in reverse_map.items():
@@ -179,20 +183,22 @@ def create_node_map(input_, graphs: dict, graph: str,
             continue
 
         # @graph: recurse with graph = name (ref lib/nodeMap.js:139-145)
-        if property_ == "@graph":
+        elif cat == _K_GRAPH:
+            fresh = False
             graphs.setdefault(name, {})
             g = graph if graph == "@merged" else name
             create_node_map(objects, graphs, g, issuer, None, None, _memo)
             continue
 
         # @included (ref lib/nodeMap.js:149-151)
-        if property_ == "@included":
+        elif cat == _K_INCLUDED:
+            fresh = False
             create_node_map(objects, graphs, graph, issuer, None, None,
                             _memo)
             continue
 
         # other keywords copied (ref lib/nodeMap.js:154-166)
-        if property_ != "@type" and is_keyword(property_):
+        elif cat == _K_KEYWORD:
             if property_ == "@index" and "@index" in subject and \
                     (input_["@index"] != subject["@index"] or
                      (isinstance(input_["@index"], dict) and
@@ -203,96 +209,187 @@ def create_node_map(input_, graphs: dict, graph: str,
             subject[property_] = input_[property_]
             continue
 
-        # bnode property (generalized RDF); relabel (ref lib/nodeMap.js:170-178)
-        # (dict keys are always str — startswith IS is_blank_node_id here)
-        prop_out = property_
-        if property_.startswith("_:"):
+        elif cat == _K_TYPE:
+            prop_out = "@type"
+        else:
+            # bnode property (generalized RDF); relabel
+            # (ref lib/nodeMap.js:170-178)
             prop_out = issuer.get_id(property_)
 
         # ensure property is added for empty arrays (ref :176-180)
-        if isinstance(objects, list) and len(objects) == 0:
-            add_value(subject, prop_out, [], property_is_array=True)
-            continue
-
-        if property_ == "@type":
-            for type_ in (objects if isinstance(objects, list) else [objects]):
-                add_value(subject, "@type", type_, property_is_array=True,
-                          allow_duplicate=False)
-            continue
-
-        if not isinstance(objects, list):
+        if objects.__class__ is not list and not isinstance(objects, list):
             objects = [objects]
+        elif not objects:
+            if prop_out not in subject:
+                subject[prop_out] = []
+            continue
 
-        for o in objects:
-            # inlined is_value/is_list (one isinstance + key probes —
-            # this loop dominates node-map CPU on flat corpora)
-            _is_dict = isinstance(o, dict)
-            if _is_dict and "@value" not in o and "@list" not in o:
-                # node or subject reference (ref lib/nodeMap.js:182-205)
-                if "@id" in o and not o["@id"]:
-                    continue  # skip null/empty @id (JS falsy, ref :190-192)
-                id_ = o.get("@id")
-                if id_ is None or is_blank_node_id(id_):
-                    id_ = issuer.get_id(id_)
-                # add the reference BEFORE recursing — a re-embedded
-                # subject's recursion may add more values to THIS
-                # subject's property, and insertion order is observable
-                # in flatten output (ref lib/nodeMap.js:197-201)
-                _add_ref(_memo, subject, prop_out, id_)
-                if len(o) == 1 and "@id" in o:
-                    # pure subject reference: the recursion's only
-                    # effect is registering the target subject (no
-                    # properties to walk) — inline it (hot: mention /
-                    # link refs dominate transcript node maps)
-                    if id_ not in subjects:
-                        subjects[id_] = {"@id": id_}
-                    continue
-                create_node_map(o, graphs, graph, issuer, id_, None, _memo)
-            elif _is_dict and "@list" in o:
-                result = {"@list": []}
-                create_node_map(o["@list"], graphs, graph, issuer, name,
-                                result, _memo)
-                add_value(subject, prop_out, result, property_is_array=True,
-                          allow_duplicate=False)
+        if cat == _K_TYPE:
+            if "@type" not in subject and len(objects) == 1:
+                subject["@type"] = [objects[0]]
             else:
-                # value object (or GIGO raw scalar): the recursion
-                # with list_=None only relabels a bnode @type and
-                # returns — inlined (value objects are the bulk of
-                # create_node_map calls on flat corpora; ~1/3 of
-                # node-map CPU)
-                if _is_dict:
-                    t = o.get("@type")
-                    if t.__class__ is str and t.startswith("_:"):
-                        o["@type"] = issuer.get_id(t)
-                if _is_dict and "@id" in o:
+                for type_ in objects:
+                    add_value(subject, "@type", type_,
+                              property_is_array=True, allow_duplicate=False)
+            continue
+
+        if fresh and len(objects) == 1:
+            # the one value of a property of a fresh subject that no
+            # recursion has reached yet: prop_out is not in the subject,
+            # so a plain value object's set-semantics insert is a new
+            # one-element list
+            o = objects[0]
+            if o.__class__ is dict and "@value" in o and \
+                    "@list" not in o and "@id" not in o:
+                t = o.get("@type")
+                if t.__class__ is str and t.startswith("_:"):
+                    o["@type"] = issuer.get_id(t)
+                subject[prop_out] = [o]
+                continue
+
+        refs = None  # the @ids among subject[prop_out], once read
+        own = False  # refs is this call's own set, not the memo's
+        for o in objects:
+            # inlined is_value/is_list (one class test + key probes —
+            # this loop dominates node-map CPU on flat corpora)
+            if o.__class__ is dict or isinstance(o, dict):
+                if "@list" in o:
+                    fresh = False
+                    if own:
+                        refs = None
+                    result = {"@list": []}
+                    create_node_map(o["@list"], graphs, graph, issuer, name,
+                                    result, _memo)
+                    add_value(subject, prop_out, result,
+                              property_is_array=True, allow_duplicate=False)
+                    continue
+                if "@value" not in o:
+                    # node or subject reference (ref lib/nodeMap.js:182-205)
+                    # skip null/empty @id (JS falsy, ref :190-192)
+                    if "@id" in o and not o["@id"]:
+                        continue
+                    id_ = o.get("@id")
+                    if id_ is None or ((id_.__class__ is str or
+                                        isinstance(id_, str)) and
+                                       id_.startswith("_:")):
+                        id_ = issuer.get_id(id_)
+                    # add the reference BEFORE recursing — a re-embedded
+                    # subject's recursion may add more values to THIS
+                    # subject's property, and insertion order is
+                    # observable in flatten output (ref
+                    # lib/nodeMap.js:197-201). The set-semantics insert
+                    # (add_value with allow_duplicate=False) is a set
+                    # membership test, exact by _ref_ids; a memo set
+                    # stays the memo's own object, so inserts made by a
+                    # recursion are seen here
+                    if refs is None:
+                        own = fresh
+                        refs = set() if own else \
+                            _ref_ids(_memo, subject, prop_out)
+                    if id_ not in refs:
+                        refs.add(id_)
+                        ex = subject.get(prop_out)
+                        if ex is None:
+                            subject[prop_out] = [{"@id": id_}]
+                        elif ex.__class__ is list:
+                            ex.append({"@id": id_})
+                        else:
+                            add_value(subject, prop_out, {"@id": id_},
+                                      property_is_array=True)
+                    if len(o) == 1 and "@id" in o:
+                        # pure subject reference: the recursion's only
+                        # effect is registering the target subject (no
+                        # properties to walk) — inline it (hot: mention
+                        # / link refs dominate transcript node maps)
+                        if id_ not in subjects:
+                            subjects[id_] = {"@id": id_}
+                        continue
+                    fresh = False
+                    if own:
+                        refs = None
+                    create_node_map(o, graphs, graph, issuer, id_, None,
+                                    _memo)
+                    continue
+                # value object: the recursion with list_=None only
+                # relabels a bnode @type and returns — inlined (value
+                # objects are the bulk of create_node_map calls on
+                # flat corpora; ~1/3 of node-map CPU)
+                t = o.get("@type")
+                if t.__class__ is str and t.startswith("_:"):
+                    o["@type"] = issuer.get_id(t)
+                if "@id" in o:
                     # GIGO value object carrying @id: it participates
                     # in reference equality via the @id fallback, so
                     # keep the ref-memo coherent (add its id only when
                     # the element is genuinely inserted)
+                    fresh = False
+                    if own:
+                        refs = None
                     if not has_value(subject, prop_out, o):
                         _ref_ids(_memo, subject, prop_out).add(o["@id"])
                         add_value(subject, prop_out, o,
                                   property_is_array=True)
+                    continue
+            # inlined add_value(subject, prop_out, o,
+            # property_is_array=True, allow_duplicate=False) of a value
+            # object (or GIGO raw scalar): every non-keyword property on
+            # a subject is list-valued (all inserts above use
+            # property_is_array), so the set-semantics insert is a
+            # scan + append — value objects are the bulk of node-map
+            # inserts
+            ex = subject.get(prop_out)
+            if ex is None:
+                subject[prop_out] = [o]
+            elif isinstance(ex, list):
+                for e in ex:
+                    if compare_values(o, e):
+                        break
                 else:
-                    # inlined add_value(subject, prop_out, o,
-                    # property_is_array=True, allow_duplicate=False):
-                    # every non-keyword property on a subject is list-
-                    # valued (all inserts above use property_is_array),
-                    # so the set-semantics insert is a scan + append —
-                    # value objects are the bulk of node-map inserts
-                    ex = subject.get(prop_out)
-                    if ex is None:
-                        subject[prop_out] = [o]
-                    elif isinstance(ex, list):
-                        for e in ex:
-                            if compare_values(o, e):
-                                break
-                        else:
-                            ex.append(o)
-                    else:
-                        add_value(subject, prop_out, o,
-                                  property_is_array=True,
-                                  allow_duplicate=False)
+                    ex.append(o)
+            else:
+                add_value(subject, prop_out, o, property_is_array=True,
+                          allow_duplicate=False)
+
+
+# create_node_map's key categories, in the order of its dispatch
+(_K_PROP, _K_ID, _K_REVERSE, _K_GRAPH, _K_INCLUDED, _K_KEYWORD, _K_TYPE,
+ _K_BNODE_PROP) = range(8)
+
+# node-shape plans of create_node_map: a node's keys, sorted, each with
+# its category. A pure function of the key strings, so the memo is
+# keyed by the key tuple alone; capped at MEMO_CAP like util's string
+# memos
+_NODE_SHAPES: dict = {}
+
+
+def _node_shape(node: dict) -> tuple:
+    key = tuple(node)
+    plan = _NODE_SHAPES.get(key)
+    if plan is None:
+        plan = tuple((p, _key_category(p)) for p in sorted(key))
+        if len(_NODE_SHAPES) > MEMO_CAP:
+            _NODE_SHAPES.clear()
+        _NODE_SHAPES[key] = plan
+    return plan
+
+
+def _key_category(prop: str) -> int:
+    if prop == "@id":
+        return _K_ID
+    if prop == "@reverse":
+        return _K_REVERSE
+    if prop == "@graph":
+        return _K_GRAPH
+    if prop == "@included":
+        return _K_INCLUDED
+    if prop == "@type":
+        return _K_TYPE
+    if is_keyword(prop):
+        return _K_KEYWORD
+    # dict keys are always str — startswith IS is_blank_node_id here
+    if prop.startswith("_:"):
+        return _K_BNODE_PROP
+    return _K_PROP
 
 
 def merge_node_maps(graphs: dict) -> dict:

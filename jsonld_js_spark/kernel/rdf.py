@@ -25,7 +25,7 @@ from .util import (
     XSD_BOOLEAN, XSD_INTEGER, XSD_DOUBLE, canonical_double,
     canonical_integer, is_absolute_iri, is_blank_node_id, is_keyword,
     is_value, is_list, is_double, is_integer_number, jcs_canonicalize,
-    js_parse_float, parse_json, MEMO_CAP,
+    js_parse_float, parse_json, MEMO_CAP, _ABS_IRI_CACHE, _ABSOLUTE_IRI_RE,
 )
 
 I18N_NS = "https://www.w3.org/ns/i18n#"
@@ -51,79 +51,121 @@ def to_rdf(expanded, options: dict | None = None) -> list[tuple]:
     return dataset
 
 
-# predicate classification memo (pure per string): 0 = relative IRI
-# (skipped), 1 = named, 2 = blank node (skipped unless generalized
-# RDF). Capped at MEMO_CAP.
-_PRED_CLASS: dict = {}
+# subject-shape plans of _graph_to_rdf: a node's emitting keys, sorted,
+# each with its class — 0 = @type, 1 = named predicate, 2 = blank-node
+# predicate (emitted only as generalized RDF); @id, the other keywords
+# and relative-IRI predicates are left out. A pure function of the key
+# strings, keyed by the key tuple; capped at MEMO_CAP.
+_RDF_SHAPES: dict = {}
+
+
+def _rdf_shape(node: dict) -> tuple:
+    key = tuple(node)
+    plan = _RDF_SHAPES.get(key)
+    if plan is None:
+        plan = []
+        for prop in sorted(key):
+            if prop == "@type":
+                plan.append((prop, 0))
+            elif prop in KEYWORDS:
+                continue  # other keywords skipped (ref lib/toRdf.js:97-99)
+            # relative-IRI predicates skipped (ref lib/toRdf.js:119-121)
+            elif is_blank_node_id(prop):
+                plan.append((prop, 2))
+            elif is_absolute_iri(prop):
+                plan.append((prop, 1))
+        plan = tuple(plan)
+        if len(_RDF_SHAPES) > MEMO_CAP:
+            _RDF_SHAPES.clear()
+        _RDF_SHAPES[key] = plan
+    return plan
 
 
 def _graph_to_rdf(dataset, graph: dict, graph_term: str, issuer, options):
     """(ref lib/toRdf.js:88-145)"""
     generalized = options.get("produceGeneralizedRdf")
+    append = dataset.append
     for id_ in sorted(graph.keys()):
+        node = graph[id_]
+        if len(node) == 1 and "@id" in node:
+            continue  # a bare subject (e.g. a mention entity) emits nothing
         # relative-IRI subjects skipped (ref lib/toRdf.js:108-111) —
         # hoisted out of the property loop: pure in id_, and nothing
         # observable (no issuer allocation, no hook) happens before
         # the reference's per-property check fires
-        if not (is_absolute_iri(id_) or is_blank_node_id(id_)):
+        # (a subject IRI is mostly unique: matched, not memoized)
+        if not (_ABS_IRI_CACHE.get(id_) or _ABSOLUTE_IRI_RE.match(id_) or
+                id_.startswith("_:")):
             continue
-        node = graph[id_]
-        for property_ in sorted(node.keys()):
+        for property_, cls in _rdf_shape(node):
             items = node[property_]
-            if property_ == "@id":
-                continue
-            if property_ == "@type":
+            if cls == 0:
                 # direct rdf:type emission — the generic path would
                 # allocate a {'@id': t} wrapper per type value just to
                 # have _object_to_rdf unwrap it; this mirrors its
                 # node-reference branch exactly (ref lib/toRdf.js:274)
                 for t in (items if isinstance(items, list) else [items]):
-                    if t is None:
+                    if not isinstance(t, str):
                         continue
-                    if is_blank_node_id(t):
-                        dataset.append((id_, RDF_TYPE, t, "BlankNode",
-                                        None, None, graph_term))
-                    elif is_absolute_iri(t):
-                        dataset.append((id_, RDF_TYPE, t, "NamedNode",
-                                        None, None, graph_term))
+                    if t.startswith("_:"):
+                        append((id_, RDF_TYPE, t, "BlankNode",
+                                None, None, graph_term))
+                    elif _ABS_IRI_CACHE.get(t) or is_absolute_iri(t):
+                        append((id_, RDF_TYPE, t, "NamedNode",
+                                None, None, graph_term))
                 continue
-            if property_ in KEYWORDS:
-                continue  # other keywords skipped (ref lib/toRdf.js:97-99)
-            else:
-                property_out = property_
-                items_iter = items if isinstance(items, list) else [items]
-
-            cls = _PRED_CLASS.get(property_out)
-            if cls is None:
-                if is_blank_node_id(property_out):
-                    cls = 2
-                elif is_absolute_iri(property_out):
-                    cls = 1
-                else:
-                    cls = 0
-                if len(_PRED_CLASS) > MEMO_CAP:
-                    _PRED_CLASS.clear()
-                _PRED_CLASS[property_out] = cls
-            # relative-IRI predicates skipped (ref lib/toRdf.js:119-121);
             # bnode predicates skipped unless generalized RDF
             # (ref lib/toRdf.js:124-127)
-            if cls == 0 or (cls == 2 and not generalized):
+            if cls == 2 and not generalized:
                 continue
 
-            for item in items_iter:
-                # inlined is_list (hot loop: one isinstance + key probe)
-                if isinstance(item, dict) and "@list" in item:
-                    first = _list_to_rdf(dataset, item["@list"], graph_term,
-                                         issuer, options)
-                    obj = first
+            for item in (items if isinstance(items, list) else [items]):
+                if item.__class__ is dict:
+                    # quads straight from the two commonest value
+                    # shapes: a plain or datatyped string literal and
+                    # a node reference — what _object_to_rdf returns
+                    # for them, minus the call
+                    n = len(item)
+                    if n == 1:
+                        v = item.get("@value")
+                        if v.__class__ is str:
+                            append((id_, property_, v, "Literal",
+                                    XSD_STRING, None, graph_term))
+                            continue
+                        if v.__class__ is int and -1e21 < v < 1e21:
+                            # neither is_double nor fractional: the
+                            # canonical integer is its decimal form
+                            append((id_, property_, str(v), "Literal",
+                                    XSD_INTEGER, None, graph_term))
+                            continue
+                        v = item.get("@id")
+                        if v.__class__ is str and not v.startswith("_:"):
+                            if _ABS_IRI_CACHE.get(v) or is_absolute_iri(v):
+                                append((id_, property_, v, "NamedNode",
+                                        None, None, graph_term))
+                            continue
+                    elif n == 2:
+                        v = item.get("@value")
+                        t = item.get("@type")
+                        if v.__class__ is str and t.__class__ is str and \
+                                t != "@json" and t != XSD_DOUBLE:
+                            append((id_, property_, v, "Literal",
+                                    t or XSD_STRING, None, graph_term))
+                            continue
+                    if "@list" in item:  # inlined is_list
+                        obj = _list_to_rdf(dataset, item["@list"],
+                                           graph_term, issuer, options)
+                    else:
+                        obj = _object_to_rdf(item, dataset, graph_term,
+                                             issuer, options)
                 else:
                     obj = _object_to_rdf(item, dataset, graph_term, issuer,
                                          options)
                 if obj is None:
                     continue  # relative-IRI object (ref lib/toRdf.js:137-140)
                 # direct 7-tuple (no intermediate concat allocations)
-                dataset.append((id_, property_out, obj[0], obj[1], obj[2],
-                                obj[3], graph_term))
+                append((id_, property_, obj[0], obj[1], obj[2], obj[3],
+                        graph_term))
 
 
 def _list_to_rdf(dataset, list_items, graph_term, issuer, options):

@@ -90,10 +90,12 @@ def is_keyword_form(value) -> bool:
     return isinstance(value, str) and bool(_KEYWORD_FORM_RE.match(value))
 
 
-# Entry cap shared by the kernel's per-process string memos
-# (_ABS_IRI_CACHE, rdf._PRED_CLASS, the contexts' _iri_memo): a memo is
-# cleared before an insert once it holds more than this, so a stream of
-# unique IRIs cannot grow a worker's memory with the data.
+# Entry cap shared by the kernel's memos: the per-process ones
+# (_ABS_IRI_CACHE, nodemap._NODE_SHAPES, rdf._RDF_SHAPES) and the ones
+# that ride a processed context (_iri_memo, _val_memo, _obj_memo,
+# _shape_memo, _ci_memo). A memo is cleared before an insert once it
+# holds more than this, so a stream of unique IRIs or shapes cannot
+# grow a worker's memory with the data.
 MEMO_CAP = 65536
 
 _ABS_IRI_CACHE: dict = {}

@@ -60,28 +60,33 @@ _QUAD_TYPE = pa.struct([(name, pa.string())
 def build_conversation_doc(conv_id: str, turns: list[dict]) -> dict:
     """One conversation (turn dicts sorted by turn_idx) → JSON-LD doc.
     A NULL text is omitted, as JSON-LD expansion drops a null value."""
-    turn_nodes = []
-    for t in turns:
-        node = {
-            "@id": turn_iri(conv_id, t["turn_idx"]),
-            "@type": "Turn",
-            "turnIndex": int(t["turn_idx"]),
-            "role": t["role"],
-            "ts": t["ts_lex"],
-        }
-        if t["text"] is not None:
-            node["text"] = t["text"]
-        if t.get("tool"):
-            node["usesTool"] = "tool:" + t["tool"]
-        if t["mention_iris"]:
-            node["mentions"] = t["mention_iris"]
-        turn_nodes.append(node)
     return {
         "@context": TRANSCRIPT_CONTEXT,
         "@id": conv_iri(conv_id),
         "@type": "Conversation",
-        "hasTurn": turn_nodes,
+        "hasTurn": [_turn_node(conv_id, t["turn_idx"], t["role"], t["text"],
+                               t.get("tool"), t["ts_lex"], t["mention_iris"])
+                    for t in turns],
     }
+
+
+def _turn_node(conv_id, turn_idx, role, text, tool, ts_lex,
+               mention_iris) -> dict:
+    """The JSON-LD node of one turn of build_conversation_doc."""
+    node = {
+        "@id": turn_iri(conv_id, turn_idx),
+        "@type": "Turn",
+        "turnIndex": int(turn_idx),
+        "role": role,
+        "ts": ts_lex,
+    }
+    if text is not None:
+        node["text"] = text
+    if tool:
+        node["usesTool"] = "tool:" + tool
+    if mention_iris:
+        node["mentions"] = mention_iris
+    return node
 
 
 _SHARED_CTX = None
@@ -172,14 +177,13 @@ def _conversation_quads(cols, end: int, options: dict,
         stop = start + 1
         while stop < end and conv_ids[stop] == cid:
             stop += 1
-        turns = [
-            {"turn_idx": turn_idx[k], "role": role[k], "text": text[k],
-             "tool": tool[k], "ts_lex": ts_lex[k],
-             "mention_iris": [_ENT_PREFIX + d
-                              for d in (mention_tails[k] or "").split()]}
-            for k in range(start, stop)]
-        doc = build_conversation_doc(cid, turns)
-        del doc["@context"]  # context pre-processed (activeCtx)
+        # build_conversation_doc's document, built straight from the
+        # columns; no @context, which is pre-processed (activeCtx)
+        doc = {"@id": conv_iri(cid), "@type": "Conversation", "hasTurn": [
+            _turn_node(cid, turn_idx[k], role[k], text[k], tool[k],
+                       ts_lex[k], [_ENT_PREFIX + d for d in
+                                   (mention_tails[k] or "").split()])
+            for k in range(start, stop)]}
         if doc_transform is not None:
             doc = doc_transform(doc)
         # set-semantics dedup is per-node in the node map; emit raw
@@ -210,9 +214,11 @@ def _kernel_batches(doc_transform=None, quad_filter=None,
                    "processingMode": "json-ld-1.1"}
         if expansion_map is not None:
             # per-event callback inside kernel expansion
-            # (ref lib/jsonld.js:109-117); NOTE: disables the IRI memo on
-            # this worker's shared context — use doc_transform/quad_filter
-            # for hot-path rewrites and reserve this for event-level hooks
+            # (ref lib/jsonld.js:109-117); NOTE: expansion then bypasses
+            # every memo and plan of this worker's shared context (the
+            # IRI, value, key and node-shape memos) — use
+            # doc_transform/quad_filter for hot-path rewrites and
+            # reserve this for event-level hooks
             options["expansionMap"] = expansion_map
         pending: list[tuple] = []
         for cols, end in _whole_conversations(batches):

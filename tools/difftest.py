@@ -9,6 +9,9 @@ COMBINATIONS nobody thought to write down. Round-1 lesson: fixture
 mining found 10+ kernel bugs; this automates the mining.
 
 Usage: python tools/difftest.py [n_docs=200] [seed0=0]
+       [--oracle|--fromrdf|--contexts]
+`--oracle` needs no reference: it checks the kernel's perf options
+against bypassed runs (see run_oracle_sweep).
 Exit 1 on any divergence, printing the reproducing document.
 """
 from __future__ import annotations
@@ -715,6 +718,115 @@ def run_fromrdf_sweep(n_docs: int, seed0: int) -> int:
     return 1 if mismatches else 0
 
 
+# --- reference-free purity oracle -------------------------------------------
+
+# the reference-free relation runs every old DIFFTEST_* mode in turn
+ORACLE_MODES = {
+    "default": {},
+    "MODE10": {"DIFFTEST_MODE10": "1"},
+    "UNICODE": {"DIFFTEST_UNICODE": "1"},
+    "DEPTH5": {"DIFFTEST_DEPTH": "5"},
+}
+
+
+def _outcome(fn):
+    """fn()'s result as comparable JSON text, or its error code; an
+    internal crash (the GIGO parity TypeErrors) by its type, as in
+    run_mine."""
+    from jsonld_js_spark.kernel import JsonLdError
+    try:
+        return "ok", json.dumps(fn(), sort_keys=True, default=repr)
+    except JsonLdError as e:
+        return "error", e.code
+    except RecursionError:
+        return "error", "recursion"
+    except Exception as e:
+        return "error", f"INTERNAL:{type(e).__name__}"
+
+
+def purity_case(seed: int) -> tuple[str, str | None]:
+    """The perf-option relation on random_doc(seed): the document's
+    context is processed once, then expand and to_rdf run cold and hot
+    on that shared activeCtx. Each must equal the same call under a
+    no-op expansionMap, which bypasses every memo and plan (an
+    expansionMap returning None keeps the default behaviour). Returns
+    (status, divergence): status is "checked", or "no-context" (a
+    top-level array document) or "context-error" (the context does not
+    process), where the whole document goes through the plain calls
+    instead; divergence is None when every side agrees."""
+    from jsonld_js_spark.kernel import ContextResolver, expand, to_rdf
+    from jsonld_js_spark.kernel.api import process_context_api
+    doc, documents = random_doc(seed)
+    opts: dict = {}
+    if seed % 13 == 0 or os.environ.get("DIFFTEST_MODE10"):
+        opts["processingMode"] = "json-ld-1.0"
+    if seed % 8 == 1:
+        opts["base"] = "http://base.org/dir/doc"
+    if documents:
+        opts["contextResolver"] = ContextResolver(documents=documents)
+    bypass = dict(opts, expansionMap=lambda info: None)
+
+    def relation(body, plain, bypassed):
+        want = [_outcome(lambda: expand(body, dict(bypassed))),
+                _outcome(lambda: to_rdf(body, dict(bypassed)))]
+        for run in ("cold", "hot"):
+            got = [_outcome(lambda: expand(body, dict(plain))),
+                   _outcome(lambda: to_rdf(body, dict(plain)))]
+            for op, g, w in zip(("expand", "toRDF"), got, want):
+                if g != w:
+                    return f"{op} {run}: {g[1][:600]}\n  bypassed: " \
+                           f"{w[1][:600]}"
+        return None
+
+    if not isinstance(doc, dict) or "@context" not in doc:
+        return "no-context", relation(doc, opts, bypass)
+    try:
+        ctx = process_context_api(None, doc["@context"], dict(opts))
+    except Exception:  # compared by the relation on the whole document
+        return "context-error", relation(doc, opts, bypass)
+    body = {k: v for k, v in doc.items() if k != "@context"}
+    bypass_ctx = process_context_api(None, doc["@context"], dict(bypass))
+    return "checked", relation(body, dict(opts, activeCtx=ctx),
+                               dict(bypass, activeCtx=bypass_ctx))
+
+
+def run_oracle_sweep(n_docs: int, seed0: int) -> int:
+    """Reference-free mode: the purity relation over n_docs seeds in
+    each ORACLE_MODES mode. Exit status 1 on any divergence, printing
+    the document."""
+    global UNI
+    failed = 0
+    for mode, env in ORACLE_MODES.items():
+        saved = {k: os.environ.get(k) for k in env}
+        os.environ.update(env)
+        UNI = bool(os.environ.get("DIFFTEST_UNICODE"))
+        counts: dict = {}
+        bad = 0
+        try:
+            for seed in range(seed0, seed0 + n_docs):
+                status, why = purity_case(seed)
+                counts[status] = counts.get(status, 0) + 1
+                if why is not None:
+                    bad += 1
+                    print(f"== ORACLE DIVERGENCE mode={mode} seed={seed}: "
+                          f"{why}")
+                    print("   doc:", json.dumps(random_doc(seed)[0],
+                                                sort_keys=True)[:2000])
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    os.environ.pop(k, None)
+                else:
+                    os.environ[k] = v
+            UNI = bool(os.environ.get("DIFFTEST_UNICODE"))
+        failed += bad
+        print(f"ORACLE {mode}: seeds={n_docs} divergences={bad} "
+              + " ".join(f"{k}={v}" for k, v in sorted(counts.items())))
+    print("DIFFTEST-ORACLE", "FAIL" if failed else "OK",
+          f"divergences={failed}")
+    return 1 if failed else 0
+
+
 def run_reference_batch(requests: list[dict]) -> list[dict]:
     env = dict(os.environ, NODE_PATH=os.path.join(HARNESS, "node_modules"))
     out = subprocess.run(
@@ -1099,4 +1211,6 @@ if __name__ == "__main__":
         sys.exit(run_fromrdf_sweep(n, s0))
     if "--contexts" in sys.argv:
         sys.exit(run_context_sweep(n, s0))
+    if "--oracle" in sys.argv:
+        sys.exit(run_oracle_sweep(n, s0))
     sys.exit(main(n, s0))
