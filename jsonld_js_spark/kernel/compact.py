@@ -18,9 +18,9 @@ from .context import (
     get_scoped_context, process_context,
 )
 from .util import (
-    JsonLdError, is_keyword, is_absolute_iri, add_value, is_value, is_list,
-    is_graph, is_simple_graph, is_subject, is_subject_reference,
-    remove_base, parse_iri, prepend_base, MEMO_CAP,
+    JsonLdError, is_keyword, add_value, is_value, is_list, is_graph,
+    is_simple_graph, is_subject_reference, remove_base, parse_iri,
+    prepend_base, MEMO_CAP,
 )
 
 

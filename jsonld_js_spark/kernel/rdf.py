@@ -23,9 +23,9 @@ from .util import (
     JsonLdError, IdentifierIssuer, KEYWORDS, RDF, RDF_TYPE, RDF_FIRST,
     RDF_REST, RDF_NIL, RDF_LANGSTRING, RDF_JSON_LITERAL, XSD_STRING,
     XSD_BOOLEAN, XSD_INTEGER, XSD_DOUBLE, canonical_double,
-    canonical_integer, is_absolute_iri, is_blank_node_id, is_keyword,
-    is_value, is_list, is_double, is_integer_number, jcs_canonicalize,
-    js_parse_float, parse_json, MEMO_CAP, _ABS_IRI_CACHE, _ABSOLUTE_IRI_RE,
+    canonical_integer, is_absolute_iri, is_blank_node_id, is_double,
+    is_integer_number, jcs_canonicalize, js_parse_float, parse_json,
+    MEMO_CAP, _ABS_IRI_CACHE, _ABSOLUTE_IRI_RE,
 )
 
 I18N_NS = "https://www.w3.org/ns/i18n#"

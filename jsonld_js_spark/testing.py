@@ -61,6 +61,8 @@ def _bnodes_of(quads: frozenset) -> set:
     for s, p, ov, ott, *_rest, g in quads:
         if _is_bnode(s):
             out.add(s)
+        if _is_bnode(p):  # generalized RDF
+            out.add(p)
         if ott in ("BlankNode",):
             out.add(ov)
         if _is_bnode(g):
@@ -75,15 +77,18 @@ def _signature_refine(quads: frozenset, rounds: int = 4) -> dict:
         nxt = {b: [] for b in sig}
         for s, p, ov, ott, odt, olang, g in quads:
             s_tag = sig.get(s, s) if _is_bnode(s) else s
+            p_tag = sig.get(p, p) if _is_bnode(p) else p
             o_is_b = ott == "BlankNode"
             o_tag = sig.get(ov, ov) if o_is_b else ov
             g_tag = sig.get(g, g) if _is_bnode(g) else g
             if _is_bnode(s):
-                nxt[s].append(("S", p, o_tag, ott, odt, olang, g_tag))
+                nxt[s].append(("S", p_tag, o_tag, ott, odt, olang, g_tag))
+            if _is_bnode(p):
+                nxt[p].append(("P", s_tag, o_tag, ott, odt, olang, g_tag))
             if o_is_b:
-                nxt[ov].append(("O", p, s_tag, odt, olang, g_tag))
+                nxt[ov].append(("O", p_tag, s_tag, odt, olang, g_tag))
             if _is_bnode(g):
-                nxt[g].append(("G", p, s_tag, o_tag))
+                nxt[g].append(("G", p_tag, s_tag, o_tag))
         sig = {b: repr(sorted(map(repr, v))) for b, v in nxt.items()}
     return sig
 
@@ -92,9 +97,10 @@ def _apply_mapping(quads: frozenset, mapping: dict) -> frozenset:
     out = set()
     for s, p, ov, ott, odt, olang, g in quads:
         s2 = mapping.get(s, s) if _is_bnode(s) else s
+        p2 = mapping.get(p, p) if _is_bnode(p) else p
         ov2 = mapping.get(ov, ov) if ott == "BlankNode" else ov
         g2 = mapping.get(g, g) if _is_bnode(g) else g
-        out.add((s2, p, ov2, ott, odt, olang, g2))
+        out.add((s2, p2, ov2, ott, odt, olang, g2))
     return frozenset(out)
 
 

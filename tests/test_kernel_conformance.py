@@ -1,7 +1,8 @@
 """Kernel conformance vs reference-golden fixtures.
 
-Fixtures under tests/fixtures/ were generated by running the reference
-jsonld.js (tools/gen_fixtures.py + tools/oracle_harness). Comparators
+Fixtures under tests/fixtures/ are frozen goldens, captured once by
+running the reference jsonld.js; they are never regenerated or edited
+by hand, and the manifest test below keeps them consistent. Comparators
 mirror the reference's test strategy (ref tests/test-common.js:747-795):
 deep JSON equality for expand/flatten/compact/merge, triple-set equality
 modulo blank-node bijection for toRDF.
@@ -119,6 +120,27 @@ def test_conformance(name, op, entry):
         raise AssertionError(f"unknown op {op}")
     assert got == expect, json.dumps(
         {"got": got, "expect": expect}, indent=1, default=str)[:4000]
+
+
+def _named_files(entry):
+    yield f"{entry['name']}-in.json"
+    for spec in entry["ops"].values():
+        if "expect" in spec:
+            yield spec["expect"]
+    for key in ("context", "frame", "documents"):
+        if key in entry:
+            yield entry[key]
+
+
+def test_manifest_names_every_fixture_once():
+    """Every manifest name is unique, every file an entry names exists,
+    and every file in tests/fixtures/ is named by an entry."""
+    names = [entry["name"] for entry in MANIFEST]
+    assert sorted({n for n in names if names.count(n) > 1}) == []
+    named = {f for entry in MANIFEST for f in _named_files(entry)}
+    on_disk = set(os.listdir(FIXDIR)) - {"manifest.json"}
+    assert sorted(named - on_disk) == []
+    assert sorted(on_disk - named) == []
 
 
 def test_aggregate_tordf_pr():

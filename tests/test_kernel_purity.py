@@ -1,9 +1,10 @@
-"""The kernel's memos and node-shape plans are pure optimisations.
+"""The kernel's memos and node-shape plans are pure optimisations, and
+its algorithms agree with each other.
 
-- The perf-option relation over tools/difftest.py's document generator:
-  expand and to_rdf on a shared processed context, cold and hot, equal
-  the same calls under a no-op expansionMap, which bypasses every memo
-  and plan.
+- The relation suite over tools/difftest.py's generators: the perf
+  options (a shared processed context, cold and hot, against a run that
+  bypasses every memo and plan), the expand fixed point, and the
+  flatten, fromRDF, compact and preparedFrame relations.
 - Every memo that rides a worker-shared context is capped at
   util.MEMO_CAP, and a capped run equals a fresh-context run.
 - The kernel path's per-conversation loop equals a bypassed to_rdf on
@@ -11,13 +12,14 @@
 """
 from __future__ import annotations
 
+import collections
 import importlib
 
 import pytest
 
 from tools import difftest
 
-from jsonld_js_spark.kernel import compact, expand, to_rdf
+from jsonld_js_spark.kernel import compact, expand, from_rdf, to_rdf
 from jsonld_js_spark.pipeline.kernel_path import (
     _conversation_quads, _shared_active_ctx, build_conversation_doc,
 )
@@ -25,20 +27,54 @@ from jsonld_js_spark.vocab import ENT_NS, TRANSCRIPT_CONTEXT
 
 BYPASS = {"expansionMap": lambda info: None}
 
+# Seeds 0-399 that difftest.EXCLUSIONS' input predicates keep from each
+# relation, per generator mode: a predicate that starts to match more or
+# fewer inputs changes these.
+EXCLUDED = {
+    "default": {"expand": 26, "flatten": 62, "fromRDF": 34, "compact": 195},
+    "MODE10": {"expand": 30, "flatten": 65, "fromRDF": 38, "compact": 195},
+    "UNICODE": {"expand": 21, "flatten": 56, "fromRDF": 31, "compact": 184},
+    "DEPTH5": {"expand": 25, "flatten": 61, "fromRDF": 35, "compact": 195},
+    "REMOTE": {"expand": 25, "flatten": 60, "fromRDF": 33, "compact": 193},
+}
+
 
 @pytest.mark.parametrize("mode", sorted(difftest.ORACLE_MODES))
 def test_perf_options_equal_bypassed_run(mode, monkeypatch):
-    """Seeds 0-399 of random_doc in each generator mode: no divergence,
-    and most documents reach the shared-context comparison."""
+    """Seeds 0-399 of random_doc and random_quads in each generator mode
+    through every difftest relation: no divergence outside
+    difftest.PINNED, every pinned seed still diverges, most inputs reach
+    each relation, and the input predicates exclude the counted seeds."""
     for key, value in difftest.ORACLE_MODES[mode].items():
         monkeypatch.setenv(key, value)
     monkeypatch.setattr(difftest, "UNI", mode == "UNICODE")
-    statuses: dict = {}
+    counts: collections.Counter = collections.Counter()
     for seed in range(400):
-        status, why = difftest.purity_case(seed)
-        assert why is None, f"seed {seed}: {why}"
-        statuses[status] = statuses.get(status, 0) + 1
-    assert statuses["checked"] >= (40 if mode == "MODE10" else 300)
+        for relation, (status, why) in difftest.relations_case(seed).items():
+            if (mode, relation, seed) in difftest.PINNED:
+                assert why is not None, f"pinned {relation} seed {seed} holds"
+                status = "xfail"
+            else:
+                assert why is None, f"{relation} seed {seed}: {why}"
+            counts[relation, status.split(":")[0]] += 1
+    mode10 = mode == "MODE10"
+    assert counts["perf", "checked"] >= (40 if mode10 else 300)
+    assert counts["fromRDF", "checked"] >= (40 if mode10 else 250)
+    for relation in ("expand", "flatten", "frame", "quads"):
+        assert counts[relation, "checked"] >= 300, relation
+    assert counts["compact", "checked"] >= 200
+    assert {r: counts[r, "excluded"] for r in EXCLUDED[mode]} == \
+        EXCLUDED[mode]
+
+
+def test_fromrdf_round_trip_with_use_rdf_type():
+    """The six-quad dataset (an rdf:type edge and integer, double,
+    boolean, langString and date literals) keeps rdf:type as a property
+    under useRdfType and round-trips through toRDF."""
+    got = from_rdf(difftest.FIXED_QUADS, {"useRdfType": True})
+    assert "@type" not in got[0] and difftest.RDF_NS + "type" in got[0]
+    assert difftest.round_trip(difftest.FIXED_QUADS, {"useRdfType": True},
+                               {}) is None
 
 
 class _PeakDict(dict):

@@ -1,30 +1,46 @@
-"""Differential fuzzer: random JSON-LD documents through BOTH the
-reference jsonld.js (node oracle harness, batched) and our kernel.
+"""Reference-free relation suite for the JSON-LD kernel.
 
-Per document: expand (deep equality; error-code parity), toRDF
-(triple P/R modulo bnode bijection must be 1.0/1.0), and
-compact(expanded, same context) (deep equality). This complements the
-hand-written fixtures: the generator hits keyword/container/coercion
-COMBINATIONS nobody thought to write down. Round-1 lesson: fixture
-mining found 10+ kernel bugs; this automates the mining.
+A seeded generator (random_doc, random_quads, random_frame) feeds
+relations between the kernel's own algorithms, which need no reference
+implementation:
+- perf options: a shared activeCtx, cold and hot, equals a run that
+  bypasses every memo and plan;
+- toRDF(expand(x)) ≡ toRDF(x), and expand(expand(x)) is a fixed point;
+- toRDF(flatten(x)) ≡ toRDF(x);
+- toRDF(fromRDF(toRDF(x))) ≡ toRDF(x), also over random_quads;
+- toRDF(compact(x, ctx)) ≡ toRDF(x);
+- a preparedFrame equals a plain frame over random_frame.
+"≡" is equality modulo blank-node bijection (jsonld_js_spark.testing);
+where a side raises, both must raise the same error code. Classes that
+are lossy by spec or garbage in are excluded by input predicates
+(EXCLUSIONS); unexplained divergences are pinned (PINNED).
+tests/test_kernel_purity.py runs a bounded slice in Tier-1.
 
 Usage: python tools/difftest.py [n_docs=200] [seed0=0]
-       [--oracle|--fromrdf|--contexts]
-`--oracle` needs no reference: it checks the kernel's perf options
-against bypassed runs (see run_oracle_sweep).
-Exit 1 on any divergence, printing the reproducing document.
+Runs every relation over n_docs seeds in each ORACLE_MODES generator
+mode and prints checked, excluded, input-error and xfail counts per
+relation. Exit 1 on any divergence, printing the reproducing document.
 """
 from __future__ import annotations
 
 import json
 import os
 import random
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-HARNESS = os.path.join(REPO, "tools", "oracle_harness")
 sys.path.insert(0, REPO)
+
+from jsonld_js_spark.kernel import (  # noqa: E402
+    ContextResolver, JsonLdError, compact, expand, flatten, frame, from_rdf,
+    to_rdf,
+)
+from jsonld_js_spark.kernel.api import (  # noqa: E402
+    prepare_frame, process_context_api,
+)
+from jsonld_js_spark.testing import (  # noqa: E402
+    compare_triple_sets, normalize_quads,
+)
 
 EX = "http://example.com/"
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -586,258 +602,6 @@ def random_quads(seed: int):
     return ref_quads, deduped, opts
 
 
-def random_adversarial_context(seed: int):
-    """Random context built from valid AND invalid term-definition
-    fragments — stress for createTermDefinition's validation paths
-    (ref lib/context.js:437-940) with error-code parity."""
-    rng = random.Random(seed * 13 + 11)
-    ctx: dict = {}
-    if rng.random() < 0.4:
-        ctx["@vocab"] = rng.choice([EX, "", "./", None, 5])
-    if rng.random() < 0.25:
-        ctx["@language"] = rng.choice(["en", "", None, 7, "EN-latn-us"])
-    if rng.random() < 0.2:
-        ctx["@version"] = rng.choice([1.1, 1.0, "1.1", 2])
-    if rng.random() < 0.15:
-        ctx["@propagate"] = rng.choice([True, False, "yes"])
-    fragments = [
-        ("t1", EX + "t1"),
-        ("t2", {"@id": EX + "t2", "@prefix": rng.choice([True, False, "x"])}),
-        ("t3", {"@id": rng.choice([EX + "t3", None, 5, "@kw"]),
-                "@type": rng.choice(["@id", "@vocab", "@json", "@none",
-                                     XSD + "integer", "_:b0", 5, "rel"])}),
-        ("t4", {"@container": rng.choice(
-            ["@list", "@set", ["@list", "@set"], ["@graph", "@list"],
-             "@index", ["@index", "@id"], "@unknown", 5,
-             ["@type"], ["@type", "@set"]])}),
-        ("t5", {"@reverse": rng.choice(
-            [EX + "rev", "@id", 5]),
-            **({"@container": rng.choice(["@set", "@list", "@index"])}
-               if rng.random() < 0.5 else {})}),
-        ("t6", {"@id": EX + "t6",
-                "@language": rng.choice(["en", None, 5]),
-                **({"@direction": rng.choice(["ltr", "rtl", "up", None])}
-                   if rng.random() < 0.5 else {})}),
-        ("t7", {"@id": EX + "t7", "@nest": rng.choice(
-            ["@nest", "meta", "@id", 5])}),
-        ("t8", {"@id": EX + "t8",
-                "@index": rng.choice(["k", "@bad", 5]),
-                **({"@container": "@index"} if rng.random() < 0.6 else {})}),
-        ("@type", rng.choice([{"@container": "@set"},
-                              {"@container": "@list"},
-                              {"@protected": True},
-                              EX + "alias-target"])),
-        ("", EX + "empty-term"),
-        ("t9", rng.choice([True, 5, []])),
-        ("pref", {"@id": EX + "p#", "@prefix": True}),
-        ("pref:suf", {"@id": EX + "other"}),
-    ]
-    for name, frag in rng.sample(fragments, rng.randint(1, 5)):
-        ctx[name] = frag
-    if rng.random() < 0.3:
-        ctx = [{"@protected": rng.random() < 0.5, "tp": EX + "tp"}, ctx]
-    doc = {"@context": ctx,
-           "t1": "v", "t3": "w", "t4": ["a", "b"],
-           "pref:x": "y", "tp": "z"}
-    opts = {}
-    if rng.random() < 0.2 or os.environ.get("DIFFTEST_MODE10"):
-        opts["processingMode"] = "json-ld-1.0"
-    return doc, opts
-
-
-def run_context_sweep(n_docs: int, seed0: int) -> int:
-    from jsonld_js_spark.kernel import JsonLdError, expand
-    mismatches = 0
-    batch = 50
-    for start in range(0, n_docs, batch):
-        seeds = list(range(seed0 + start, seed0 + min(start + batch, n_docs)))
-        cases = [random_adversarial_context(s) for s in seeds]
-        refs = run_reference_batch([
-            {"op": "expand", "input": doc, "options": opts}
-            for doc, opts in cases])
-        for seed, (doc, opts), ref in zip(seeds, cases, refs):
-            try:
-                mine = {"ok": True, "result": expand(doc, dict(opts))}
-            except JsonLdError as e:
-                mine = {"ok": False, "code": e.code}
-            except Exception as e:
-                mine = {"ok": False, "code": f"INTERNAL:{type(e).__name__}"}
-            if not ref["ok"] and ref.get("code") is None:
-                continue  # reference internal crash — undefined behavior
-            if ref["ok"] != mine["ok"] or \
-                    (ref["ok"] and ref["result"] != mine["result"]):
-                mismatches += 1
-                print(f"== CTX MISMATCH seed={seed}: ref={str(ref)[:400]}\n"
-                      f"   mine={str(mine)[:400]}\n"
-                      f"   doc: {json.dumps(doc, sort_keys=True)[:800]}")
-            elif not ref["ok"] and ref.get("code") != mine.get("code"):
-                # both raised — codes can differ when multiple invalid
-                # fragments race and the engines validate in different
-                # orders; informational only
-                print(f"  (code-diff seed={seed}: ref={ref.get('code')!r} "
-                      f"mine={mine.get('code')!r})")
-        print(f"  [{min(start + batch, n_docs)}/{n_docs}] "
-              f"ctx mismatches={mismatches}")
-    print("DIFFTEST-CTX", "FAIL" if mismatches else "OK",
-          f"cases={n_docs} mismatches={mismatches}")
-    return 1 if mismatches else 0
-
-
-def run_fromrdf_sweep(n_docs: int, seed0: int) -> int:
-    from jsonld_js_spark.kernel import JsonLdError, from_rdf
-    mismatches = 0
-    batch = 50
-    for start in range(0, n_docs, batch):
-        seeds = list(range(seed0 + start, seed0 + min(start + batch, n_docs)))
-        cases = [random_quads(s) for s in seeds]
-        refs = run_reference_batch([
-            {"op": "fromRDF", "input": rq, "options": opts}
-            for rq, _, opts in cases])
-        for seed, (rq, tuples, opts), ref in zip(seeds, cases, refs):
-            try:
-                mine = {"ok": True, "result": from_rdf(tuples, dict(opts))}
-            except JsonLdError as e:
-                mine = {"ok": False, "code": e.code}
-            if ref["ok"] != mine["ok"]:
-                if not ref["ok"] and ref.get("code") is None:
-                    continue  # reference internal crash — undefined
-                mismatches += 1
-                print(f"== FROMRDF MISMATCH seed={seed}: ok "
-                      f"ref={str(ref)[:300]} mine={str(mine)[:300]}")
-            elif ref["ok"] and ref["result"] != mine["result"]:
-                mismatches += 1
-                print(f"== FROMRDF MISMATCH seed={seed}:\nref ="
-                      f"{json.dumps(ref['result'], sort_keys=True)[:1200]}"
-                      f"\nmine="
-                      f"{json.dumps(mine['result'], sort_keys=True)[:1200]}")
-                print("   quads:", json.dumps(tuples)[:1200])
-        print(f"  [{min(start + batch, n_docs)}/{n_docs}] "
-              f"fromRDF mismatches={mismatches}")
-    print("DIFFTEST-FROMRDF", "FAIL" if mismatches else "OK",
-          f"cases={n_docs} mismatches={mismatches}")
-    return 1 if mismatches else 0
-
-
-# --- reference-free purity oracle -------------------------------------------
-
-# the reference-free relation runs every old DIFFTEST_* mode in turn
-ORACLE_MODES = {
-    "default": {},
-    "MODE10": {"DIFFTEST_MODE10": "1"},
-    "UNICODE": {"DIFFTEST_UNICODE": "1"},
-    "DEPTH5": {"DIFFTEST_DEPTH": "5"},
-}
-
-
-def _outcome(fn):
-    """fn()'s result as comparable JSON text, or its error code; an
-    internal crash (the GIGO parity TypeErrors) by its type, as in
-    run_mine."""
-    from jsonld_js_spark.kernel import JsonLdError
-    try:
-        return "ok", json.dumps(fn(), sort_keys=True, default=repr)
-    except JsonLdError as e:
-        return "error", e.code
-    except RecursionError:
-        return "error", "recursion"
-    except Exception as e:
-        return "error", f"INTERNAL:{type(e).__name__}"
-
-
-def purity_case(seed: int) -> tuple[str, str | None]:
-    """The perf-option relation on random_doc(seed): the document's
-    context is processed once, then expand and to_rdf run cold and hot
-    on that shared activeCtx. Each must equal the same call under a
-    no-op expansionMap, which bypasses every memo and plan (an
-    expansionMap returning None keeps the default behaviour). Returns
-    (status, divergence): status is "checked", or "no-context" (a
-    top-level array document) or "context-error" (the context does not
-    process), where the whole document goes through the plain calls
-    instead; divergence is None when every side agrees."""
-    from jsonld_js_spark.kernel import ContextResolver, expand, to_rdf
-    from jsonld_js_spark.kernel.api import process_context_api
-    doc, documents = random_doc(seed)
-    opts: dict = {}
-    if seed % 13 == 0 or os.environ.get("DIFFTEST_MODE10"):
-        opts["processingMode"] = "json-ld-1.0"
-    if seed % 8 == 1:
-        opts["base"] = "http://base.org/dir/doc"
-    if documents:
-        opts["contextResolver"] = ContextResolver(documents=documents)
-    bypass = dict(opts, expansionMap=lambda info: None)
-
-    def relation(body, plain, bypassed):
-        want = [_outcome(lambda: expand(body, dict(bypassed))),
-                _outcome(lambda: to_rdf(body, dict(bypassed)))]
-        for run in ("cold", "hot"):
-            got = [_outcome(lambda: expand(body, dict(plain))),
-                   _outcome(lambda: to_rdf(body, dict(plain)))]
-            for op, g, w in zip(("expand", "toRDF"), got, want):
-                if g != w:
-                    return f"{op} {run}: {g[1][:600]}\n  bypassed: " \
-                           f"{w[1][:600]}"
-        return None
-
-    if not isinstance(doc, dict) or "@context" not in doc:
-        return "no-context", relation(doc, opts, bypass)
-    try:
-        ctx = process_context_api(None, doc["@context"], dict(opts))
-    except Exception:  # compared by the relation on the whole document
-        return "context-error", relation(doc, opts, bypass)
-    body = {k: v for k, v in doc.items() if k != "@context"}
-    bypass_ctx = process_context_api(None, doc["@context"], dict(bypass))
-    return "checked", relation(body, dict(opts, activeCtx=ctx),
-                               dict(bypass, activeCtx=bypass_ctx))
-
-
-def run_oracle_sweep(n_docs: int, seed0: int) -> int:
-    """Reference-free mode: the purity relation over n_docs seeds in
-    each ORACLE_MODES mode. Exit status 1 on any divergence, printing
-    the document."""
-    global UNI
-    failed = 0
-    for mode, env in ORACLE_MODES.items():
-        saved = {k: os.environ.get(k) for k in env}
-        os.environ.update(env)
-        UNI = bool(os.environ.get("DIFFTEST_UNICODE"))
-        counts: dict = {}
-        bad = 0
-        try:
-            for seed in range(seed0, seed0 + n_docs):
-                status, why = purity_case(seed)
-                counts[status] = counts.get(status, 0) + 1
-                if why is not None:
-                    bad += 1
-                    print(f"== ORACLE DIVERGENCE mode={mode} seed={seed}: "
-                          f"{why}")
-                    print("   doc:", json.dumps(random_doc(seed)[0],
-                                                sort_keys=True)[:2000])
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    os.environ.pop(k, None)
-                else:
-                    os.environ[k] = v
-            UNI = bool(os.environ.get("DIFFTEST_UNICODE"))
-        failed += bad
-        print(f"ORACLE {mode}: seeds={n_docs} divergences={bad} "
-              + " ".join(f"{k}={v}" for k, v in sorted(counts.items())))
-    print("DIFFTEST-ORACLE", "FAIL" if failed else "OK",
-          f"divergences={failed}")
-    return 1 if failed else 0
-
-
-def run_reference_batch(requests: list[dict]) -> list[dict]:
-    env = dict(os.environ, NODE_PATH=os.path.join(HARNESS, "node_modules"))
-    out = subprocess.run(
-        ["node", os.path.join(HARNESS, "oracle.js"), "/dev/stdin"],
-        input=json.dumps({"op": "batch", "requests": requests}),
-        capture_output=True, text=True, env=env, timeout=300)
-    if out.returncode != 0:
-        raise RuntimeError(f"harness failed: {out.stderr[-2000:]}")
-    return json.loads(out.stdout)["results"]
-
-
 def random_frame(seed: int, doc: dict) -> dict:
     rng = random.Random(seed * 31 + 7)
     ctx = (doc.get("@context") if isinstance(doc, dict)
@@ -897,7 +661,7 @@ def random_frame(seed: int, doc: dict) -> dict:
 
 
 def _frame_opts(seed: int, base: dict) -> dict:
-    """Per-seed framing-option variation (both engines get the same)."""
+    """Per-seed framing-option variation (both sides get the same)."""
     o = dict(base)
     if seed % 9 == 4:
         o["omitGraph"] = False
@@ -906,7 +670,6 @@ def _frame_opts(seed: int, base: dict) -> dict:
     # API-level flag DEFAULTS (ref lib/jsonld.js:431-436) — frames
     # without explicit @embed/@explicit/@requireAll inherit these
     # NOT '@link': linked output is circular and cannot JSON-serialize
-    # through the node harness
     if seed % 7 == 2:
         o["embed"] = rng_choice(seed, ["@always", "@never"])
     if seed % 13 == 5:
@@ -920,297 +683,496 @@ def rng_choice(seed, items):
     return items[(seed * 2654435761) % len(items)]
 
 
-def run_mine(op: str, doc, context=None, documents=None, options=None):
-    from jsonld_js_spark.kernel import (
-        ContextResolver, JsonLdError, compact, expand, flatten, frame,
-        to_rdf,
-    )
-    from jsonld_js_spark.testing import event_logging_map
-    opts: dict = dict(options or {})
+# --- reference-free relation suite ------------------------------------------
+
+# the relation sweep runs every generator mode in turn
+ORACLE_MODES = {
+    "default": {},
+    "MODE10": {"DIFFTEST_MODE10": "1"},
+    "UNICODE": {"DIFFTEST_UNICODE": "1"},
+    "DEPTH5": {"DIFFTEST_DEPTH": "5"},
+    "REMOTE": {"DIFFTEST_REMOTE": "1"},
+}
+
+# A dataset with one literal of each common datatype, for the
+# useRdfType round trip (its fromRDF golden was lost to a duplicated
+# fixture name).
+FIXED_QUADS = [
+    (EX + "a", RDF_NS + "type", EX + "T", "NamedNode", None, None, ""),
+    (EX + "a", EX + "count", "42", "Literal", XSD + "integer", None, ""),
+    (EX + "a", EX + "score", "1.1E0", "Literal", XSD + "double", None, ""),
+    (EX + "a", EX + "flag", "true", "Literal", XSD + "boolean", None, ""),
+    (EX + "a", EX + "greeting", "hola", "Literal", RDF_NS + "langString",
+     "es", ""),
+    (EX + "a", EX + "date", "2026-01-01", "Literal", XSD + "date", None, ""),
+]
+
+
+def _run(fn):
+    """("ok", fn()) or ("error", code); an internal crash (the GIGO
+    parity TypeErrors) is coded by its type."""
+    try:
+        return "ok", fn()
+    except JsonLdError as e:
+        return "error", e.code
+    except RecursionError:
+        return "error", "recursion"
+    except Exception as e:
+        return "error", f"INTERNAL:{type(e).__name__}"
+
+
+def _outcome(fn):
+    """fn()'s result as comparable JSON text, or its error code."""
+    return _run(lambda: json.dumps(fn(), sort_keys=True, default=repr))
+
+
+def _quad_set(quads) -> frozenset:
+    # GIGO inputs can put a non-scalar (an array datatype from a
+    # malformed value object) into a literal; stringify it
+    return normalize_quads(
+        tuple(json.dumps(c, sort_keys=True)
+              if isinstance(c, (list, dict)) else c for c in q)
+        for q in quads)
+
+
+def _differs(got, want) -> str | None:
+    """None when two _run outcomes of to_rdf agree: equal quads modulo
+    blank-node bijection, or the same error code."""
+    if got[0] == want[0] == "ok":
+        res = compare_triple_sets(_quad_set(got[1]), _quad_set(want[1]))
+        if res["precision"] == res["recall"] == 1.0:
+            return None
+        return f"missing={res['missing'][:3]} extra={res['extra'][:3]}"
+    if got == want:
+        return None
+    return f"{str(got)[:600]}\n  want: {str(want)[:600]}"
+
+
+def _doc_context(doc):
+    return (doc.get("@context") if isinstance(doc, dict)
+            else doc[0].get("@context")) or {}
+
+
+def _base_opts(seed: int, documents) -> dict:
+    """Every 13th seed (or every seed under DIFFTEST_MODE10) runs in
+    json-ld-1.0 mode; every 8th gets an explicit API base."""
+    opts: dict = {}
+    if seed % 13 == 0 or os.environ.get("DIFFTEST_MODE10"):
+        opts["processingMode"] = "json-ld-1.0"
+    if seed % 8 == 1:
+        opts["base"] = "http://base.org/dir/doc"
     if documents:
         opts["contextResolver"] = ContextResolver(documents=documents)
+    return opts
+
+
+def _rdf_opts(seed: int, base: dict) -> dict:
+    """toRDF options: direction-tagged literals as i18n datatypes on
+    every 10th seed, blank-node predicates kept on every 14th."""
+    o = dict(base)
+    if seed % 10 == 6:
+        o["rdfDirection"] = "i18n-datatype"
+    if seed % 14 == 9:
+        o["produceGeneralizedRdf"] = True
+    return o
+
+
+def _compact_opts(seed: int, base: dict) -> dict:
+    o = dict(base)
+    if seed % 7 == 3:
+        o["compactArrays"] = False
+    if seed % 11 == 5:
+        o["graph"] = True
+    return o
+
+
+def _perf_relation(doc, opts):
+    """The perf-option relation: the document's context is processed
+    once, then expand and to_rdf run cold and hot on that shared
+    activeCtx. Each must equal the same call under a no-op
+    expansionMap, which bypasses every memo and plan (an expansionMap
+    returning None keeps the default behaviour). Status "no-context"
+    (a top-level array document) or "context-error" (the context does
+    not process) means the whole document went through the plain
+    calls instead."""
+    bypass = dict(opts, expansionMap=lambda info: None)
+
+    def relation(body, plain, bypassed):
+        want = [_outcome(lambda: expand(body, dict(bypassed))),
+                _outcome(lambda: to_rdf(body, dict(bypassed)))]
+        for run in ("cold", "hot"):
+            got = [_outcome(lambda: expand(body, dict(plain))),
+                   _outcome(lambda: to_rdf(body, dict(plain)))]
+            for op, g, w in zip(("expand", "toRDF"), got, want):
+                if g != w:
+                    return f"{op} {run}: {g[1][:600]}\n  bypassed: " \
+                           f"{w[1][:600]}"
+        return None
+
+    if not isinstance(doc, dict) or "@context" not in doc:
+        return "no-context", relation(doc, opts, bypass)
     try:
-        if op == "expandEvents":
-            events = []
-            expanded = expand(doc, {**opts, "expansionMap":
-                                    event_logging_map(events)})
-            return {"ok": True,
-                    "result": {"expanded": expanded, "events": events}}
-        if op == "expand":
-            return {"ok": True, "result": expand(doc, dict(opts))}
-        if op == "toRDF":
-            return {"ok": True, "result": to_rdf(doc, dict(opts))}
-        if op == "compact":
-            return {"ok": True, "result": compact(doc, context,
-                                                  dict(opts))}
-        if op == "flatten":
-            return {"ok": True, "result": flatten(doc, context,
-                                                  dict(opts))}
-        if op == "frame":
-            return {"ok": True, "result": frame(doc, context, dict(opts))}
-        if op == "merge":
-            from jsonld_js_spark.kernel import merge
-            return {"ok": True, "result": merge(doc, context, dict(opts))}
-        raise AssertionError(op)
-    except JsonLdError as e:
-        return {"ok": False, "code": e.code}
-    except RecursionError:
-        return {"ok": False, "code": "recursion"}
-    except Exception as e:
-        # internal crash — only comparable against a reference internal
-        # crash (both engines fall over on the same degenerate input,
-        # e.g. relabelled @reverse maps); surfaces as ok-mismatch when
-        # the reference succeeds
-        return {"ok": False, "code": f"INTERNAL:{type(e).__name__}"}
+        ctx = process_context_api(None, doc["@context"], dict(opts))
+    except Exception:  # compared by the relation on the whole document
+        return "context-error", relation(doc, opts, bypass)
+    body = {k: v for k, v in doc.items() if k != "@context"}
+    bypass_ctx = process_context_api(None, doc["@context"], dict(bypass))
+    return "checked", relation(body, dict(opts, activeCtx=ctx),
+                               dict(bypass, activeCtx=bypass_ctx))
 
 
-def compare_tordf(mine_quads, ref_json_quads):
-    from jsonld_js_spark.testing import (
-        compare_triple_sets, normalize_quads, quad_from_reference_json,
-    )
+def _expand_relation(seed, doc, opts, rdf):
+    """toRDF(expand(x)) ≡ toRDF(x), and expand(expand(x)) is a fixed
+    point of expand. The second expansion itself may drop what the
+    first kept inside a container (free-floating values under
+    @graph), so the JSON fixed point is checked one step later."""
+    once = _run(lambda: expand(doc, dict(opts)))
+    if once[0] != "ok":
+        return "checked", _differs(once, rdf)
+    why = _differs(_run(lambda: to_rdf(once[1], _rdf_opts(seed, opts))),
+                   rdf)
+    twice = _run(lambda: expand(once[1], dict(opts)))
+    if why is not None or twice[0] != "ok":
+        return "checked", why
+    want = json.dumps(twice[1], sort_keys=True)
+    got = _outcome(lambda: expand(twice[1], dict(opts)))
+    if got != ("ok", want):
+        why = f"expand^3: {str(got)[:600]}\n  expand^2: {want[:600]}"
+    return "checked", why
 
-    def sanitize(quads):
-        # degenerate inputs make BOTH engines emit non-scalar literal
-        # components (e.g. an array datatype from a malformed value
-        # object — verified identical in the reference); stringify so
-        # the set comparison still works
-        return [tuple(json.dumps(c, sort_keys=True)
-                      if isinstance(c, (list, dict)) else c for c in q)
-                for q in quads]
 
-    golden = [quad_from_reference_json(q) for q in ref_json_quads]
-    res = compare_triple_sets(normalize_quads(sanitize(mine_quads)),
-                              normalize_quads(sanitize(golden)))
-    return res["precision"] == 1.0 and res["recall"] == 1.0, res
+def _flattens_with_context(seed: int) -> bool:
+    return seed % 5 == 2
 
 
-def main(n_docs: int, seed0: int) -> int:
-    mismatches = 0
-    batch = 50
-    for start in range(0, n_docs, batch):
-        seeds = list(range(seed0 + start, seed0 + min(start + batch, n_docs)))
-        cases = [random_doc(s) for s in seeds]
-        docs = [c[0] for c in cases]
-        docmaps = [c[1] for c in cases]
-        frames = [random_frame(s, d) for s, d in zip(seeds, docs)]
-        # every 13th seed runs in json-ld-1.0 processing mode (1.1
-        # features must raise with reference-identical error codes);
-        # every 8th gets an explicit API `base` (relative-IRI
-        # resolution + compactToRelative interplay)
-        def _base_opts(s):
-            o = {}
-            if s % 13 == 0 or os.environ.get("DIFFTEST_MODE10"):
-                # DIFFTEST_MODE10=1 forces 1.0 mode on EVERY seed —
-                # the 1.0 keyword gates interact with reverts/scoped
-                # contexts (seed 25500111's class) far more densely
-                # than the 1-in-13 default
-                o["processingMode"] = "json-ld-1.0"
-            if s % 8 == 1:
-                o["base"] = "http://base.org/dir/doc"
-            return o
-        opts_for = {s: _base_opts(s) for s in seeds}
+def _flatten_relation(seed, doc, opts, rdf):
+    """toRDF(flatten(x)) ≡ toRDF(x); every 5th seed flattens with the
+    document's context, so compaction runs over node-map output."""
+    ctx = _doc_context(doc) if _flattens_with_context(seed) else None
+    return "checked", _differs(
+        _run(lambda: to_rdf(flatten(doc, ctx, dict(opts)),
+                            _rdf_opts(seed, opts))), rdf)
 
-        # every 6th seed expands through an API expandContext (applied
-        # to the expand op only — both engines process it before the
-        # document's own context)
-        def _e_opts(s, base):
-            o = dict(base)
-            if s % 6 == 1:
-                o["expandContext"] = (
-                    {"@context": {"ectx_t": EX + "from-expand-context",
-                                  "gamma": EX + "ectx-gamma"}}
-                    if s % 12 == 1 else
-                    {"@vocab": "http://expandctx.org/"})
-            return o
 
-        # every 10th seed serializes direction-tagged literals via
-        # rdfDirection=i18n-datatype (DIFFTEST_RDFDIR=1 forces it on
-        # EVERY seed — the direction gates compound with container/
-        # value rules far more densely than the 1-in-10 default)
-        def _rdf_opts(s, base):
-            o = dict(base)
-            if s % 10 == 6 or os.environ.get("DIFFTEST_RDFDIR"):
-                o["rdfDirection"] = "i18n-datatype"
-            if s % 14 == 9:
-                # blank-node predicates survive toRDF (ref
-                # lib/toRdf.js:126)
-                o["produceGeneralizedRdf"] = True
-            return o
+def round_trip(quads, from_opts: dict, rdf_opts: dict) -> str | None:
+    """toRDF(fromRDF(quads)) ≡ quads."""
+    return _differs(_run(lambda: to_rdf(from_rdf(quads, dict(from_opts)),
+                                        dict(rdf_opts))), ("ok", quads))
 
-        # per-seed compact-option variation (singleton-array
-        # preservation and top-level @graph wrapping interact with
-        # every container/selection rule)
-        def _c_opts(s, base):
-            o = dict(base)
-            if s % 7 == 3:
-                o["compactArrays"] = False
-            if s % 11 == 5:
-                o["graph"] = True
-            if s % 16 == 1:
-                # only observable with a base set (s % 8 == 1 seeds)
-                o["compactToRelative"] = False
-            return o
 
-        # every 5th seed flattens WITH the doc's context (flatten then
-        # compacts the node map through the compaction engine)
-        def _fl_ctx(s, d):
-            if s % 5 != 2:
-                return None
-            return (d.get("@context") or {}) if isinstance(d, dict) \
-                else (d[0].get("@context") or {})
-        reqs = []
-        for s, d, fr, dm in zip(seeds, docs, frames, docmaps):
-            extra = {"documents": dm} if dm else {}
-            o = opts_for[s]
-            reqs.append({"op": "expand", "input": d,
-                         "options": _e_opts(s, o), **extra})
-            reqs.append({"op": "toRDF", "input": d,
-                         "options": _rdf_opts(s, o), **extra})
-            d_ctx = (d.get("@context") or {}) if isinstance(d, dict) \
-                else (d[0].get("@context") or {})
-            reqs.append({"op": "compact", "input": d,
-                         "context": d_ctx,
-                         "options": _c_opts(s, o), **extra})
-            fl_req = {"op": "flatten", "input": d, "options": dict(o),
-                      **extra}
-            if _fl_ctx(s, d) is not None:
-                fl_req["context"] = _fl_ctx(s, d)
-            reqs.append(fl_req)
-            reqs.append({"op": "frame", "input": d, "frame": fr,
-                         "options": _frame_opts(s, o), **extra})
-        refs = run_reference_batch(reqs)
-        for i, (seed, doc, docmap) in enumerate(zip(seeds, docs, docmaps)):
-            ref_ex, ref_rdf, ref_c, ref_fl, ref_fr = refs[5 * i:5 * i + 5]
-            mine_ex = run_mine("expand", doc, documents=docmap,
-                               options=_e_opts(seed, opts_for[seed]))
-            ok = True
-            why = ""
-            if ref_ex["ok"] != mine_ex["ok"]:
-                ok, why = False, (
-                    f"expand ok-mismatch ref={ref_ex} mine={mine_ex}")
-            elif ref_ex["ok"] and ref_ex["result"] != mine_ex["result"]:
-                ok, why = False, (
-                    f"expand diff\nref ={json.dumps(ref_ex['result'], sort_keys=True)[:1500]}"
-                    f"\nmine={json.dumps(mine_ex['result'], sort_keys=True)[:1500]}")
-            elif not ref_ex["ok"] and ref_ex.get("code") != mine_ex.get("code"):
-                ok, why = False, (
-                    f"error-code diff ref={ref_ex.get('code')} "
-                    f"mine={mine_ex.get('code')}")
-            if ok and ref_rdf["ok"]:
-                mine_rdf = run_mine("toRDF", doc, documents=docmap,
-                                    options=_rdf_opts(seed, opts_for[seed]))
-                if not mine_rdf["ok"]:
-                    ok, why = False, f"toRDF mine errored: {mine_rdf}"
+def _fromrdf_relation(seed, doc, opts, rdf):
+    """toRDF(fromRDF(toRDF(x))) ≡ toRDF(x)."""
+    if rdf[0] != "ok":
+        return "input-error", None
+    ropts = _rdf_opts(seed, opts)
+    return "checked", round_trip(rdf[1], ropts, ropts)
+
+
+def _compact_relation(seed, doc, opts, rdf):
+    """toRDF(compact(x, ctx)) ≡ toRDF(x) with the document's own
+    context."""
+    return "checked", _differs(
+        _run(lambda: to_rdf(compact(doc, _doc_context(doc),
+                                    _compact_opts(seed, opts)),
+                            _rdf_opts(seed, opts))), rdf)
+
+
+def _frame_relation(seed, doc, opts, rdf):
+    """frame with one preparedFrame, used twice, equals a plain frame
+    over random_frame(seed)."""
+    frame_doc = random_frame(seed, doc)
+    fopts = _frame_opts(seed, opts)
+    want = _outcome(lambda: frame(doc, frame_doc, dict(fopts)))
+    prepared = _run(lambda: prepare_frame(frame_doc, dict(fopts)))
+    if prepared[0] != "ok":
+        return "checked", None if prepared == want else \
+            f"prepare_frame: {prepared[1]}\n  plain: {str(want[1])[:600]}"
+    for run in ("cold", "hot"):
+        got = _outcome(lambda: frame(doc, frame_doc,
+                                     dict(fopts, preparedFrame=prepared[1])))
+        if got != want:
+            return "checked", f"prepared {run}: {str(got[1])[:600]}\n" \
+                              f"  plain: {str(want[1])[:600]}"
+    return "checked", None
+
+
+def _quads_relation(seed):
+    """The fromRDF round trip over random_quads(seed): with the
+    dataset's own fromRDF options, toRDF(fromRDF(D)) ≡ D for
+    D = toRDF(fromRDF(quads)) (the first pass canonicalises literals
+    and language tags, by spec)."""
+    _, quads, qopts = random_quads(seed)
+    ropts = {k: v for k, v in qopts.items() if k == "rdfDirection"}
+    first = _run(lambda: to_rdf(from_rdf(quads, dict(qopts)), dict(ropts)))
+    if first[0] != "ok":
+        return "input-error", None
+    return "checked", round_trip(first[1], qopts, ropts)
+
+
+_DOC_RELATIONS = {
+    "expand": _expand_relation,
+    "flatten": _flatten_relation,
+    "fromRDF": _fromrdf_relation,
+    "compact": _compact_relation,
+    "frame": _frame_relation,
+}
+
+
+def relations_case(seed: int) -> dict:
+    """Every relation on random_doc(seed), and the quads relation on
+    random_quads(seed): {relation: (status, divergence)}. Status is
+    "checked" (also when both sides raise: the error codes must then
+    match), "input-error" (the step both sides share raised),
+    "excluded:<predicate>" (an EXCLUSIONS input predicate holds, so the
+    relation is not run) or one of _perf_relation's; divergence is None
+    when the sides agree."""
+    doc, documents = random_doc(seed)
+    opts = _base_opts(seed, documents)
+    rdf = _run(lambda: to_rdf(doc, _rdf_opts(seed, opts)))
+    out = {"perf": _perf_relation(doc, opts)}
+    for name, relation in _DOC_RELATIONS.items():
+        excluded = _excluded(name, seed, doc, opts)
+        out[name] = (f"excluded:{excluded}", None) if excluded else \
+            relation(seed, doc, opts, rdf)
+    out["quads"] = _quads_relation(seed)
+    return out
+
+
+def _dicts(value, contexts=True):
+    """Every object in a JSON value, depth first; contexts=False skips
+    @context values."""
+    if isinstance(value, dict):
+        yield value
+        value = [v for k, v in value.items() if contexts or k != "@context"]
+    if isinstance(value, list):
+        for v in value:
+            yield from _dicts(v, contexts)
+
+
+def _context_dicts(doc):
+    """Every object inside a @context of doc: local contexts, term
+    definitions and their scoped contexts."""
+    for d in _dicts(doc, contexts=False):
+        if "@context" in d:
+            yield from _dicts(d["@context"])
+
+
+def _term_values(doc, test):
+    """The values (array members one by one) of every key whose term
+    definition, anywhere in doc's contexts, passes test."""
+    terms = {k for c in _context_dicts(doc) for k, td in c.items()
+             if isinstance(td, dict) and test(td)}
+    for d in _dicts(doc, contexts=False):
+        for k in terms & d.keys():
+            yield from d[k] if isinstance(d[k], list) else [d[k]]
+
+
+def _containers(td) -> list:
+    c = td.get("@container")
+    return c if isinstance(c, list) else [c]
+
+
+def _max_double(seed, doc, opts):
+    """The canonical form of the largest double, 1.797693134862316E308,
+    overflows when toRDF parses it back (jsonld.js parseFloats every
+    xsd:double), so it returns as Infinity."""
+    return "1.7976931348623157e+308" in json.dumps(doc)
+
+
+def _double_coerced_non_number(seed, doc, opts):
+    """A non-number under an xsd:double-coerced term keeps its lexical
+    form once; toRDF of that typed string parses it to NaN."""
+    return any(not isinstance(v, (int, float)) or isinstance(v, bool)
+               for v in _term_values(
+                   doc, lambda td: td.get("@type") == XSD + "double"))
+
+
+def _non_node_in_node_container(seed, doc, opts):
+    """Garbage in: a value or list (not a node object) under a @graph or
+    @type container term, or in its map. A @graph container wraps it as
+    a free-floating value; a @type map gives it the map key as @type."""
+    for v in _term_values(doc, lambda td: "@graph" in _containers(td) or
+                          "@type" in _containers(td)):
+        members = [v]
+        if isinstance(v, dict) and "@value" not in v:  # a map
+            members = [m for ms in v.values()
+                       for m in (ms if isinstance(ms, list) else [ms])]
+        if any(not isinstance(m, dict) or "@value" in m or "@list" in m
+               for m in members):
+            return True
+    return False
+
+
+def _json_in_mode10(seed, doc, opts):
+    """In json-ld-1.0 mode a @json term reaches the output only through
+    the jsonld.js quirk where a boolean @propagate erases the processing
+    mode (kernel/context.py, fuzz seed 185008); expanded again in that mode,
+    the @json value is not a valid typed value."""
+    ctx = list(_context_dicts(doc))
+    return opts.get("processingMode") == "json-ld-1.0" and any(
+        isinstance(c.get("@propagate"), bool) for c in ctx) and any(
+        c.get("@type") == "@json" or "@json" in c.values() for c in ctx)
+
+
+def _non_string_in_language_container(seed, doc, opts):
+    """Garbage in: a non-string under a @language container term is
+    expanded as a plain value; compacted into the language map, it no
+    longer expands."""
+    return any(not isinstance(v, (str, dict)) or
+               isinstance(v, dict) and "@value" in v
+               for v in _term_values(
+                   doc, lambda td: "@language" in _containers(td)))
+
+
+def _non_propagated_context(seed, doc, opts):
+    """"@propagate": false: compaction nests nodes (under @graph, in
+    property values) where that context no longer applies."""
+    return any(c.get("@propagate") is False for c in _context_dicts(doc))
+
+
+def _context_reset(seed, doc, opts):
+    """A null context with no API base leaves relative IRIs
+    unresolved; compacted under the document's context they resolve."""
+    return "base" not in opts and any(
+        "@context" in d and d["@context"] is None for d in _dicts(doc))
+
+
+def _language_direction_compaction(seed, doc, opts):
+    """Value compaction (jsonld.js lib/compact.js:984-999) returns the
+    bare string when only the language or only the direction matches
+    the context, and when a default direction but no default language
+    is set, so the other one is lost."""
+    ctx = list(_context_dicts(doc))
+    if any(c.get("@direction") is not None or "@direction" in c.values()
+           for c in ctx):
+        return True
+    return any(c.get("@language") is not None for c in ctx) and any(
+        "@direction" in d for d in _dicts(doc, contexts=False))
+
+
+def _json_array_literal(seed, doc, opts):
+    """Compaction writes a @json value as plain JSON under its term, so
+    an array there reads back as several values: compactArrays=false
+    wraps every @json value in one, and an array literal's own arrays
+    are unwrapped."""
+    ctx = list(_context_dicts(doc))
+    json_terms = {k for c in ctx for k, td in c.items()
+                  if td == "@json" or isinstance(td, dict) and
+                  td.get("@type") == "@json"}
+    if not json_terms:
+        return False
+    return "compactArrays" in _compact_opts(seed, {}) or any(
+        isinstance(d.get("@value"), list) or
+        any(isinstance(d[k], list) for k in json_terms & d.keys())
+        for d in _dicts(doc, contexts=False))
+
+
+def _relative_type_map_key(seed, doc, opts):
+    """A @type map key is expanded against the vocabulary only, so a
+    relative one stays relative; expanded again as a @type value it
+    resolves against the base."""
+    has_base = "base" in opts or any("@base" in c
+                                     for c in _context_dicts(doc))
+    return has_base and any(
+        isinstance(v, dict) and "@value" not in v and
+        any(":" not in k and not k.startswith("@") for k in v)
+        for v in _term_values(doc, lambda td: "@type" in _containers(td)))
+
+
+def _anonymous_graph_in_array(seed, doc, opts):
+    """A top-level array whose node has @graph and no @id expands to a
+    lone blank-node graph object; compacted, it reads as the top-level
+    @graph wrapper and merges into the default graph."""
+    return isinstance(doc, list) and "@graph" in doc[0] and \
+        "@id" not in doc[0]
+
+
+# Input predicates for classes where a relation is lossy by spec or the
+# input is garbage, so the two sides may rightly differ. Each reads the
+# generated input only, never an outcome.
+_COMPACTION = [_non_propagated_context, _context_reset,
+               _language_direction_compaction,
+               _non_string_in_language_container, _json_array_literal,
+               _anonymous_graph_in_array]
+EXCLUSIONS: dict = {
+    "expand": [_non_node_in_node_container, _json_in_mode10,
+               _relative_type_map_key],
+    "flatten": [_non_node_in_node_container, _json_in_mode10,
+                _relative_type_map_key, *_COMPACTION],
+    "fromRDF": [_max_double, _double_coerced_non_number,
+                _non_node_in_node_container, _json_in_mode10],
+    "compact": [_non_node_in_node_container, _relative_type_map_key,
+                *_COMPACTION],
+    "frame": [],
+}
+
+
+def _excluded(relation: str, seed: int, doc, opts) -> str | None:
+    """The name of the first EXCLUSIONS predicate of relation that holds
+    for this input. Flatten compacts only when it gets a context, so
+    only then do the compaction predicates apply to it."""
+    for predicate in EXCLUSIONS[relation]:
+        if relation == "flatten" and predicate in _COMPACTION and \
+                not _flattens_with_context(seed):
+            continue
+        if predicate(seed, doc, opts):
+            return predicate.__name__.lstrip("_")
+    return None
+
+
+# Divergences nothing yet explains: (mode, relation, seed) -> note. With
+# no reference, nothing shows which side is right, so each stays an
+# expected failure until it is understood.
+PINNED: dict = {}
+
+
+def run_relation_sweep(n_docs: int, seed0: int) -> int:
+    """Every relation over n_docs seeds in each ORACLE_MODES mode, and
+    the FIXED_QUADS useRdfType round trip. Exit status 1 on a
+    divergence outside PINNED, or on a pinned seed that holds."""
+    global UNI
+    why = round_trip(FIXED_QUADS, {"useRdfType": True}, {})
+    failed = int(why is not None)
+    print("FIXED useRdfType round trip:", why or "ok")
+    for mode, env in ORACLE_MODES.items():
+        saved = {k: os.environ.get(k) for k in env}
+        os.environ.update(env)
+        UNI = bool(os.environ.get("DIFFTEST_UNICODE"))
+        counts: dict = {}
+        try:
+            for seed in range(seed0, seed0 + n_docs):
+                for name, (status, why) in relations_case(seed).items():
+                    if (mode, name, seed) in PINNED:
+                        status = "xfail" if why else "XPASS"
+                    elif why is not None:
+                        status = "DIVERGED"
+                        print(f"== DIVERGENCE mode={mode} relation={name} "
+                              f"seed={seed}: {why}")
+                        print("   doc:", json.dumps(random_doc(seed)[0],
+                                                    sort_keys=True)[:2000])
+                    c = counts.setdefault(name, {})
+                    c[status] = c.get(status, 0) + 1
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    os.environ.pop(k, None)
                 else:
-                    same, res = compare_tordf(mine_rdf["result"],
-                                              ref_rdf["result"])
-                    if not same:
-                        ok, why = False, (
-                            f"toRDF P/R {res['precision']}/{res['recall']}"
-                            f" missing={res['missing'][:3]}"
-                            f" extra={res['extra'][:3]}")
-            # full compact(doc, same ctx) round-trip
-            if ok:
-                doc_ctx = (doc.get("@context") or {}) \
-                    if isinstance(doc, dict) else \
-                    (doc[0].get("@context") or {})
-                mine_c = run_mine("compact", doc,
-                                  doc_ctx,
-                                  documents=docmap,
-                                  options=_c_opts(seed, opts_for[seed]))
-                if ref_c["ok"] != mine_c["ok"]:
-                    ok, why = False, (
-                        f"compact ok-mismatch ref={str(ref_c)[:300]} "
-                        f"mine={str(mine_c)[:300]}")
-                elif ref_c["ok"] and ref_c["result"] != mine_c["result"]:
-                    ok, why = False, (
-                        f"compact diff\nref ="
-                        f"{json.dumps(ref_c['result'], sort_keys=True)[:1500]}"
-                        f"\nmine="
-                        f"{json.dumps(mine_c['result'], sort_keys=True)[:1500]}")
-            if ok:
-                mine_fl = run_mine("flatten", doc, _fl_ctx(seed, doc),
-                                   documents=docmap,
-                                   options=opts_for[seed])
-                if ref_fl["ok"] != mine_fl["ok"]:
-                    ok, why = False, (
-                        f"flatten ok-mismatch ref={str(ref_fl)[:300]} "
-                        f"mine={str(mine_fl)[:300]}")
-                elif ref_fl["ok"] and ref_fl["result"] != mine_fl["result"]:
-                    ok, why = False, (
-                        f"flatten diff\nref ="
-                        f"{json.dumps(ref_fl['result'], sort_keys=True)[:1500]}"
-                        f"\nmine="
-                        f"{json.dumps(mine_fl['result'], sort_keys=True)[:1500]}")
-            # a reference INTERNAL crash (TypeError etc. → no JsonLdError
-            # code) is undefined behavior, not a contract to mirror
-            ref_internal_crash = (not ref_fr["ok"] and
-                                  ref_fr.get("code") is None)
-            if ok and not ref_internal_crash:
-                mine_fr = run_mine("frame", doc, frames[i],
-                                   documents=docmap,
-                                   options=_frame_opts(seed,
-                                                       opts_for[seed]))
-                if ref_fr["ok"] != mine_fr["ok"]:
-                    ok, why = False, (
-                        f"frame ok-mismatch ref={str(ref_fr)[:300]} "
-                        f"mine={str(mine_fr)[:300]}")
-                elif ref_fr["ok"] and ref_fr["result"] != mine_fr["result"]:
-                    ok, why = False, (
-                        f"frame={json.dumps(frames[i], sort_keys=True)[:300]}\n"
-                        f"frame diff\nref ="
-                        f"{json.dumps(ref_fr['result'], sort_keys=True)[:1500]}"
-                        f"\nmine="
-                        f"{json.dumps(mine_fr['result'], sort_keys=True)[:1500]}")
-            # jsonld.merge over doc + a sibling random doc
-            if ok and os.environ.get("DIFFTEST_MERGE"):
-                doc2, _dm2 = random_doc(seed + 1000000)
-                ref_m = run_reference_batch([{
-                    "op": "merge", "input": [doc, doc2],
-                    "context": None, "options": {}}])[0]
-                mine_m = run_mine("merge", [doc, doc2], None)
-                if not ref_m["ok"] and ref_m.get("code") is None:
-                    pass  # reference internal crash
-                elif ref_m["ok"] != mine_m.get("ok") or (
-                        ref_m["ok"] and
-                        ref_m["result"] != mine_m["result"]):
-                    ok, why = False, (
-                        f"merge diff\nref ="
-                        f"{json.dumps(ref_m.get('result'), sort_keys=True, default=str)[:1200]}"
-                        f"\nmine="
-                        f"{json.dumps(mine_m.get('result'), sort_keys=True, default=str)[:1200]}")
-            # expansionMap event-stream parity (exact sequence)
-            if ok and ref_ex["ok"] and os.environ.get("DIFFTEST_EVENTS"):
-                ev_ref = run_reference_batch([{
-                    "op": "expandEvents", "input": doc, "options": {}}])[0]
-                ev_mine = run_mine("expandEvents", doc, documents=docmap)
-                if ev_ref["ok"] and ev_mine["ok"] and \
-                        ev_ref["result"]["events"] != \
-                        ev_mine["result"]["events"]:
-                    ok, why = False, (
-                        f"event-stream diff\nref ="
-                        f"{json.dumps(ev_ref['result']['events'])[:1200]}"
-                        f"\nmine="
-                        f"{json.dumps(ev_mine['result']['events'])[:1200]}")
-            if not ok:
-                mismatches += 1
-                print(f"== MISMATCH seed={seed}: {why}")
-                print("   doc:", json.dumps(doc, sort_keys=True)[:2000])
-        print(f"  [{min(start + batch, n_docs)}/{n_docs}] "
-              f"mismatches={mismatches}")
-    print("DIFFTEST", "FAIL" if mismatches else "OK",
-          f"docs={n_docs} mismatches={mismatches}")
-    return 1 if mismatches else 0
+                    os.environ[k] = v
+            UNI = bool(os.environ.get("DIFFTEST_UNICODE"))
+        for name, c in counts.items():
+            failed += c.get("DIVERGED", 0) + c.get("XPASS", 0)
+            excluded = {k: c.pop(k) for k in sorted(c)
+                        if k.startswith("excluded:")}
+            print(f"{mode:8s} {name:8s} checked={c.pop('checked', 0)} "
+                  f"excluded={sum(excluded.values())} "
+                  f"xfail={c.pop('xfail', 0)}" +
+                  "".join(f" {k}={v}" for k, v in sorted(c.items())) +
+                  "".join(f"\n{'':18s}{k}={v}" for k, v in excluded.items()))
+    print("DIFFTEST", "FAIL" if failed else "OK", f"failures={failed}")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    n = int(args[0]) if args else 200
-    s0 = int(args[1]) if len(args) > 1 else 0
-    if "--fromrdf" in sys.argv:
-        sys.exit(run_fromrdf_sweep(n, s0))
-    if "--contexts" in sys.argv:
-        sys.exit(run_context_sweep(n, s0))
-    if "--oracle" in sys.argv:
-        sys.exit(run_oracle_sweep(n, s0))
-    sys.exit(main(n, s0))
+    sys.exit(run_relation_sweep(int(args[0]) if args else 200,
+                                int(args[1]) if len(args) > 1 else 0))
