@@ -422,30 +422,48 @@ FROM g GROUP BY conv_id ORDER BY conv_id
 
 
 # ---------------------------------------------------------------------------
-def compact_conversations_df(spark, sf_dir):
-    """Compaction (general path): per-conversation compacted JSON-LD
-    documents rebuilt from the triple table via the kernel inside
-    mapInPandas (ref lib/compact.js:58-672). Returns one row per
-    conversation with the compacted JSON plus SQL-checkable counts.
-
-    Batch-boundary safety: a conversation's triples can straddle two
-    Arrow batches, so the per-batch groupby rides behind
-    `batched_by_key` (the same tail-carry the kernel path uses) —
-    without it a straddling conversation is emitted twice."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType,
-    )
-
-    from .pipeline.kernel_path import batched_by_key
-
-    t = _triples(spark, sf_dir)
+def _conversation_triples(spark, sf_dir):
+    """The triple table plus each row's `conv_iri` (its subject's
+    conversation: a conversation IRI itself, or the one a turn IRI
+    extends; other rows are dropped), with each conversation's rows
+    contiguous within one partition: the kernel_map input of
+    compaction and of the fromRDF round trip."""
     conv_of = F.when(
         F.col("subj").rlike("^http://example.org/conv/[^/]+$"),
         F.col("subj")).otherwise(
         F.regexp_extract("subj", r"^(http://example.org/conv/[^/]+)/turn/",
                          1))
-    rows = t.withColumn("conv_iri", conv_of).filter(F.col("conv_iri") != "")
+    n_part = spark.sparkContext.defaultParallelism
+    return (_triples(spark, sf_dir)
+            .withColumn("conv_iri", conv_of)
+            .filter(F.col("conv_iri") != "")
+            .repartition(n_part, "conv_iri")
+            .sortWithinPartitions("conv_iri"))
+
+
+def _group_quads(cols, start, stop):
+    """Kernel quad tuples of rows [start, stop) of _conversation_triples
+    columns."""
+    return list(zip(*(c[start:stop] for c in cols[:7])))
+
+
+def compact_conversations_df(spark, sf_dir):
+    """Compaction (general path): per-conversation compacted JSON-LD
+    documents rebuilt from the triple table via the kernel inside
+    `kernel_map` (ref lib/compact.js:58-672). Returns one row per
+    conversation with the compacted JSON plus SQL-checkable counts.
+    kernel_map hands each conversation over whole, also one whose
+    triples straddle two Arrow batches."""
+    import json
+
+    from pyspark.sql.types import (
+        IntegerType, LongType, StringType, StructField, StructType,
+    )
+
+    from .kernel import compact, from_rdf
+    from .kernel.context import initial_context, process_context
+    from .pipeline.kernel_path import kernel_map
+    from .vocab import TRANSCRIPT_CONTEXT
 
     schema = StructType([
         StructField("conv_iri", StringType()),
@@ -453,45 +471,30 @@ def compact_conversations_df(spark, sf_dir):
         StructField("n_triples", LongType()),
         StructField("compact_json", StringType()),
     ])
+    # loop-invariant: one processed compaction context rides the
+    # function to the executors (kernel api option activeCompactCtx —
+    # the reference's processed-context cache plays this role); the
+    # from_rdf output is owned, so expansion inside compact() can skip
+    # the defensive deepcopy
+    base_opts = {"processingMode": "json-ld-1.1", "base": None}
+    cctx = process_context(initial_context(base_opts),
+                           dict(TRANSCRIPT_CONTEXT), base_opts)
 
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        import json as _json
+    def compact_conversation(cols, start, stop):
+        quads = _group_quads(cols, start, stop)
+        doc = from_rdf(quads, {"useNativeTypes": True})
+        compacted = compact(doc, dict(TRANSCRIPT_CONTEXT),
+                            {"skipCopy": True, "activeCompactCtx": cctx})
+        # compacted flattened form: nodes under @graph (or a single
+        # node dict when only one node exists)
+        nodes = compacted.get("@graph", [compacted])
+        n_turns = sum(1 for n in nodes
+                      if isinstance(n, dict) and n.get("@type") == "Turn")
+        return [(cols[7][start], n_turns, len(quads),
+                 json.dumps(compacted, sort_keys=True))]
 
-        from .kernel import compact, from_rdf
-        from .kernel.context import initial_context, process_context
-        from .vocab import TRANSCRIPT_CONTEXT
-        # loop-invariant: one processed compaction context per batch
-        # (kernel api option activeCompactCtx — the reference's
-        # processed-context cache plays this role); the from_rdf output
-        # is owned, so expansion inside compact() can skip the
-        # defensive deepcopy
-        base_opts = {"processingMode": "json-ld-1.1", "base": None}
-        cctx = process_context(initial_context(base_opts),
-                               dict(TRANSCRIPT_CONTEXT), base_opts)
-        out = []
-        for conv_iri, grp in pdf.groupby("conv_iri", sort=False):
-            quads = [
-                (r.subj, r.pred, r.obj_value, r.obj_termtype,
-                 r.obj_datatype, r.obj_language, r.graph)
-                for r in grp.itertuples()]
-            doc = from_rdf(quads, {"useNativeTypes": True})
-            compacted = compact(doc, dict(TRANSCRIPT_CONTEXT),
-                                {"skipCopy": True,
-                                 "activeCompactCtx": cctx})
-            # compacted flattened form: nodes under @graph (or a
-            # single node dict when only one node exists)
-            nodes = compacted.get("@graph", [compacted])
-            n_turns = sum(1 for n in nodes
-                          if isinstance(n, dict)
-                          and n.get("@type") == "Turn")
-            out.append((conv_iri, n_turns, len(quads),
-                        _json.dumps(compacted, sort_keys=True)))
-        return pd.DataFrame(out, columns=schema.fieldNames())
-
-    n_part = spark.sparkContext.defaultParallelism
-    return (rows.repartition(n_part, "conv_iri")
-            .sortWithinPartitions("conv_iri")
-            .mapInPandas(batched_by_key("conv_iri", emit), schema=schema)
+    return (kernel_map(_conversation_triples(spark, sf_dir), "conv_iri",
+                       compact_conversation, schema)
             .orderBy("conv_iri"))
 
 
@@ -624,82 +627,64 @@ FROM triples ORDER BY line
 def q_kg_frame_kernel_path(spark, sf_dir):
     """Distributed generic framing: each conversation's JSON-LD doc is
     framed by the full kernel frame engine (kernel/frame.py) inside
-    Arrow-batched mapInPandas — the per-document counterpart of the
-    semi-join compilation in frame_spark.py. The frame selects
+    `kernel_map` — the per-document counterpart of the semi-join
+    compilation in frame_spark.py. The documents are the kernel path's
+    (JVM per-row prep, kernel_path.conversation_doc). The frame selects
     tool-using turns; output (conv_iri, n_matched, first_tool_iri) is
-    SQL-checkable. Tail-carry via batched_by_key protects
-    conversations straddling Arrow batch boundaries."""
-    import pandas as pd
+    SQL-checkable."""
     from pyspark.sql.types import (
         IntegerType, StringType, StructField, StructType,
     )
 
-    from .pipeline.kernel_path import batched_by_key
-    from .transcripts import transcripts_df
+    from .kernel import frame as kernel_frame
+    from .kernel.api import prepare_frame
+    from .pipeline.kernel_path import conversation_doc, kernel_map, turn_rows
+    from .vocab import TRANSCRIPT_CONTEXT
 
-    t = transcripts_df(spark, sf_dir=sf_dir)
     schema = StructType([
         StructField("conv_iri", StringType()),
         StructField("n_matched", IntegerType()),
         StructField("first_tool_iri", StringType()),
     ])
+    frame_doc = {
+        "@context": dict(TRANSCRIPT_CONTEXT),
+        "@type": "Turn",
+        "@requireAll": True,  # AND: typed Turn AND has usesTool
+        "usesTool": {},
+    }
+    # loop-invariant: expand the constant frame + process its context
+    # ONCE; each frame() call deep-copies the tiny expanded frame
+    # instead of re-expanding it
+    prepared = prepare_frame(frame_doc)
 
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .kernel import frame as kernel_frame
-        from .kernel.api import prepare_frame
-        from .pipeline.kernel_path import build_conversation_doc
-        from .vocab import MENTION_RE, TRANSCRIPT_CONTEXT, ENT_NS, TR
-        frame_doc = {
-            "@context": dict(TRANSCRIPT_CONTEXT),
-            "@type": "Turn",
-            "@requireAll": True,  # AND: typed Turn AND has usesTool
-            "usesTool": {},
-        }
-        # loop-invariant: expand the constant frame + process its
-        # context ONCE per batch; each frame() call deep-copies the
-        # tiny expanded frame instead of re-expanding it
-        prepared = prepare_frame(frame_doc)
-        mention_iris = pdf["text"].str.findall(MENTION_RE).apply(
-            lambda ms: [ENT_NS + "Entity" +
-                        "".join(c for c in m if c.isdigit())
-                        for m in ms])
-        pdf = pdf.assign(
-            mention_iris=mention_iris,
-            ts_lex=pdf["ts"].dt.strftime("%Y-%m-%dT%H:%M:%SZ"),
-            tool=pdf["tool"].astype(object).where(
-                pdf["tool"].notna(), None))
-        out = []
-        for conv_id, grp in pdf.groupby("conv_id", sort=False):
-            doc = build_conversation_doc(
-                conv_id, grp.sort_values("turn_idx")
-                .to_dict("records"))
-            framed = kernel_frame(doc, frame_doc,
-                                  {"preparedFrame": prepared,
-                                   "skipCopy": True})
-            if not isinstance(framed, dict):
-                framed = {}
-            nodes = framed.get("@graph", [framed])
-            matched = [n for n in nodes
-                       if isinstance(n, dict) and "usesTool" in n]
-            tools = []
-            for n in matched:
-                v = n["usesTool"]
-                if isinstance(v, list):
-                    v = v[0] if v else None
-                if isinstance(v, dict):
-                    v = v.get("@id")
-                if isinstance(v, str):
-                    tools.append(v)
-            tools.sort()
-            out.append((
-                "http://example.org/conv/" + conv_id, len(matched),
-                tools[0] if tools else None))
-        return pd.DataFrame(out, columns=schema.fieldNames())
+    def frame_conversation(cols, start, stop):
+        doc = {"@context": TRANSCRIPT_CONTEXT,
+               **conversation_doc(cols, start, stop)}
+        conv = doc["@id"]  # skipCopy: framing may rewrite doc
+        framed = kernel_frame(doc, frame_doc,
+                              {"preparedFrame": prepared, "skipCopy": True})
+        if not isinstance(framed, dict):
+            framed = {}
+        nodes = framed.get("@graph", [framed])
+        matched = [n for n in nodes
+                   if isinstance(n, dict) and "usesTool" in n]
+        tools = []
+        for n in matched:
+            v = n["usesTool"]
+            if isinstance(v, list):
+                v = v[0] if v else None
+            if isinstance(v, dict):
+                v = v.get("@id")
+            if isinstance(v, str):
+                tools.append(v)
+        return [(conv, len(matched), min(tools, default=None))]
 
     n_part = spark.sparkContext.defaultParallelism
-    return (t.repartition(n_part, "conv_id")
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .mapInPandas(batched_by_key("conv_id", emit), schema=schema)
+    turns = (transcripts_df(spark, sf_dir=sf_dir)
+             .repartition(n_part, "conv_id")
+             .sortWithinPartitions("conv_id", "turn_idx"))
+    return (kernel_map(turn_rows(turns), "conv_id", frame_conversation,
+                       schema)
             .orderBy("conv_iri"))
 
 
@@ -722,43 +707,21 @@ def q_kg_fromrdf_roundtrip(spark, sf_dir):
     per conversation, folded back into JSON-LD node maps by the kernel
     (ref lib/fromRdf.js:45-271) and re-emitted (ref lib/toRdf.js) —
     the output must equal the input triple set exactly, which the
-    oracle (the original triple derivation) verifies. Tail-carry via
-    batched_by_key: a conversation split across Arrow batches would
-    otherwise round-trip twice (duplicate triples) and break future
-    list-valued data whose rdf:first/rest chains must not split."""
-    import pandas as pd
+    oracle (the original triple derivation) verifies. kernel_map hands
+    each conversation over whole: a conversation split across Arrow
+    batches would otherwise round-trip twice (duplicate triples) and
+    break future list-valued data whose rdf:first/rest chains must not
+    split."""
+    from .kernel import from_rdf, to_rdf
+    from .pipeline.kernel_path import TRIPLE_SCHEMA, kernel_map
 
-    from .pipeline.kernel_path import TRIPLE_SCHEMA, batched_by_key
+    def round_trip(cols, start, stop):
+        doc = from_rdf(_group_quads(cols, start, stop),
+                       {"useNativeTypes": False})
+        return to_rdf(doc, {"skipCopy": True})
 
-    t = _triples(spark, sf_dir)
-    conv_of = F.when(
-        F.col("subj").rlike("^http://example.org/conv/[^/]+$"),
-        F.col("subj")).otherwise(
-        F.regexp_extract("subj", r"^(http://example.org/conv/[^/]+)/turn/",
-                         1))
-    rows = t.withColumn("conv_iri", conv_of).filter(F.col("conv_iri") != "")
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .kernel import from_rdf, to_rdf
-        out = []
-        for _conv, grp in pdf.groupby("conv_iri", sort=False):
-            quads = list(zip(grp["subj"], grp["pred"],
-                             grp["obj_value"], grp["obj_termtype"],
-                             grp["obj_datatype"], grp["obj_language"],
-                             grp["graph"]))
-            quads = [(s_, p_, v_, tt,
-                      None if pd.isna(dt) else dt,
-                      None if pd.isna(lg) else lg, g_)
-                     for s_, p_, v_, tt, dt, lg, g_ in quads]
-            doc = from_rdf(quads, {"useNativeTypes": False})
-            out.extend(to_rdf(doc, {"skipCopy": True}))
-        return pd.DataFrame(out, columns=TRIPLE_SCHEMA.fieldNames())
-
-    n_part = spark.sparkContext.defaultParallelism
-    return (rows.repartition(n_part, "conv_iri")
-            .sortWithinPartitions("conv_iri")
-            .mapInPandas(batched_by_key("conv_iri", emit),
-                         schema=TRIPLE_SCHEMA))
+    return kernel_map(_conversation_triples(spark, sf_dir), "conv_iri",
+                      round_trip, TRIPLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -767,7 +730,7 @@ def q_kg_nquads_source_roundtrip(spark, sf_dir):
     the scale path for the reference's N-Quads registry, ref
     lib/jsonld.js:988-1015): the triple table is written as splittable
     .nq part files by the column-expression serializer and re-parsed by
-    the per-line kernel grammar inside mapInPandas. The output must
+    the per-line kernel grammar inside kernel_map. The output must
     equal the original triple set exactly — escapes, language tags and
     datatype elision included — which the plain triple-derivation
     oracle verifies."""

@@ -1,8 +1,8 @@
 """Generic JSON-LD column processing: any DataFrame column holding
-JSON-LD document text → triples, via the kernel inside an Arrow-batched
-pandas UDF. The schemaless counterpart of the fixed-shape transcript
-pipeline — this is what "run jsonld.toRDF over a 100 TB table of JSON
-documents" compiles to.
+JSON-LD document text → triples, via the kernel inside the Arrow loop
+`pipeline.kernel_path.kernel_map`, one document per row. The schemaless
+counterpart of the fixed-shape transcript pipeline — this is what "run
+jsonld.toRDF over a 100 TB table of JSON documents" compiles to.
 
 Demonstrated on events.props (tiny JSON objects): each event's props
 document is expanded under a broadcast-style shared context with the
@@ -10,24 +10,12 @@ event IRI as @id, and the resulting quads are exploded to triple rows.
 """
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+
+from ..pipeline.kernel_path import TRIPLE_SCHEMA, kernel_map
 
 EX = "http://example.org/props#"
 EVT_NS = "http://example.org/event/"
-
-TRIPLE_SCHEMA = StructType([
-    StructField("subj", StringType()),
-    StructField("pred", StringType()),
-    StructField("obj_value", StringType()),
-    StructField("obj_termtype", StringType()),
-    StructField("obj_datatype", StringType()),
-    StructField("obj_language", StringType()),
-    StructField("graph", StringType()),
-])
 
 
 def jsonld_column_to_triples(df, id_col: str, json_col: str,
@@ -35,10 +23,11 @@ def jsonld_column_to_triples(df, id_col: str, json_col: str,
                              expansion_map=None,
                              scope_bnodes: bool = False):
     """(id, json_doc) columns → triple rows. The context is processed
-    ONCE per Python worker (resolve-once pattern) and every document
-    expands under it. `expansion_map` threads the kernel's per-event
-    callback (ref lib/jsonld.js:109-117) into the schemaless path; it
-    disables the IRI memo, so reserve it for event-level hooks.
+    ONCE, here, and rides the function to the executors
+    (resolve-once pattern); every document expands under it.
+    `expansion_map` threads the kernel's per-event callback (ref
+    lib/jsonld.js:109-117) into the schemaless path; it disables the
+    IRI memo, so reserve it for event-level hooks.
 
     `scope_bnodes=True` rewrites each document's issued labels
     `_:b{j}` → `_:b{id}-b{j}` — the reference's own multi-document
@@ -47,45 +36,40 @@ def jsonld_column_to_triples(df, id_col: str, json_col: str,
     can contain @id-less nodes and outputs land in one table:
     per-document issuers all start at _:b0, so unscoped labels from
     different documents would collide."""
-    ctx_items = tuple(sorted(context.items()))  # picklable closure
+    import json
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
+    from ..kernel import to_rdf
+    from ..kernel.context import initial_context, process_context
 
-        from ..kernel import to_rdf
-        from ..kernel.context import initial_context, process_context
-        opts0 = {"processingMode": "json-ld-1.1", "base": None}
-        active = process_context(initial_context(opts0), dict(ctx_items),
-                                 opts0)
-        options = {"activeCtx": active, "skipCopy": True}
-        if expansion_map is not None:
-            options["expansionMap"] = expansion_map
+    opts0 = {"processingMode": "json-ld-1.1", "base": None}
+    options = {"activeCtx": process_context(initial_context(opts0),
+                                            dict(context), opts0),
+               "skipCopy": True}
+    if expansion_map is not None:
+        options["expansionMap"] = expansion_map
 
-        def scope(term, id_val):
-            if isinstance(term, str) and term.startswith("_:"):
-                return f"_:b{id_val}-{term[2:]}"
-            return term
+    def scope(term, id_val):
+        if isinstance(term, str) and term.startswith("_:"):
+            return f"_:b{id_val}-{term[2:]}"
+        return term
 
-        for pdf in batches:
-            out = []
-            for id_val, doc_text in zip(pdf["_id"], pdf["_doc"]):
-                doc = _json.loads(doc_text)
-                if not scope_bnodes and isinstance(doc, dict) and \
-                        "@id" not in doc:
-                    doc["@id"] = f"{id_ns}{id_val}"
-                quads = to_rdf(doc, options)
-                if scope_bnodes:
-                    quads = [
-                        (scope(s, id_val), p,
-                         scope(ov, id_val) if tt == "BlankNode" else ov,
-                         tt, dt, lg, scope(g, id_val))
-                        for (s, p, ov, tt, dt, lg, g) in quads]
-                out.extend(quads)
-            yield pd.DataFrame(out, columns=TRIPLE_SCHEMA.fieldNames())
+    def doc_triples(cols, row, _stop):
+        id_val = cols[0][row]
+        doc = json.loads(cols[1][row])
+        if not scope_bnodes and isinstance(doc, dict) and "@id" not in doc:
+            doc["@id"] = f"{id_ns}{id_val}"
+        quads = to_rdf(doc, options)
+        if scope_bnodes:
+            quads = [
+                (scope(s, id_val), p,
+                 scope(ov, id_val) if tt == "BlankNode" else ov,
+                 tt, dt, lg, scope(g, id_val))
+                for (s, p, ov, tt, dt, lg, g) in quads]
+        return quads
 
     src = df.select(F.col(id_col).cast("string").alias("_id"),
                     F.col(json_col).alias("_doc"))
-    return src.mapInPandas(run, schema=TRIPLE_SCHEMA)
+    return kernel_map(src, None, doc_triples, TRIPLE_SCHEMA)
 
 
 def canonical_bnode_relabel(triples, order_exprs):
@@ -102,18 +86,7 @@ def canonical_bnode_relabel(triples, order_exprs):
     unpartitioned window — rank via per-partition counts and driver
     prefix sums, which is what zipWithIndex does), then two/three
     broadcast-or-shuffle joins to rewrite subj/obj/graph."""
-    rk = F.struct(*[e.alias(f"k{i}") for i, e in enumerate(order_exprs)])
-    t = triples.withColumn("_rk", rk)
-    # ONE pass over the input for all three label positions (a
-    # union-of-filters would re-evaluate the source per branch —
-    # expensive when it is a Python-UDF stage; pass a cached or
-    # committed table for best results)
-    lab_rows = t.select(F.explode(F.array_compact(F.array(
-        F.when(F.col("subj").startswith("_:"), F.col("subj")),
-        F.when(F.col("obj_termtype") == "BlankNode",
-               F.col("obj_value")),
-        F.when(F.col("graph").startswith("_:"), F.col("graph"))
-    ))).alias("lab"), "_rk")
+    lab_rows = _bnode_label_rows(triples, order_exprs)
     first = lab_rows.groupBy("lab").agg(F.min("_rk").alias("_frk"))
     spark = triples.sparkSession
     mapping = spark.createDataFrame(
@@ -148,6 +121,25 @@ def canonical_bnode_relabel(triples, order_exprs):
                sub(F.col("graph"), F.col("graph").startswith("_:"),
                    F.col("_ng")).alias("graph")))
     return out
+
+
+def _bnode_label_rows(triples, order_exprs):
+    """One `(lab, _rk)` row per blank-node label in subj, obj_value or
+    graph, with `_rk` the row's order key. ONE pass over the input for
+    all three label positions (a union-of-filters would re-evaluate
+    the source per branch — expensive when it is a Python-UDF stage;
+    pass a cached or committed table for best results). The three
+    slots are exploded and the NULL ones filtered above the Generate:
+    no higher-order function under it, so it stays in whole-stage
+    codegen."""
+    rk = F.struct(*[e.alias(f"k{i}") for i, e in enumerate(order_exprs)])
+    slots = F.array(
+        F.when(F.col("subj").startswith("_:"), F.col("subj")),
+        F.when(F.col("obj_termtype") == "BlankNode", F.col("obj_value")),
+        F.when(F.col("graph").startswith("_:"), F.col("graph")))
+    return (triples.withColumn("_rk", rk)
+            .select(F.explode_outer(slots).alias("lab"), "_rk")
+            .filter(F.col("lab").isNotNull()))
 
 
 def q_jsonld_props_triples(spark, sf_dir):

@@ -1,36 +1,39 @@
 """General-path transcript→triples: per-conversation JSON-LD documents
-through the pure-Python kernel inside Arrow-batched mapInArrow.
+through the pure-Python kernel inside Arrow-batched mapInArrow, and
+`kernel_map`, the one Arrow loop through which every kernel-backed
+query (compaction, framing, the fromRDF round trip, the schemaless
+JSON-LD column, the N-Quads source) crosses into Python.
 
 This is the path that handles ARBITRARY JSON-LD (any context, nested
 nodes, lists, named graphs) — the fixed-shape hot path in
 `vectorized.py` is its specialization. It doubles as the differential
 oracle: tests assert both paths emit identical triple sets.
 
-Why mapInArrow and not applyInPandas: grouping is still by conv_id
-(we repartition + sortWithinPartitions so each conversation's turns are
+Why mapInArrow and not applyInPandas: grouping is still by key (an
+upstream repartition + sortWithinPartitions makes each group's rows
 contiguous in partition order), but one Python call processes a whole
 Arrow batch (~10k rows ≈ hundreds of conversations) instead of paying
 per-group invocation overhead for median-10-turn conversations. A
-conversation larger than one Arrow batch is handled by carrying the
-partial tail between batches — partition-local, deterministic.
+group larger than one Arrow batch is handled by carrying the partial
+tail between batches — partition-local, deterministic.
 
 Per-row prep (the lexical timestamp, mention detection) runs in the
 JVM, in a Project under the Python node; the batch reaches Python as
 Arrow columns turned into plain lists, with no pandas frame at either
-end. Only the JSON-LD tree recursion itself is per-conversation Python,
-which is exactly the semantics the reference defines recursively (ref
+end. Only the JSON-LD tree recursion itself is per-group Python, which
+is exactly the semantics the reference defines recursively (ref
 lib/expand.js:68, lib/nodeMap.js:47). Output leaves in record batches
-of about CHUNK_QUADS quads, so a worker's memory does not grow with the
+of about CHUNK_QUADS rows, so a worker's memory does not grow with the
 input batch size.
 """
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..kernel import to_rdf
@@ -40,7 +43,7 @@ from ..vocab import (
 
 _ENT_PREFIX = ENT_NS + "Entity"
 
-# quads pending in a Python worker before they are yielded as one
+# rows pending in a Python worker before they are yielded as one
 # output record batch
 CHUNK_QUADS = 8192
 
@@ -53,8 +56,6 @@ TRIPLE_SCHEMA = StructType([
     StructField("obj_language", StringType()),
     StructField("graph", StringType()),
 ])
-_QUAD_TYPE = pa.struct([(name, pa.string())
-                        for name in TRIPLE_SCHEMA.fieldNames()])
 
 
 def build_conversation_doc(conv_id: str, turns: list[dict]) -> dict:
@@ -118,51 +119,111 @@ def _last_group_start(keys) -> int:
     return i
 
 
-def batched_by_key(key: str, emit):
-    """Wrap a per-batch `emit(pdf) -> pdf` into a mapInPandas generator
-    that carries the partial last-`key` group across Arrow batch
-    boundaries (partition-local, deterministic).
-
-    Arrow slices a partition into fixed-size record batches with no
-    regard for group boundaries; a group whose rows straddle two
-    batches would otherwise be processed twice and emitted as
-    duplicate/partial results. Precondition (guaranteed by the
-    upstream repartition+sortWithinPartitions): rows with equal `key`
-    are contiguous within the partition.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tail: pd.DataFrame | None = None
-        for pdf in batches:
-            if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-            cut = _last_group_start(pdf[key].to_numpy())
-            if cut:
-                yield emit(pdf.iloc[:cut])
-            tail = pdf.iloc[cut:] if len(pdf) else None
-        if tail is not None:
-            yield emit(tail)
-    return run
-
-
-def _whole_conversations(batches: Iterator[pa.RecordBatch]):
+def _whole_groups(batches: Iterator[pa.RecordBatch], key_at):
     """Yield `(columns, end)` per Arrow batch, the columns as Python
-    lists: rows [0, end) are whole conversations. The partial last
-    conversation is carried into the next batch, and yielded whole
-    after the partition's last batch (partition-local, deterministic;
-    conversations are contiguous, as in batched_by_key)."""
+    lists: rows [0, end) are whole groups of equal `columns[key_at]`.
+    The partial last group is carried into the next batch, and yielded
+    whole after the partition's last batch (partition-local,
+    deterministic). With key_at None every row is a whole group."""
     carry = None
     for batch in batches:
         # via numpy: Array.to_pylist boxes every value in a scalar
         # object first, ~10x slower on these string and int columns
         cols = [c.to_numpy(zero_copy_only=False).tolist()
                 for c in batch.columns]
-        if carry is not None:
+        if carry:
             cols = [old + new for old, new in zip(carry, cols)]
-        cut = _last_group_start(cols[0])
+        n = len(cols[0])
+        cut = n if key_at is None else _last_group_start(cols[key_at])
         yield cols, cut
-        carry = [c[cut:] for c in cols]
-    if carry is not None and carry[0]:
+        carry = [c[cut:] for c in cols] if cut < n else None
+    if carry:
         yield carry, len(carry[0])
+
+
+def _group_bounds(keys, end: int):
+    """`(start, stop)` of each run of equal keys in rows [0, end); with
+    keys None, of each row."""
+    if keys is None:
+        yield from zip(range(end), range(1, end + 1))
+        return
+    start = 0
+    while start < end:
+        key = keys[start]
+        stop = start + 1
+        while stop < end and keys[stop] == key:
+            stop += 1
+        yield start, stop
+        start = stop
+
+
+def _map_groups(batches: Iterator[pa.RecordBatch], key_at, groups,
+                out_type: pa.StructType) -> Iterator[pa.RecordBatch]:
+    """The Arrow loop behind every kernel-backed query. `groups(cols,
+    end)` yields one list of output tuples per whole group in rows
+    [0, end). Output is bounded: after a group, the pending rows are
+    yielded as one record batch once there are at least CHUNK_QUADS,
+    so a batch holds at most CHUNK_QUADS - 1 plus one group's rows,
+    whatever the input batch size."""
+    pending: list[tuple] = []
+    for cols, end in _whole_groups(batches, key_at):
+        for rows in groups(cols, end):
+            pending.extend(rows)
+            if len(pending) >= CHUNK_QUADS:
+                yield _record_batch(pending, out_type)
+                pending = []
+    if pending:
+        yield _record_batch(pending, out_type)
+
+
+def _record_batch(rows: list[tuple], out_type) -> pa.RecordBatch:
+    return pa.RecordBatch.from_struct_array(pa.array(rows, type=out_type))
+
+
+def _struct_type(schema: StructType) -> pa.StructType:
+    return pa.struct(list(to_arrow_schema(schema)))
+
+
+_QUAD_TYPE = _struct_type(TRIPLE_SCHEMA)
+
+
+def kernel_map(df: DataFrame, key, per_group, schema: StructType
+               ) -> DataFrame:
+    """`df` → `schema` rows through `per_group(cols, start, stop)`, which
+    returns the output tuples (in `schema` order) of rows [start, stop)
+    of the column lists `cols` (in `df`'s column order). Each group of
+    equal `key` reaches it whole: Arrow slices a partition into
+    record batches with no regard for groups, so the partial last
+    group of a batch is carried into the next one. Precondition: equal
+    keys are contiguous within a partition (an upstream
+    repartition + sortWithinPartitions, or a source laid out that
+    way). With key None every row is its own group (stateless maps).
+
+    Arrow in and Arrow out, with no pandas frame at either end; output
+    leaves in record batches of about CHUNK_QUADS rows."""
+    key_at = None if key is None else df.columns.index(key)
+    return df.mapInArrow(_group_map(key_at, per_group, _struct_type(schema)),
+                         schema=schema)
+
+
+def _group_map(key_at, per_group, out_type):
+    """kernel_map's mapInArrow function."""
+    def groups(cols, end):
+        keys = None if key_at is None else cols[key_at]
+        return (per_group(cols, start, stop)
+                for start, stop in _group_bounds(keys, end))
+    return lambda batches: _map_groups(batches, key_at, groups, out_type)
+
+
+def conversation_doc(cols, start: int, stop: int) -> dict:
+    """build_conversation_doc's document for rows [start, stop) of
+    `turn_rows` columns (one conversation), without the @context."""
+    conv_ids, turn_idx, role, text, tool, ts_lex, mention_tails = cols
+    cid = conv_ids[start]
+    return {"@id": conv_iri(cid), "@type": "Conversation", "hasTurn": [
+        _turn_node(cid, turn_idx[k], role[k], text[k], tool[k], ts_lex[k],
+                   [_ENT_PREFIX + d for d in (mention_tails[k] or "").split()])
+        for k in range(start, stop)]}
 
 
 def _conversation_quads(cols, end: int, options: dict,
@@ -170,20 +231,9 @@ def _conversation_quads(cols, end: int, options: dict,
     """Kernel quads of each whole conversation in rows [0, end), one
     list per conversation. Rows are sorted by (conv_id, turn_idx), so
     a conversation is a contiguous slice of the column lists."""
-    conv_ids, turn_idx, role, text, tool, ts_lex, mention_tails = cols
-    start = 0
-    while start < end:
-        cid = conv_ids[start]
-        stop = start + 1
-        while stop < end and conv_ids[stop] == cid:
-            stop += 1
-        # build_conversation_doc's document, built straight from the
-        # columns; no @context, which is pre-processed (activeCtx)
-        doc = {"@id": conv_iri(cid), "@type": "Conversation", "hasTurn": [
-            _turn_node(cid, turn_idx[k], role[k], text[k], tool[k],
-                       ts_lex[k], [_ENT_PREFIX + d for d in
-                                   (mention_tails[k] or "").split()])
-            for k in range(start, stop)]}
+    for start, stop in _group_bounds(cols[0], end):
+        # the @context is pre-processed (activeCtx)
+        doc = conversation_doc(cols, start, stop)
         if doc_transform is not None:
             doc = doc_transform(doc)
         # set-semantics dedup is per-node in the node map; emit raw
@@ -191,11 +241,6 @@ def _conversation_quads(cols, end: int, options: dict,
         if quad_filter is not None:
             quads = [q for q in quads if quad_filter(q)]
         yield quads
-        start = stop
-
-
-def _quad_batch(quads: list[tuple]) -> pa.RecordBatch:
-    return pa.RecordBatch.from_struct_array(pa.array(quads, type=_QUAD_TYPE))
 
 
 def _kernel_batches(doc_transform=None, quad_filter=None,
@@ -203,12 +248,9 @@ def _kernel_batches(doc_transform=None, quad_filter=None,
     """Build the mapInArrow function, capturing optional hooks (the
     engine's counterpart of the reference's expansionMap/compactionMap
     callback surface, ref lib/jsonld.js:109-117: arbitrary Python
-    callables ride the UDF closure to the executors).
-
-    Output is bounded: after a conversation, the pending quads are
-    yielded as one record batch once there are at least CHUNK_QUADS,
-    so a batch holds at most CHUNK_QUADS - 1 plus one conversation's
-    quads, whatever the input batch size."""
+    callables ride the UDF closure to the executors). It is the
+    kernel_map loop, keyed by conv_id, over one worker-shared
+    processed context."""
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         options = {"activeCtx": _shared_active_ctx(), "skipCopy": True,
                    "processingMode": "json-ld-1.1"}
@@ -220,17 +262,26 @@ def _kernel_batches(doc_transform=None, quad_filter=None,
             # doc_transform/quad_filter for hot-path rewrites and
             # reserve this for event-level hooks
             options["expansionMap"] = expansion_map
-        pending: list[tuple] = []
-        for cols, end in _whole_conversations(batches):
-            for quads in _conversation_quads(cols, end, options,
-                                             doc_transform, quad_filter):
-                pending.extend(quads)
-                if len(pending) >= CHUNK_QUADS:
-                    yield _quad_batch(pending)
-                    pending = []
-        if pending:
-            yield _quad_batch(pending)
+        return _map_groups(
+            batches, 0,
+            lambda cols, end: _conversation_quads(
+                cols, end, options, doc_transform, quad_filter),
+            _QUAD_TYPE)
     return run
+
+
+def turn_rows(transcripts: DataFrame) -> DataFrame:
+    """The per-row prep, run in the JVM in a Project directly under the
+    Python node: the vectorized path's lexical timestamp, and the
+    mention digit tails (the canonical entity is "Entity" + tail; a
+    NULL text has no mentions), space-joined so that every column
+    reaching Python is flat. Column order is what conversation_doc
+    unpacks."""
+    return transcripts.select(
+        "conv_id", "turn_idx", "role", "text", "tool",
+        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts_lex"),
+        F.array_join(F.regexp_extract_all("text", F.lit(MENTION_DIGITS_RE),
+                                          1), " ").alias("mention_tails"))
 
 
 def kernel_transcript_triples(transcripts: DataFrame,
@@ -268,22 +319,12 @@ def kernel_transcript_triples(transcripts: DataFrame,
     if assume_grouped:
         part = transcripts
     else:
-        n = num_partitions or             transcripts.sparkSession.sparkContext.defaultParallelism
+        n = num_partitions or \
+            transcripts.sparkSession.sparkContext.defaultParallelism
         part = (transcripts
                 .repartition(n, "conv_id")
                 .sortWithinPartitions("conv_id", "turn_idx"))
-    # per-row prep runs in the JVM, in a Project directly under the
-    # Python node: the vectorized path's lexical timestamp, and the
-    # mention digit tails (the canonical entity is "Entity" + tail; a
-    # NULL text has no mentions), space-joined so that every column
-    # reaching Python is flat. Column order is what
-    # _conversation_quads unpacks.
-    rows = part.select(
-        "conv_id", "turn_idx", "role", "text", "tool",
-        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts_lex"),
-        F.array_join(F.regexp_extract_all("text", F.lit(MENTION_DIGITS_RE),
-                                          1), " ").alias("mention_tails"))
-    triples = rows.mapInArrow(
+    triples = turn_rows(part).mapInArrow(
         _kernel_batches(doc_transform, quad_filter, expansion_map),
         schema=TRIPLE_SCHEMA)
     if dedup:

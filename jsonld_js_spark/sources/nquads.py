@@ -7,9 +7,10 @@ kernel/rdf.py parse_nquads / serialize_nquads. This module is the
 100 TB path for the same capability: .nq files are LINE-SPLITTABLE
 (one self-contained statement per line), so Spark's text source gives
 embarrassingly-parallel partitioned reads and the per-line kernel
-parser runs inside Arrow-batched mapInPandas with zero shuffles; the
-sink is a pure column-expression serializer (JVM codegen, no Python)
-writing the exact dialect quad_to_nquad emits.
+parser runs inside the Arrow loop `pipeline.kernel_path.kernel_map`,
+one line per row, with zero shuffles; the sink is a pure
+column-expression serializer (JVM codegen, no Python) writing the
+exact dialect quad_to_nquad emits.
 
 Blank-node labels are DOCUMENT-scoped per the N-Quads spec: one
 logical dataset split across many part files keeps one label scope
@@ -22,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..pipeline.kernel_path import TRIPLE_SCHEMA
+from ..pipeline.kernel_path import TRIPLE_SCHEMA, kernel_map
 
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
@@ -81,36 +82,28 @@ def write_nquads(triples: DataFrame, path: str, mode: str = "overwrite",
 def parse_nquads_lines(lines: DataFrame,
                        on_error: str = "raise") -> DataFrame:
     """`value` text-line rows → quad rows via the kernel's per-line
-    grammar (kernel/rdf.py parse_nquad_line) inside Arrow-batched
-    mapInPandas. STATELESS, so the same plan serves batch reads and
+    grammar (kernel/rdf.py parse_nquad_line) inside `kernel_map`, one
+    line per row. STATELESS, so the same plan serves batch reads and
     Structured Streaming ingestion (streaming/ingest.py
     stream_nquads_triples). on_error='skip' drops unparsable lines
     instead of failing the job (quarantine-and-continue ingestion);
     default is fail-fast."""
-    import pandas as pd
-
     from ..kernel.rdf import parse_nquad_line
 
     if on_error not in ("raise", "skip"):
         raise ValueError(f"on_error must be raise|skip, got {on_error!r}")
     skip_bad = on_error == "skip"
-    cols = TRIPLE_SCHEMA.fieldNames()
 
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for line in pdf["value"]:
-                try:
-                    quad = parse_nquad_line(line)
-                except Exception:
-                    if skip_bad:
-                        continue
-                    raise
-                if quad is not None:
-                    rows.append(quad)
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(cols, row, _stop):
+        try:
+            quad = parse_nquad_line(cols[0][row])
+        except Exception:
+            if skip_bad:
+                return ()
+            raise
+        return () if quad is None else (quad,)
 
-    return lines.mapInPandas(parse, schema=TRIPLE_SCHEMA)
+    return kernel_map(lines.select("value"), None, parse, TRIPLE_SCHEMA)
 
 
 def read_nquads(spark, path, dedup: bool = False,

@@ -277,8 +277,8 @@ def stream_nquads_triples(spark: SparkSession, input_dir: str,
     """Continuous RDF ingestion: .nq files → triple table. The batch
     N-Quads source's per-line parse (sources/nquads.py
     parse_nquads_lines) is stateless, so the identical plan runs under
-    readStream — text file source → mapInPandas → parquet append,
-    exactly-once via the streaming checkpoint. on_error='skip' keeps a
+    readStream — text file source → kernel_map (one mapInArrow) →
+    parquet append, exactly-once via the streaming checkpoint. on_error='skip' keeps a
     malformed file from wedging the stream."""
     from ..sources import parse_nquads_lines
     lines = spark.readStream.text(input_dir)

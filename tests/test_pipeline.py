@@ -496,6 +496,44 @@ def test_flagship_plan_is_one_codegen_stage(spark):
         assert hof not in lowered, plan
 
 
+def test_bnode_label_rows_plan_is_codegen(spark):
+    """canonical_bnode_relabel's one pass over the label slots runs as
+    compiled code: no higher-order function under its Generate."""
+    import re
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from jsonld_js_spark.operators.jsonld_column import (
+        _bnode_label_rows, canonical_bnode_relabel,
+    )
+    from jsonld_js_spark.pipeline import TRIPLE_COLUMNS
+    rows = [("_:b1-b0", "http://p", "_:b1-b1", "BlankNode", None, None, ""),
+            ("_:b2-b0", "http://p", "x", "Literal", "http://dt", None,
+             "_:g")]
+    with tempfile.TemporaryDirectory() as d:
+        spark.createDataFrame(rows, ", ".join(
+            f"{c} string" for c in TRIPLE_COLUMNS)) \
+            .write.parquet(f"{d}/t.parquet")
+        src = spark.read.parquet(f"{d}/t.parquet")
+        order = [F.regexp_extract("subj", r"^_:b(\d+)-", 1).cast("long"),
+                 F.col("pred"), F.col("obj_value")]
+        labels = _bnode_label_rows(src, order)
+        plan = labels._jdf.queryExecution().executedPlan().toString()
+        assert sorted(r["lab"] for r in labels.collect()) == \
+            ["_:b1-b0", "_:b1-b1", "_:b2-b0", "_:g"]
+        assert sorted(map(tuple, canonical_bnode_relabel(src, order)
+                          .collect())) == [
+            ("_:b0", "http://p", "_:b1", "BlankNode", None, None, ""),
+            ("_:b2", "http://p", "x", "Literal", "http://dt", None, "_:b3")]
+    generates = [ln for ln in plan.splitlines() if "Generate" in ln]
+    assert generates
+    assert all(re.search(r"\*\(\d+\) Generate", ln) for ln in generates), plan
+    lowered = plan.lower()
+    for hof in ("filter(", "knownnotcontainsnull"):
+        assert hof not in lowered, plan
+
+
 def test_grouped_kernel_plan_is_shuffle_free(spark):
     """The layout-aware kernel path (assume_grouped=True, the registry's
     kg_transcript_triples_grouped) must plan ZERO Exchange: one scan

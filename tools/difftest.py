@@ -18,7 +18,8 @@ tests/test_kernel_purity.py runs a bounded slice in Tier-1.
 
 Usage: python tools/difftest.py [n_docs=200] [seed0=0]
 Runs every relation over n_docs seeds in each ORACLE_MODES generator
-mode and prints checked, excluded, input-error and xfail counts per
+mode (the quads relation, which reads no mode, in the default mode
+only) and prints checked, excluded, input-error and xfail counts per
 relation. Exit 1 on any divergence, printing the reproducing document.
 """
 from __future__ import annotations
@@ -465,7 +466,8 @@ def random_quads(seed: int):
     """Random RDF dataset exercising fromRDF: typed/lang literals,
     JSON literals, rdf:type edges, well-formed and CORRUPTED
     rdf:first/rest list chains, shared references, named graphs.
-    Returns (reference-JSON quads, kernel tuples, options)."""
+    Returns (kernel tuples, options); no ORACLE_MODES generator mode
+    changes them."""
     rng = random.Random(seed * 7 + 3)
     quads = []
 
@@ -572,26 +574,6 @@ def random_quads(seed: int):
             seen.add(q)
             deduped.append(q)
 
-    def term(tt, v, dt=None, lang=None):
-        t = {"termType": tt, "value": v}
-        if tt == "Literal":
-            t["datatype"] = {"termType": "NamedNode",
-                             "value": dt or XSD + "string"}
-            if lang:
-                t["language"] = lang
-        return t
-
-    ref_quads = []
-    for s, p, v, tt, dt, lang, g in deduped:
-        ref_quads.append({
-            "subject": term("BlankNode" if s.startswith("_:")
-                            else "NamedNode", s),
-            "predicate": term("NamedNode", p),
-            "object": term(tt, v, dt, lang),
-            "graph": ({"termType": "DefaultGraph", "value": ""} if g == ""
-                      else term("BlankNode" if g.startswith("_:")
-                                else "NamedNode", g)),
-        })
     opts = {}
     if rng.random() < 0.5:
         opts["useNativeTypes"] = True
@@ -599,7 +581,7 @@ def random_quads(seed: int):
         opts["useRdfType"] = True
     if rng.random() < 0.3 or os.environ.get("DIFFTEST_RDFDIR"):
         opts["rdfDirection"] = "i18n-datatype"
-    return ref_quads, deduped, opts
+    return deduped, opts
 
 
 def random_frame(seed: int, doc: dict) -> dict:
@@ -901,7 +883,7 @@ def _quads_relation(seed):
     dataset's own fromRDF options, toRDF(fromRDF(D)) ≡ D for
     D = toRDF(fromRDF(quads)) (the first pass canonicalises literals
     and language tags, by spec)."""
-    _, quads, qopts = random_quads(seed)
+    quads, qopts = random_quads(seed)
     ropts = {k: v for k, v in qopts.items() if k == "rdfDirection"}
     first = _run(lambda: to_rdf(from_rdf(quads, dict(qopts)), dict(ropts)))
     if first[0] != "ok":
@@ -918,11 +900,13 @@ _DOC_RELATIONS = {
 }
 
 
-def relations_case(seed: int) -> dict:
-    """Every relation on random_doc(seed), and the quads relation on
-    random_quads(seed): {relation: (status, divergence)}. Status is
-    "checked" (also when both sides raise: the error codes must then
-    match), "input-error" (the step both sides share raised),
+def relations_case(seed: int, quads: bool = True) -> dict:
+    """Every relation on random_doc(seed), and with `quads` the quads
+    relation on random_quads(seed), which reads no generator mode (a
+    sweep runs it in the default mode only): {relation: (status,
+    divergence)}. Status is "checked" (also when both sides raise: the
+    error codes must then match), "input-error" (the step both sides
+    share raised),
     "excluded:<predicate>" (an EXCLUSIONS input predicate holds, so the
     relation is not run) or one of _perf_relation's; divergence is None
     when the sides agree."""
@@ -934,7 +918,8 @@ def relations_case(seed: int) -> dict:
         excluded = _excluded(name, seed, doc, opts)
         out[name] = (f"excluded:{excluded}", None) if excluded else \
             relation(seed, doc, opts, rdf)
-    out["quads"] = _quads_relation(seed)
+    if quads:
+        out["quads"] = _quads_relation(seed)
     return out
 
 
@@ -1127,8 +1112,9 @@ PINNED: dict = {}
 
 
 def run_relation_sweep(n_docs: int, seed0: int) -> int:
-    """Every relation over n_docs seeds in each ORACLE_MODES mode, and
-    the FIXED_QUADS useRdfType round trip. Exit status 1 on a
+    """Every relation over n_docs seeds in each ORACLE_MODES mode (the
+    quads relation in the default mode only), and the FIXED_QUADS
+    useRdfType round trip. Exit status 1 on a
     divergence outside PINNED, or on a pinned seed that holds."""
     global UNI
     why = round_trip(FIXED_QUADS, {"useRdfType": True}, {})
@@ -1141,7 +1127,8 @@ def run_relation_sweep(n_docs: int, seed0: int) -> int:
         counts: dict = {}
         try:
             for seed in range(seed0, seed0 + n_docs):
-                for name, (status, why) in relations_case(seed).items():
+                for name, (status, why) in relations_case(
+                        seed, quads=mode == "default").items():
                     if (mode, name, seed) in PINNED:
                         status = "xfail" if why else "XPASS"
                     elif why is not None:
